@@ -51,6 +51,26 @@ EXPLODE_POS_SCHEMA = StructType(EXPLODE_SCHEMA.fields + [
     StructField("positions", ArrayType(IntegerType())),
 ])
 
+# hand-back schemas of the resident tier, as StructTypes: a DDL string
+# would be parsed by the JVM on every query
+TOPK_SCHEMA = StructType([
+    StructField("doc_id", LongType()),
+    StructField("score", DoubleType()),
+])
+BATCH_TOPK_SCHEMA = StructType([
+    StructField("query_id", StringType()),
+    *TOPK_SCHEMA.fields,
+    StructField("rank", IntegerType()),
+])
+
+
+def empty_frame(spark: SparkSession, schema) -> DataFrame:
+    """An empty DataFrame of `schema` that collects without running a
+    task: it is backed by an empty RDD (no partitions). The obvious
+    `createDataFrame([], schema)` parallelizes the empty list through a
+    Python-worker job on every collect (~300 ms vs ~40 ms measured)."""
+    return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
+
 
 def _pruned_postings(postings: DataFrame, terms: list[str],
                      n_buckets: int) -> DataFrame:
@@ -280,8 +300,8 @@ def bm25_score_rows(posting_rows: DataFrame, iw: dict[str, float],
     recomputed score against a stored float. Per-doc group size is
     ≤ |query terms|, so the fold costs a few adds per doc either way."""
     if not iw:
-        return (posting_rows.sparkSession
-                .createDataFrame([], "doc_id long, score double"))
+        return empty_frame(posting_rows.sparkSession,
+                           "doc_id long, score double")
     m = _term_weight_map(iw)
     tf_eff = F.col("tf").cast("double")
     if important_weight != 1.0:
@@ -313,7 +333,7 @@ def _bm25_scored_tokens(spark: SparkSession, index: dict,
     variant (plain, --fuzzy, --not, --must, wildcard, --boost-important) —
     one place for the idf-cache / bag-multiplicity behavior."""
     if not q_terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return empty_frame(spark, "doc_id long, score double")
     rows = query_term_postings(index["postings"], q_terms,
                                int(index["stats"]["n_buckets"]))
     return bm25_scores(rows, index["terms"],
@@ -383,10 +403,7 @@ def bm25_topk_after(spark: SparkSession, index: dict,
 def bm25_topk(spark: SparkSession, index: dict, query: str, k: int = 10) -> DataFrame:
     """Analyze → prune → decode → score → TakeOrderedAndProject top-k.
     Ties break by doc_id ASC (documented deviation, SURVEY.md §7 risk 2)."""
-    q_terms, phrases = analyze_query(query)
-    for p in phrases:
-        q_terms.extend(p)  # BM25 mode treats phrase words as bag terms
-    return bm25_topk_tokens(spark, index, q_terms, k)
+    return bm25_topk_tokens(spark, index, query_bag(query), k)
 
 
 def bm25_scores_batch(posting_rows: DataFrame, terms_df: DataFrame,
@@ -427,8 +444,8 @@ def bm25_score_rows_batch(posting_rows: DataFrame, qrows: list[tuple],
     weights table, one (query_id, doc_id) aggregation."""
     spark = posting_rows.sparkSession
     if not qrows:
-        return spark.createDataFrame(
-            [], "query_id string, doc_id long, score double")
+        return empty_frame(spark,
+                           "query_id string, doc_id long, score double")
     qdf = spark.createDataFrame(qrows, "query_id string, term string, "
                                        "w double")
     return (posting_rows.join(F.broadcast(qdf), "term")
@@ -440,15 +457,19 @@ def bm25_score_rows_batch(posting_rows: DataFrame, qrows: list[tuple],
             .agg(F.sum("partial").alias("score")))
 
 
+def query_bag(query: str) -> list[str]:
+    """The BM25 term bag of a query string: its analyzed terms plus the
+    words of its quoted phrases (BM25 mode treats phrase words as bag
+    terms)."""
+    q_terms, phrases = analyze_query(query)
+    for p in phrases:
+        q_terms.extend(p)
+    return q_terms
+
+
 def _analyze_bags(queries: dict[str, str]) -> dict[str, list[str]]:
-    bags: dict[str, list[str]] = {}
-    for qid, qtext in queries.items():
-        q_terms, phrases = analyze_query(qtext)
-        for p in phrases:
-            q_terms.extend(p)
-        if q_terms:
-            bags[qid] = q_terms
-    return bags
+    bags = {qid: query_bag(qtext) for qid, qtext in queries.items()}
+    return {qid: bag for qid, bag in bags.items() if bag}
 
 
 def bm25_topk_batch_rowjoin(spark: SparkSession, index: dict,
@@ -462,8 +483,8 @@ def bm25_topk_batch_rowjoin(spark: SparkSession, index: dict,
     than solo. `bm25_topk_batch` (colocated kernel) replaces it."""
     bags = _analyze_bags(queries)
     if not bags:
-        return spark.createDataFrame(
-            [], "query_id string, doc_id long, score double, rank int")
+        return empty_frame(
+            spark, "query_id string, doc_id long, score double, rank int")
     union_terms = sorted({t for bag in bags.values() for t in bag})
     rows = query_term_postings(index["postings"], union_terms,
                                int(index["stats"]["n_buckets"]))
@@ -483,13 +504,99 @@ def bm25_topk_batch_rowjoin(spark: SparkSession, index: dict,
 BATCH_CHUNK_QUERIES = 256
 
 
+# term → [(query index, weight)]: which queries of a batch score a term
+TermSubs = dict[str, list[tuple[int, float]]]
+
+
+def colocated_weights(index: dict, bags: dict[str, list[str]],
+                      qrows: list[tuple] | None = None
+                      ) -> tuple[list[str], TermSubs]:
+    """(sorted query ids, term → [(query index, idf×multiplicity)]) — the
+    per-term subscriptions the colocated kernel scores. Single-index
+    callers leave `qrows` None (weights from THIS index's dictionary);
+    the federated path passes GLOBAL-stats qrows so shard-local statistics
+    never leak into scores. Terms absent from the dictionary drop; both
+    results are empty when no bag has a known term."""
+    union_terms = {t for bag in bags.values() for t in bag}
+    if qrows is None:
+        idf = query_idf(index["terms"], sorted(union_terms), "idf_bm25",
+                        index.get("idf_cache"))
+        qrows = batch_term_weights(bags, idf)
+    else:
+        qrows = [r for r in qrows if r[0] in bags and r[1] in union_terms]
+    qids = sorted({q for q, _, _ in qrows})
+    qidx = {q: i for i, q in enumerate(qids)}
+    term_subs: TermSubs = {}
+    for q, t, w in qrows:
+        term_subs.setdefault(t, []).append((qidx[q], w))
+    return qids, term_subs
+
+
+def score_segments(rows, term_subs: TermSubs, n_q: int, seg_bits: int,
+                   avgdl: float, k: int, important_weight: float = 1.0):
+    """THE colocated BM25 kernel, in plain numpy: for `rows` of
+    (term, segment, bin) sorted by (segment, term), decode each row's
+    segment, turn it into BM25 impacts, accumulate every subscribed
+    query's per-doc partials into a dense (n_q, 2^seg_bits) array, and
+    yield each segment's per-query top-k as (query index, doc_id, score)
+    arrays. Both placements call it — the mapInPandas closure of
+    bm25_scores_batch_colocated over a partition's Arrow batches, and the
+    Searcher's driver-resident postings — so their scores are bitwise
+    identical: each doc's sum is the same TERM-ORDERED fold."""
+    seg_size = 1 << seg_bits
+    cur_seg = -1
+    acc = None
+
+    def flush():
+        base = cur_seg << seg_bits
+        out_q, out_d, out_s = [], [], []
+        for i in range(n_q):
+            row = acc[i]
+            nz = np.flatnonzero(row)
+            if nz.size == 0:
+                continue
+            # (score DESC, doc_id ASC): lexsort's last key is primary
+            order = np.lexsort((nz, -row[nz]))[:k]
+            sel = nz[order]
+            out_q.append(np.full(sel.size, i, dtype=np.int64))
+            out_d.append(base + sel.astype(np.int64))
+            out_s.append(row[sel])
+        if out_q:
+            return (np.concatenate(out_q), np.concatenate(out_d),
+                    np.concatenate(out_s))
+        return None
+
+    for term, seg, buf in rows:
+        subs = term_subs.get(term)
+        if not subs:
+            continue
+        seg = int(seg)
+        if seg != cur_seg:
+            if acc is not None and (res := flush()) is not None:
+                yield res
+            cur_seg = seg
+            acc = np.zeros((n_q, seg_size), dtype=np.float64)
+        doc_ids, tfs, imp, dls = decode_segment_nopos(bytes(buf))
+        off = doc_ids - (seg << seg_bits)
+        tf = tfs.astype(np.float64)
+        if important_weight != 1.0:  # BM25F-lite: tf' enters num AND denom
+            tf = np.where(imp, tf * important_weight, tf)
+        impact = (tf * (K1 + 1)) / (
+            tf + K1 * (1 - B + B * dls.astype(np.float64) / avgdl))
+        for qi, w in subs:
+            acc[qi, off] += w * impact
+    if acc is not None and (res := flush()) is not None:
+        yield res
+
+
 def bm25_scores_batch_colocated(index: dict, bags: dict[str, list[str]],
                                 k: int = 10,
                                 important_weight: float = 1.0,
                                 qrows: list[tuple] | None = None,
                                 avgdl: float | None = None) -> DataFrame:
     """(query_id, doc_id, score) top-k-per-segment candidates for a batch
-    of term bags, scored SEGMENT-AT-A-TIME in one Arrow kernel.
+    of term bags, scored SEGMENT-AT-A-TIME in one Arrow kernel
+    (score_segments).
 
     Plan: prune the union terms' segment rows (bucket PartitionFilters +
     term pushdown) → ONE repartition on `segment` (doc-range co-location;
@@ -515,91 +622,29 @@ def bm25_scores_batch_colocated(index: dict, bags: dict[str, list[str]],
         avgdl = float(stats["avgdl"])
     seg_bits = int(stats["seg_bits"])
     n_buckets = int(stats["n_buckets"])
-    union_terms = sorted({t for bag in bags.values() for t in bag})
-    if qrows is None:
-        # single-index default: weights from THIS index's dictionary.
-        # The federated path passes GLOBAL-stats qrows/avgdl instead —
-        # same kernel, shard-local statistics never leak into scores.
-        idf = query_idf(index["terms"], union_terms, "idf_bm25",
-                        index.get("idf_cache"))
-        qrows = batch_term_weights(bags, idf)
-    else:
-        qrows = [r for r in qrows
-                 if r[0] in bags and r[1] in set(union_terms)]
+    qids, term_subs = colocated_weights(index, bags, qrows)
     spark = index["postings"].sparkSession
-    if not qrows:
-        return spark.createDataFrame(
-            [], "query_id string, doc_id long, score double")
-    qids = sorted({q for q, _, _ in qrows})
-    qidx = {q: i for i, q in enumerate(qids)}
-    term_subs: dict[str, list[tuple[int, float]]] = {}
-    for q, t, w in qrows:
-        term_subs.setdefault(t, []).append((qidx[q], w))
-    n_q = len(qids)
-    seg_size = 1 << seg_bits
-    kk = int(k)
-    w_imp = float(important_weight)
+    schema = "query_id string, doc_id long, score double"
+    if not qids:
+        return empty_frame(spark, schema)
+    qid_arr = np.asarray(qids, dtype=object)
+    n_q, kk, w_imp = len(qids), int(k), float(important_weight)
 
-    pruned = (_pruned_postings(index["postings"], union_terms, n_buckets)
+    pruned = (_pruned_postings(index["postings"], sorted(term_subs),
+                               n_buckets)
               .select("term", "segment", "bin")
               .repartition("segment")
               .sortWithinPartitions("segment", "term"))
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cur_seg = -1
-        acc = None
+        rows = (r for pdf in batches
+                for r in zip(pdf["term"], pdf["segment"], pdf["bin"]))
+        for q, d, s in score_segments(rows, term_subs, n_q, seg_bits,
+                                      avgdl, kk, w_imp):
+            yield pd.DataFrame({"query_id": qid_arr[q], "doc_id": d,
+                                "score": s})
 
-        def flush():
-            if acc is None:
-                return None
-            base = cur_seg << seg_bits
-            out_q, out_d, out_s = [], [], []
-            for i in range(n_q):
-                row = acc[i]
-                nz = np.flatnonzero(row)
-                if nz.size == 0:
-                    continue
-                # (score DESC, doc_id ASC): lexsort's last key is primary
-                order = np.lexsort((nz, -row[nz]))[:kk]
-                sel = nz[order]
-                out_q.append(np.repeat(qids[i], sel.size))
-                out_d.append(base + sel.astype(np.int64))
-                out_s.append(row[sel])
-            if not out_q:
-                return None
-            return pd.DataFrame({
-                "query_id": np.concatenate(out_q),
-                "doc_id": np.concatenate(out_d),
-                "score": np.concatenate(out_s)})
-
-        for pdf in batches:
-            for term, seg, buf in zip(pdf["term"], pdf["segment"],
-                                      pdf["bin"]):
-                subs = term_subs.get(term)
-                if not subs:
-                    continue
-                seg = int(seg)
-                if seg != cur_seg:
-                    res = flush()
-                    if res is not None:
-                        yield res
-                    cur_seg = seg
-                    acc = np.zeros((n_q, seg_size), dtype=np.float64)
-                doc_ids, tfs, imp, dls = decode_segment_nopos(bytes(buf))
-                off = doc_ids - (seg << seg_bits)
-                tf = tfs.astype(np.float64)
-                if w_imp != 1.0:  # BM25F-lite: tf' enters num AND denom
-                    tf = np.where(imp, tf * w_imp, tf)
-                impact = (tf * (K1 + 1)) / (
-                    tf + K1 * (1 - B + B * dls.astype(np.float64) / avgdl))
-                for qi, w in subs:
-                    acc[qi, off] += w * impact
-        res = flush()
-        if res is not None:
-            yield res
-
-    return pruned.mapInPandas(
-        kernel, schema="query_id string, doc_id long, score double")
+    return pruned.mapInPandas(kernel, schema=schema)
 
 
 def bm25_topk_colocated_tokens(spark: SparkSession, index: dict,
@@ -613,7 +658,7 @@ def bm25_topk_colocated_tokens(spark: SparkSession, index: dict,
     bm25_topk_tokens up to summation order (term-ordered numpy fold vs
     hash-agg; pinned at 9 decimals by test)."""
     if not q_terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return empty_frame(spark, "doc_id long, score double")
     cand = bm25_scores_batch_colocated(index, {"q": list(q_terms)}, k,
                                        important_weight=important_weight)
     return (cand.select("doc_id", "score")
@@ -635,8 +680,8 @@ def bm25_topk_batch(spark: SparkSession, index: dict,
     row-join plan is pinned by test."""
     bags = _analyze_bags(queries)
     if not bags:
-        return spark.createDataFrame(
-            [], "query_id string, doc_id long, score double, rank int")
+        return empty_frame(
+            spark, "query_id string, doc_id long, score double, rank int")
     qids = sorted(bags)
     chunks = [dict((q, bags[q]) for q in qids[i:i + BATCH_CHUNK_QUERIES])
               for i in range(0, len(qids), BATCH_CHUNK_QUERIES)]
@@ -649,6 +694,77 @@ def bm25_topk_batch(spark: SparkSession, index: dict,
                                                  F.asc("doc_id"))
     return (cand.withColumn("rank", F.row_number().over(wnd))
             .filter(F.col("rank") <= k))
+
+
+def resident_postings(postings: DataFrame
+                      ) -> dict[str, list[tuple[int, bytes]]]:
+    """term → [(segment, compressed segment bytes)] for a whole postings
+    table, collected onto the driver in ONE job through Arrow (never Row
+    objects). On a cached DataFrame the same job materializes the cache."""
+    tbl = postings.select("term", "segment", "bin").toArrow()
+    out: dict[str, list[tuple[int, bytes]]] = {}
+    for term, seg, buf in zip(tbl.column("term").to_pylist(),
+                              tbl.column("segment").to_pylist(),
+                              tbl.column("bin").to_pylist()):
+        out.setdefault(term, []).append((seg, buf))
+    return out
+
+
+def bm25_topk_resident(resident: dict[str, list[tuple[int, bytes]]],
+                       index: dict, bags: dict[str, list[str]],
+                       k: int = 10,
+                       important_weight: float = 1.0) -> pd.DataFrame:
+    """(query_id, doc_id, score, rank) — the per-bag top-k of the
+    colocated route, scored in-process over driver-resident postings
+    (resident_postings): no Spark job. Same weights (colocated_weights),
+    same kernel (score_segments) fed the same (segment, term)-sorted rows,
+    same (score DESC, doc_id ASC) tie-break — so answers equal the Spark
+    colocated route bit for bit. Bags without a known term are absent;
+    rows come ordered by (query_id, rank)."""
+    seg_bits = int(index["stats"]["seg_bits"])
+    avgdl = float(index["stats"]["avgdl"])
+    names: list[str] = []
+    qs, ds, ss = [], [], []
+    ordered = sorted(bags)
+    # chunked like bm25_topk_batch: bounds the dense accumulator
+    for i in range(0, len(ordered), BATCH_CHUNK_QUERIES):
+        chunk = {q: bags[q] for q in ordered[i:i + BATCH_CHUNK_QUERIES]}
+        qids, term_subs = colocated_weights(index, chunk)
+        rows = sorted(((t, seg, buf) for t in term_subs
+                       for seg, buf in resident.get(t, ())),
+                      key=lambda r: (r[1], r[0]))
+        for q, d, sc in score_segments(rows, term_subs, len(qids), seg_bits,
+                                       avgdl, int(k),
+                                       float(important_weight)):
+            qs.append(q + len(names))
+            ds.append(d)
+            ss.append(sc)
+        names.extend(qids)
+    if not qs:
+        return pd.DataFrame({"query_id": pd.Series([], dtype=object),
+                             "doc_id": np.zeros(0, np.int64),
+                             "score": np.zeros(0, np.float64),
+                             "rank": np.zeros(0, np.int32)})
+    q, d, sc = np.concatenate(qs), np.concatenate(ds), np.concatenate(ss)
+    order = np.lexsort((d, -sc, q))
+    q, d, sc = q[order], d[order], sc[order]
+    rank = np.arange(q.size) - np.searchsorted(q, q) + 1
+    keep = rank <= k
+    return pd.DataFrame({"query_id": np.asarray(names, dtype=object)[q[keep]],
+                         "doc_id": d[keep], "score": sc[keep],
+                         "rank": rank[keep].astype(np.int32)})
+
+
+def local_frame(spark: SparkSession, pdf: pd.DataFrame,
+                schema: StructType) -> DataFrame:
+    """Hand driver-computed rows back as a DataFrame over Arrow: a
+    LocalRelation, so collecting it runs no job (~17 ms measured for ten
+    rows, vs ~300 ms for `createDataFrame(list)`, which ships the rows
+    through a Python-worker job). An EMPTY pandas frame would take that
+    Python-worker path too, so no rows means empty_frame."""
+    if pdf.empty:
+        return empty_frame(spark, schema)
+    return spark.createDataFrame(pdf, schema)
 
 
 # wholeStage-codegen suppression is a SESSION conf, so overlapping
@@ -687,19 +803,30 @@ def _ws_release(spark: SparkSession) -> None:
 # the degenerate tiny-index case where the extra bytes-shuffle stage is
 # the whole cost. Env-overridable like the fuzzy crossover.
 SOLO_COLOCATED_MIN_DOCS = 1000
+SOLO_ROUTES = ("plain", "colocated")
 
 
 def route_solo(stats: dict) -> str:
-    """'plain' or 'colocated' for a solo BM25 query, from the index's
-    STORED doc count (shared by the warm Searcher and the cold CLI
-    default path; SPIDEY_SOLO_ROUTE forces, SPIDEY_COLO_MIN_DOCS moves
-    the floor). Both routes are rank-identical (pinned by test)."""
+    """'plain' or 'colocated' for a solo BM25 query on Spark, from the
+    index's STORED doc count (shared by the warm Searcher's fallback and
+    the cold CLI default path; SPIDEY_SOLO_ROUTE forces, SPIDEY_COLO_MIN_DOCS
+    moves the floor — a malformed value of either raises ValueError).
+    Both routes are rank-identical (pinned by test)."""
     import os
     env = os.environ.get("SPIDEY_SOLO_ROUTE")
-    if env in ("plain", "colocated"):
+    if env:
+        if env not in SOLO_ROUTES:
+            raise ValueError(f"SPIDEY_SOLO_ROUTE must be one of "
+                             f"{SOLO_ROUTES}, got {env!r}")
         return env
-    floor = int(os.environ.get("SPIDEY_COLO_MIN_DOCS",
-                               SOLO_COLOCATED_MIN_DOCS))
+    raw = os.environ.get("SPIDEY_COLO_MIN_DOCS")
+    floor = SOLO_COLOCATED_MIN_DOCS
+    if raw is not None:
+        try:
+            floor = int(raw)
+        except ValueError:
+            raise ValueError(f"SPIDEY_COLO_MIN_DOCS must be an integer doc "
+                             f"count, got {raw!r}") from None
     return "colocated" if int(stats["n_docs"]) >= floor else "plain"
 
 
@@ -717,17 +844,30 @@ class Searcher:
       at sandbox scale the whole table fits — at 10^12 files you would
       cache AFTER a hot-bucket filter instead, which Spark's lazy
       per-partition materialization supports with the same code path);
-    * global stats floats and the term→bucket hash cache are primed once.
+    * global stats floats and the term→bucket hash cache are primed once;
+    * when the postings are cached, the whole dictionary is preloaded and
+      the index holds at most RESIDENT_MAX_POSTINGS postings (Σ df, read
+      from that dictionary — no extra job), the compressed postings also
+      stay RESIDENT on the driver (resident_postings; the collect is the
+      job that materializes the Spark cache, replacing its count()).
 
-    Queries still run as ordinary jobs over the SAME operators
-    (bm25_topk / bm25_topk_pruned / parity_search) — nothing is
-    re-implemented for serving."""
+    With resident postings, bm25 / bm25_batch score in-process
+    (bm25_topk_resident: the colocated kernel, score_segments, run on the
+    driver) and hand the top-k back as a LocalRelation — no Spark job per
+    query, answers equal to the Spark colocated route bit for bit. Over
+    the budget, and for every other query kind (pruned, parity, boolean,
+    filtered, …), queries run as ordinary jobs over the cached tables with
+    the SAME operators the cold paths use."""
 
     # default driver-side dictionary-preload budget: above this many terms
     # the Searcher automatically switches to head-only preload (top df
     # terms) with per-query pushdown fallback for the tail — a 10^9-term
     # web vocabulary must never .collect() onto one driver by default
     AUTO_PRELOAD_MAX_TERMS = 1_000_000
+    # driver-resident postings budget, in postings (Σ df): at the ≈7.5
+    # compressed bytes/posting measured, 8M postings ≈ 60 MB of segment
+    # bytes on the driver. Over it, queries stay on the Spark routes.
+    RESIDENT_MAX_POSTINGS = 8_000_000
 
     def __init__(self, spark: SparkSession, index: dict,
                  cache_postings: bool = True, preload_dict: bool = True,
@@ -738,6 +878,9 @@ class Searcher:
         self.spark = spark
         self.index = dict(index)
         self._cached = []
+        # term → [(segment, bytes)] when the warm kept the postings on the
+        # driver (see the class docstring), else None
+        self._resident: dict[str, list[tuple[int, bytes]]] | None = None
         self._holds_ws = False
         if disable_wholestage_codegen:
             # Every query carries fresh literals (idf map, term list), so
@@ -768,18 +911,6 @@ class Searcher:
               head_df_threshold, max_preload_terms=None):
         self.index["terms"] = index["terms"].cache()
         self._cached.append(self.index["terms"])
-        if cache_postings:
-            p = index["postings"]
-            if coalesce_to:
-                # a query touches k terms' segments — far less than the
-                # build's write parallelism. Fewer, larger cached partitions
-                # cut per-query task-scheduling overhead (measured ~0.2 s of
-                # the warm p95 at sf0.1 came from ~40 near-empty tasks);
-                # size coalesce_to ≈ cores the serving tier wants per query.
-                p = p.coalesce(coalesce_to)
-            self.index["postings"] = p.cache()
-            self._cached.append(self.index["postings"])
-            self.index["postings"].count()
         if preload_dict:
             # one pass over the dictionary loads idf values AND term→bucket
             # (the reference's always-resident MySQL dictionary). The k-term
@@ -825,31 +956,64 @@ class Searcher:
                 _bucket_cache[(r["term"], n_buckets)] = int(r["bucket"])
         else:
             self.index["terms"].count()
+        if cache_postings:
+            p = index["postings"]
+            if coalesce_to:
+                # a query touches k terms' segments — far less than the
+                # build's write parallelism. Fewer, larger cached partitions
+                # cut per-query task-scheduling overhead (measured ~0.2 s of
+                # the warm p95 at sf0.1 came from ~40 near-empty tasks);
+                # size coalesce_to ≈ cores the serving tier wants per query.
+                p = p.coalesce(coalesce_to)
+            self.index["postings"] = p.cache()
+            self._cached.append(self.index["postings"])
+            cache = self.index.get("idf_cache")
+            if (cache is not None and not cache.get("partial")
+                    and sum(cache["df"].values())
+                    <= self.RESIDENT_MAX_POSTINGS):
+                self._resident = resident_postings(self.index["postings"])
+            else:
+                self.index["postings"].count()
 
     def _solo_route(self) -> str:
         return route_solo(self.index["stats"])
 
     def bm25(self, query: str, k: int = 10,
              route: str | None = None) -> DataFrame:
-        """Warm solo BM25 — rank-identical on either route (pinned at 9
-        decimals by test); `route` forces "plain"/"colocated", None
-        auto-selects from the index's stored doc count."""
+        """Warm solo BM25. `route` None scores in-process when the warm
+        kept the postings resident, else on the Spark route route_solo
+        picks from the index's stored doc count; "plain" or "colocated"
+        force that Spark route. All are rank-identical (plain vs
+        colocated pinned at 9 decimals by test; resident equals colocated
+        bit for bit)."""
+        if route is None and self._resident is not None:
+            pdf = bm25_topk_resident(self._resident, self.index,
+                                     {"q": query_bag(query)}, k)
+            return local_frame(self.spark, pdf[["doc_id", "score"]],
+                               TOPK_SCHEMA)
         r = route or self._solo_route()
+        if r not in SOLO_ROUTES:
+            raise ValueError(f"unknown route {r!r}; expected one of "
+                             f"{SOLO_ROUTES}")
         if r == "colocated":
             return self.bm25_colocated(query, k)
         return bm25_topk(self.spark, self.index, query, k)
 
     def bm25_batch(self, queries: dict[str, str], k: int = 10) -> DataFrame:
+        """(query_id, doc_id, score, rank) for a batch of queries —
+        scored in-process with resident postings, else bm25_topk_batch's
+        Spark plan; the two agree bit for bit (pinned by test)."""
+        if self._resident is not None:
+            pdf = bm25_topk_resident(self._resident, self.index,
+                                     _analyze_bags(queries), k)
+            return local_frame(self.spark, pdf, BATCH_TOPK_SCHEMA)
         return bm25_topk_batch(self.spark, self.index, queries, k)
 
     def bm25_colocated(self, query: str, k: int = 10) -> DataFrame:
         """Segment-colocated solo ranker (bm25_topk_colocated_tokens):
         same ranking contract as bm25(); no decoded-row exchange."""
-        q_terms, phrases = analyze_query(query)
-        for p in phrases:
-            q_terms.extend(p)
         return bm25_topk_colocated_tokens(self.spark, self.index,
-                                          q_terms, k)
+                                          query_bag(query), k)
 
     def bm25_pruned(self, query: str, k: int = 10, **kw) -> DataFrame:
         from .wand import bm25_topk_pruned
@@ -934,6 +1098,7 @@ class Searcher:
         # index should share one Searcher.
         for df in self._cached:
             df.unpersist()
+        self._resident = None
         if self._holds_ws:
             self._holds_ws = False
             _ws_release(self.spark)
@@ -958,8 +1123,9 @@ def parity_word_scores(posting_rows: DataFrame, terms_df: DataFrame,
     idf = query_idf(terms_df, query_terms, "idf_ref", idf_cache)
     iw = {t: idf[t] * float(weights[t]) for t in idf}
     if not iw:
-        return (posting_rows.sparkSession.createDataFrame(
-            [], "doc_id long, relevance double, important int, is_phrase int"))
+        return empty_frame(
+            posting_rows.sparkSession,
+            "doc_id long, relevance double, important int, is_phrase int")
     m = _term_weight_map(iw)
     scored = posting_rows.withColumn(
         "partial",
@@ -1155,11 +1321,11 @@ def bm25_proximity_topk(spark: SparkSession, index: dict,
             f"prox_weight must be >= 0, got {prox_weight}")
     empty = "doc_id long, score double, min_dist long"
     if not q_terms:
-        return spark.createDataFrame([], empty)
+        return empty_frame(spark, empty)
     iw = query_term_weights(index["terms"], q_terms,
                             index.get("idf_cache"))
     if not iw:
-        return spark.createDataFrame([], empty)
+        return empty_frame(spark, empty)
     need_pos = prox_weight > 0 and len(set(q_terms)) >= 2
     rows = query_term_postings(index["postings"], q_terms,
                                int(index["stats"]["n_buckets"]),
@@ -1252,8 +1418,8 @@ def parity_phrase_scores(spark: SparkSession, index: dict, phrase: list[str],
     clears PHRASE_TWO_PASS_MIN_SAVED. A phrase word absent from the
     dictionary short-circuits to empty — no doc can match."""
     n_docs = int(index["stats"]["n_docs"])
-    empty = spark.createDataFrame(
-        [], "doc_id long, relevance double, important int, is_phrase int")
+    empty = empty_frame(
+        spark, "doc_id long, relevance double, important int, is_phrase int")
     dfs = query_idf(index["terms"], phrase, "df", index.get("idf_cache"))
     if any(t not in dfs for t in phrase):
         return empty
@@ -1269,8 +1435,9 @@ def parity_phrase_scores(spark: SparkSession, index: dict, phrase: list[str],
     matches = phrase_match_counts(rows, phrase, slop).cache()
     df_phrase = matches.count()
     if df_phrase == 0:
-        return spark.createDataFrame(
-            [], "doc_id long, relevance double, important int, is_phrase int")
+        return empty_frame(
+            spark,
+            "doc_id long, relevance double, important int, is_phrase int")
     idf = float(np.log(1.0 + n_docs / df_phrase))
     return matches.select(
         "doc_id",
@@ -1305,8 +1472,8 @@ def parity_search(spark: SparkSession, index: dict, query: str,
         parts.append(parity_phrase_scores(spark, index, ph, q_terms,
                                            slop=slop))
     if not parts:
-        return spark.createDataFrame(
-            [], "doc_id long, total_relevance double, score double")
+        return empty_frame(
+            spark, "doc_id long, total_relevance double, score double")
     union = parts[0]
     for p in parts[1:]:
         union = union.unionByName(p)
@@ -1410,7 +1577,7 @@ def more_like_this(spark: SparkSession, index: dict, docs: DataFrame,
     from ..functions.analysis import PROFILES
     src_rows = (docs.filter(F.col(id_col) == doc_id)
                 .select(text_col).limit(1).collect())
-    empty = spark.createDataFrame([], "doc_id long, score double")
+    empty = empty_frame(spark, "doc_id long, score double")
     if not src_rows or src_rows[0][0] is None:
         return empty
     profile = str(index["stats"].get("profile", "simple"))
@@ -1668,7 +1835,7 @@ def bm25_synonym_topk(spark: SparkSession, index: dict,
     groups = [list(dict.fromkeys(t for t in g if t)) for g in groups]
     groups = [g for g in groups if g]
     if not groups:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return empty_frame(spark, "doc_id long, score double")
     term_gid: dict[str, int] = {}
     for gid, g in enumerate(groups):
         for t in g:
@@ -1685,7 +1852,7 @@ def bm25_synonym_topk(spark: SparkSession, index: dict,
         if known:
             gw[gid] = min(known)  # max-df member's idf
     if not gw:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return empty_frame(spark, "doc_id long, score double")
     avgdl = float(index["stats"]["avgdl"])
     rows = query_term_postings(
         index["postings"],
@@ -1737,11 +1904,11 @@ def bm25_explain_topk(spark: SparkSession, index: dict,
                     "w double, tf int, important boolean, tf_eff double, "
                     "dl int, partial double")
     if not q_terms:
-        return spark.createDataFrame([], empty_schema)
+        return empty_frame(spark, empty_schema)
     iw = query_term_weights(index["terms"], q_terms,
                             index.get("idf_cache"))
     if not iw:
-        return spark.createDataFrame([], empty_schema)
+        return empty_frame(spark, empty_schema)
     avgdl = float(index["stats"]["avgdl"])
     rows = query_term_postings(index["postings"], q_terms,
                                int(index["stats"]["n_buckets"]))
