@@ -44,6 +44,7 @@ complement of operators/federate.py.
 from __future__ import annotations
 
 import os
+import shutil
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
@@ -98,6 +99,17 @@ def reshard_index(spark: SparkSession, in_dirs: list[str], out_dir: str,
     nb_out = int(n_buckets if n_buckets is not None
                  else max(int(ix["stats"]["n_buckets"]) for ix in idxs))
 
+    # docs tables may differ in auxiliary columns across builders (e.g. a
+    # streaming-published delta carries chunk metadata) — union on the
+    # COMMON columns, in the first input's order
+    common = [c for c in idxs[0]["docs"].columns
+              if all(c in ix["docs"].columns for ix in idxs)]
+    if "doc_id" not in common or "n_tokens" not in common:
+        raise ValueError("input docs tables must share doc_id and "
+                         f"n_tokens columns (common: {common})")
+    docs_all = reduce(DataFrame.unionByName,
+                      [ix["docs"].select(*common) for ix in idxs])
+
     # full postings INCLUDING the sentinel partitions (bucket == input
     # n_buckets): doc lengths and shas must follow their doc ranges
     def _full_postings(d: str) -> DataFrame:
@@ -123,51 +135,44 @@ def reshard_index(spark: SparkSession, in_dirs: list[str], out_dir: str,
     merged = merge_partials(rows, n_buckets=nb_out,
                             salt_factor=salt_factor, doclen_bucket=nb_out)
     tmp = os.path.join(out_dir, "_reshard_tmp")
-    (merged.withColumn("shard", shard_of_seg)
-     .write.mode("overwrite").partitionBy("shard", "bucket").parquet(tmp))
-
-    # docs tables may differ in auxiliary columns across builders (e.g. a
-    # streaming-published delta carries chunk metadata) — union on the
-    # COMMON columns, in the first input's order
-    common = [c for c in idxs[0]["docs"].columns
-              if all(c in ix["docs"].columns for ix in idxs)]
-    if "doc_id" not in common or "n_tokens" not in common:
-        raise ValueError("input docs tables must share doc_id and "
-                         f"n_tokens columns (common: {common})")
-    docs_all = reduce(DataFrame.unionByName,
-                      [ix["docs"].select(*common) for ix in idxs])
-    out_stats: list[dict] = []
-    for k in range(n_shards):
-        sdir = os.path.join(out_dir, f"shard_{k}")
-        src = os.path.join(tmp, f"shard={k}")
-        pdir = os.path.join(sdir, "postings")
-        if not os.path.isdir(src):
+    try:
+        (merged.withColumn("shard", shard_of_seg)
+         .write.mode("overwrite").partitionBy("shard", "bucket")
+         .parquet(tmp))
+        # every shard must hold segments BEFORE the first rename, so a
+        # failure leaves no renamed shard behind
+        empty = [k for k in range(n_shards)
+                 if not os.path.isdir(os.path.join(tmp, f"shard={k}"))]
+        if empty:
             raise ValueError(
-                f"shard {k} received no segments — the corpus spans "
+                f"shards {empty} received no segments — the corpus spans "
                 f"fewer populated segments than {n_shards} shards; "
                 f"lower n_shards")
-        os.makedirs(sdir, exist_ok=True)
-        if os.path.isdir(pdir):
-            import shutil
-            shutil.rmtree(pdir)
-        os.rename(src, pdir)
-        shard_docs = docs_all.filter(
-            _shard_expr(F.shiftright("doc_id", seg_bits), n_shards,
-                        n_segments, assign) == k)
-        shard_docs.write.mode("overwrite").parquet(
-            os.path.join(sdir, "docs"))
-        stats = doc_stats(spark.read.parquet(os.path.join(sdir, "docs")))
-        postings_k = (spark.read.option("basePath", pdir).parquet(pdir)
-                      .filter(F.col("bucket") < nb_out))
-        term_stats(postings_k, stats["n_docs"]).write.mode(
-            "overwrite").parquet(os.path.join(sdir, "terms"))
-        stats_row = dict(stats, avgdl=float(stats["avgdl"]),
-                         profile=profile, seg_bits=seg_bits,
-                         n_buckets=nb_out, k1=K1, b=B)
-        write_stats_json(spark, sdir, stats_row)
-        from .wildcard import refresh_aux_terms
-        refresh_aux_terms(spark, sdir)
-        out_stats.append(stats_row)
-    import shutil
-    shutil.rmtree(tmp, ignore_errors=True)
+        out_stats: list[dict] = []
+        for k in range(n_shards):
+            sdir = os.path.join(out_dir, f"shard_{k}")
+            pdir = os.path.join(sdir, "postings")
+            os.makedirs(sdir, exist_ok=True)
+            if os.path.isdir(pdir):
+                shutil.rmtree(pdir)
+            os.rename(os.path.join(tmp, f"shard={k}"), pdir)
+            shard_docs = docs_all.filter(
+                _shard_expr(F.shiftright("doc_id", seg_bits), n_shards,
+                            n_segments, assign) == k)
+            shard_docs.write.mode("overwrite").parquet(
+                os.path.join(sdir, "docs"))
+            stats = doc_stats(spark.read.parquet(os.path.join(sdir, "docs")))
+            postings_k = (spark.read.option("basePath", pdir).parquet(pdir)
+                          .filter(F.col("bucket") < nb_out))
+            term_stats(postings_k, stats["n_docs"]).write.mode(
+                "overwrite").parquet(os.path.join(sdir, "terms"))
+            stats_row = dict(stats, avgdl=float(stats["avgdl"]),
+                             profile=profile, seg_bits=seg_bits,
+                             n_buckets=nb_out, k1=K1, b=B)
+            write_stats_json(spark, sdir, stats_row)
+            from .wildcard import refresh_aux_terms
+            refresh_aux_terms(spark, sdir)
+            out_stats.append(stats_row)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     return out_stats

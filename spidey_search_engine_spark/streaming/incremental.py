@@ -23,13 +23,18 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.build import (DOCLEN_TERM, SENTINEL_PREFIX,
                                build_partials, doc_lengths,
                                doc_stats, merge_partials, term_stats,
                                write_stats_json)
+from ..plans.lineage import append_lineage_row
+
+
+def _ms(seconds: float) -> float:
+    return round(seconds * 1e3, 1)
 
 
 def append_index_stream(spark: SparkSession, docs_stream: DataFrame,
@@ -44,6 +49,15 @@ def append_index_stream(spark: SparkSession, docs_stream: DataFrame,
     Block-max metadata is avgdl-independent (max_tf/min_dl), so appended
     chunks stay valid as corpus-wide avgdl drifts. Returns the
     StreamingQuery.
+
+    A micro-batch costs O(batch), not O(index): its one min/max/count job
+    gives the doc count that sizes the merge exchange (merge_partials
+    ``n_docs`` — a batch of up to DOCS_PER_MERGE_TASK docs merges in ONE
+    task and writes at most ``n_buckets`` files), and an empty batch
+    writes nothing. Its lineage row (plans/lineage.LINEAGE_SCHEMA) records
+    the step milliseconds: ``probe_ms`` (that job), ``postings_ms``
+    (partials + merge + write), ``docs_ms`` and ``lineage_ms`` (the
+    replay-guard read).
 
     ``publish_every=N`` republishes terms/stats automatically at every Nth
     micro-batch id (G6 parity: the reference recomputes PageRank + stats
@@ -61,12 +75,13 @@ def append_index_stream(spark: SparkSession, docs_stream: DataFrame,
     of an operator chore. See publish_index / compact_stream_chunks."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        if not batch_df.head(1):
-            return
         spark = batch_df.sparkSession
         t0 = time.monotonic()
         lo, hi, n_batch_docs = batch_df.select(
             F.min("doc_id"), F.max("doc_id"), F.count("*")).collect()[0]
+        if not n_batch_docs:
+            return
+        t_probe = time.monotonic()
 
         def _publish_if_due():
             if publish_every and (int(batch_id) + 1) % publish_every == 0:
@@ -105,17 +120,21 @@ def append_index_stream(spark: SparkSession, docs_stream: DataFrame,
                     f"use a fresh output dir.")
             _publish_if_due()
             return
+        t_guard = time.monotonic()
         docs = batch_df.withColumn("content_sha256",
                                    F.sha2(F.col("content"), 256))
         partials = build_partials(docs, profile=profile, seg_bits=seg_bits)
         partials.persist()
         postings = merge_partials(
             partials.filter(~F.col("term").startswith(SENTINEL_PREFIX)),
-            n_buckets=n_buckets)
+            n_buckets=n_buckets, n_docs=int(n_batch_docs))
         chunk_dir = os.path.join(out_dir, "postings",
                                  f"chunk=stream_{batch_id}")
-        (postings.write.mode("overwrite")
-         .partitionBy("bucket").parquet(chunk_dir))
+        # the write itself counts its rows: no re-read job of the chunk
+        written = Observation()
+        (postings.observe(written, F.count(F.lit(1)).alias("rows"))
+         .write.mode("overwrite").partitionBy("bucket").parquet(chunk_dir))
+        t_postings = time.monotonic()
         # docs land in a batch-keyed partition dir with OVERWRITE, so a
         # replay of a crash between this write and the lineage commit is
         # idempotent (a flat mode-append here double-counted every doc of
@@ -127,15 +146,17 @@ def append_index_stream(spark: SparkSession, docs_stream: DataFrame,
          .parquet(os.path.join(out_dir, "docs",
                                f"chunk=stream_{batch_id}")))
         partials.unpersist()
-        n_rows = spark.read.parquet(chunk_dir).count()
-        spark.createDataFrame(
-            [(f"stream_{batch_id}", int(batch_id), int(n_batch_docs),
-              n_rows, int(lo), int(hi),
-              round(time.monotonic() - t0, 3), time.time())],
-            "build_id string, chunk int, n_docs long, n_postings_rows long, "
-            "min_doc long, max_doc long, "
-            "wall_sec double, finished_at double") \
-            .write.mode("append").parquet(lin_dir)
+        t_end = time.monotonic()
+        append_lineage_row(spark, lin_dir, {
+            "build_id": f"stream_{batch_id}", "chunk": int(batch_id),
+            "n_docs": int(n_batch_docs),
+            "n_postings_rows": int(written.get["rows"]),
+            "min_doc": int(lo), "max_doc": int(hi),
+            "wall_sec": round(t_end - t0, 3), "finished_at": time.time(),
+            "probe_ms": _ms(t_probe - t0),
+            "postings_ms": _ms(t_postings - t_guard),
+            "docs_ms": _ms(t_end - t_postings),
+            "lineage_ms": _ms(t_guard - t_probe)})
         _publish_if_due()
 
     writer = docs_stream.writeStream.foreachBatch(process) \
@@ -160,16 +181,21 @@ def publish_index(spark: SparkSession, out_dir: str, profile: str = "code",
     _recover_compaction(out_dir)
     docs_w = spark.read.parquet(os.path.join(out_dir, "docs"))
     stats = doc_stats(docs_w)
-    postings_all = spark.read.option(
-        "basePath", os.path.join(out_dir, "postings")) \
-        .parquet(os.path.join(out_dir, "postings"))
+    postings_dir = os.path.join(out_dir, "postings")
+    # a Searcher open on this index caches a plan equal to the read below,
+    # holding the file list of its own warm: without the refresh, df would
+    # come from that stale cache while n_docs comes from disk. (The
+    # Searcher's driver-side dictionary stays as it was warmed.)
+    spark.catalog.refreshByPath(postings_dir)
+    postings_all = spark.read.option("basePath", postings_dir) \
+        .parquet(postings_dir)
     terms = term_stats(postings_all, stats["n_docs"])
     terms.write.mode("overwrite").parquet(os.path.join(out_dir, "terms"))
     stats_row = dict(stats, profile=profile, seg_bits=seg_bits,
                      n_buckets=n_buckets, k1=1.2, b=0.75)
     if compact_files_threshold:
         from ..plans.snapshot import parquet_file_count
-        n_files = parquet_file_count(os.path.join(out_dir, "postings"))
+        n_files = parquet_file_count(postings_dir)
         if n_files > int(compact_files_threshold):
             done = compact_stream_chunks(spark, out_dir,
                                          n_buckets=n_buckets)

@@ -3,6 +3,8 @@ invisible — federated scores over the new topology byte-identical to the
 old; boundary segments from non-aligned inputs merge into exactly the
 rows a fresh build produces."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -110,6 +112,8 @@ def test_reshard_guards(spark, tmp_path, mono):
     with pytest.raises(ValueError, match="no segments"):
         # 60 docs at seg_bits=3 → 8 segments; 64 shards can't all fill
         reshard_index(spark, [mono_dir], str(tmp_path / "z"), 64)
+    # checked before the first shard moves in: nothing is left behind
+    assert os.listdir(tmp_path / "z") == []
 
 
 def test_reshard_consolidates_streamed_nrt_delta(spark, corpus_pdf,
