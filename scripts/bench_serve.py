@@ -95,7 +95,7 @@ def main() -> None:
     from spidey_search_engine_spark.operators.federate import (
         FederatedSearcher, federated_bm25_topk_tokens)
     from spidey_search_engine_spark.operators.search import (
-        Searcher, bm25_topk_batch, bm25_topk_tokens)
+        Searcher, bm25_topk, bm25_topk_batch, bm25_topk_tokens)
     from spidey_search_engine_spark.session import get_spark
 
     n_docs = int(os.environ.get("SPIDEY_SERVE_DOCS", "2400000"))
@@ -117,15 +117,15 @@ def main() -> None:
 
     results: dict = {}
     with Searcher(spark, mono) as s:
-        # route="plain" pins the row-join baseline rows (round-3/4
+        # bm25_topk pins the plain-route baseline rows (round-3/4
         # continuity); the auto row below is what Searcher.bm25 now
         # serves by default at this scale (colocated, routed by the
         # stored doc count)
-        _timed(lambda: s.bm25(" ".join(HOT), k=10,
-                              route="plain").collect(),
+        _timed(lambda: bm25_topk(spark, s.index, " ".join(HOT),
+                                 k=10).collect(),
                "bm25_hot", results)
-        _timed(lambda: s.bm25(" ".join(MID), k=10,
-                              route="plain").collect(),
+        _timed(lambda: bm25_topk(spark, s.index, " ".join(MID),
+                                 k=10).collect(),
                "bm25_mid", results)
         _timed(lambda: s.bm25(" ".join(HOT), k=10).collect(),
                "bm25_hot_auto", results)
@@ -143,8 +143,8 @@ def main() -> None:
         # bm25_hot/bm25_mid (asserted) and is expected to undercut them
         # (no decoded-row exchange)
         hot_plain = [(r["doc_id"], round(r["score"], 9)) for r in
-                     s.bm25(" ".join(HOT), k=10,
-                            route="plain").collect()]
+                     bm25_topk(spark, s.index, " ".join(HOT),
+                               k=10).collect()]
         hot_colo = [(r["doc_id"], round(r["score"], 9)) for r in
                     s.bm25_colocated(" ".join(HOT), k=10).collect()]
         if hot_colo != hot_plain:

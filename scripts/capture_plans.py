@@ -564,7 +564,8 @@ def main() -> None:
         "them (plan-level concatenation — no exchange of its own); the "
         "global idf×multiplicity weights as ONE literal map (no "
         "broadcast exchange, same as the single-index plan); exactly "
-        "ONE HashAggregate pair on doc_id; TakeOrderedAndProject for "
+        "ONE ObjectHashAggregate pair on doc_id (the term-ordered "
+        "fold); TakeOrderedAndProject for "
         "the top-k. Query cost = Σ per-shard probe bytes — identical "
         "bytes to a single index over the union corpus, which is also "
         "the correctness oracle (federated_bm25_topk replays the "
@@ -572,23 +573,21 @@ def main() -> None:
         capture(dfed)))
 
     # Federated search_after: the same two-shard union plan with the
-    # deterministic fold aggregation and the cursor filter under the
-    # top-k — page depth appears nowhere
+    # cursor filter under the top-k — page depth appears nowhere
     from spidey_search_engine_spark.operators.federate import \
-        federated_bm25_topk_after
-    dfeda = federated_bm25_topk_after(
+        federated_bm25_topk_tokens
+    dfeda = federated_bm25_topk_tokens(
         spark, EQ._fed_shards(spark, sf_dir), EQ.QT, k=10,
         after=(0.25, 1000))
     sections.append((
-        "Federated search_after (federated_bm25_topk_after): per-shard "
-        "pruned scans + deterministic fold + cursor filter under the "
-        "top-k",
-        "Look for: the SAME two per-shard pruned scans and plan-level "
-        "Union as the federated top-k; ObjectHashAggregate instead of "
-        "HashAggregate (collect_list of (term, partial) structs — the "
-        "term-ordered fold that makes the recomputed score bitwise "
-        "equal to the cursor, and equal to the monolithic fold, so "
-        "cursors are valid cross-path); ONE Filter ((score < c) OR "
+        "Federated search_after (federated_bm25_topk_tokens with "
+        "after=): per-shard pruned scans + term-ordered fold + cursor "
+        "filter under the top-k",
+        "Look for: the SAME two per-shard pruned scans, plan-level "
+        "Union and ObjectHashAggregate (collect_list of (term, partial) "
+        "structs — the term-ordered fold that makes the recomputed "
+        "score bitwise equal to the cursor) as the federated top-k; "
+        "ONE Filter ((score < c) OR "
         "(score = c AND doc_id > d)) directly beneath "
         "TakeOrderedAndProject. Page depth never appears in the plan: "
         "page 1000 reads Σ per-shard probe bytes and sorts k rows, "
@@ -605,8 +604,9 @@ def main() -> None:
         "top-k",
         "Look for: the postings scans with PartitionFilters [bucket IN "
         "(..)] + PushedFilters [In(term, ..)] (the same pruned probe, "
-        "decoded WITH positions); one HashAggregate pair for the BM25 "
-        "side; the MapInPandas distance kernel fed by a doc_id "
+        "decoded WITH positions); one ObjectHashAggregate pair (the "
+        "term-ordered fold) for the BM25 side; the MapInPandas distance "
+        "kernel fed by a doc_id "
         "round-robin Exchange + per-partition sort (the phrase path's "
         "shape — state is one open doc's arrays, never a groupBy "
         "materialization); a left SortMergeJoin/broadcast joining the "
@@ -616,11 +616,11 @@ def main() -> None:
         capture(dprox)))
 
     # search_after pagination: the cursor filter sits UNDER the top-k
-    dafter = S.bm25_topk_after(spark, idx, EQ.QT, k=10,
-                               after=(0.25, 1000))
+    dafter = S.bm25_topk_tokens(spark, idx, EQ.QT, k=10,
+                                after=(0.25, 1000))
     sections.append((
-        "search_after deep pagination (bm25_topk_after): cursor filter "
-        "below TakeOrderedAndProject",
+        "search_after deep pagination (bm25_topk_tokens with after=): "
+        "cursor filter below TakeOrderedAndProject",
         "Look for: the same pruned probe + scoring plan as plain BM25 "
         "with ONE extra Filter ((score < c) OR (score = c AND doc_id > "
         "d)) directly beneath TakeOrderedAndProject — page depth never "
@@ -674,13 +674,14 @@ def main() -> None:
                                 ["fast", "scan"]], k=10)
     sections.append((
         "Synonym-group BM25 (bm25_synonym_topk): SynonymQuery blend as "
-        "a literal group map + two hash aggregates",
+        "a literal group map + two aggregates",
         "Look for: ONE pruned probe of the UNION of group members "
         "(PartitionFilters bucket IN, PushedFilters term IN — shared "
         "members decode once); the term→gid and gid→weight literal "
         "maps inside the project (no join, no broadcast exchange); "
         "HashAggregate on (doc_id, gid) blending member tfs, then "
-        "HashAggregate on doc_id summing group partials; "
+        "ObjectHashAggregate on doc_id folding group partials in gid "
+        "order; "
         "TakeOrderedAndProject. Cost is the plain ranker's plus one "
         "df-bounded agg — group count never multiplies the decode.",
         capture(dsyn)))

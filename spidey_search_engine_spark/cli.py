@@ -200,14 +200,12 @@ def main(argv: list[str] | None = None) -> int:
                         "--after page's last row — in ranking order; "
                         "every page costs one probe regardless of "
                         "depth, unlike OFFSET. Start with '--after "
-                        "start' (page 1): cursors are only valid from "
-                        "pages this path served — the after-filter "
-                        "recomputes scores and compares the cursor "
-                        "with exact equality, and the plain ranker's "
-                        "hash-agg sum can sit 1 ulp off the pagination "
-                        "path's deterministic fold, re-serving or "
-                        "skipping the boundary row. Plain-term default "
-                        "path; composes with --snippets")
+                        "start' (page 1) or take the cursor from any "
+                        "page of the same index: every route scores "
+                        "bit-identically, so the exact-equality cursor "
+                        "compare neither re-serves nor skips the "
+                        "boundary row. Plain-term default path; "
+                        "composes with --snippets")
     q.add_argument("--proximity", type=float, default=None, metavar="W",
                    help="proximity-boosted ranking: score = BM25 + "
                         "W/(1+min_dist) where min_dist is the closest "
@@ -532,11 +530,12 @@ def main(argv: list[str] | None = None) -> int:
     t.add_argument("--bpe-max-words", type=int, default=1_000_000)
 
     args = p.parse_args(argv)
-    if args.cmd == "build":
+    if args.cmd in ("build", "reshard"):
         if args.ngram_size < 2:
             p.error(f"--ngram-size must be >= 2 (got {args.ngram_size})")
         if args.ngram_index and args.no_wildcard_index:
             p.error("--ngram-index conflicts with --no-wildcard-index")
+    if args.cmd == "build":
         if args.shards < 1:
             p.error(f"--shards must be >= 1 (got {args.shards})")
         if args.shards > 1 and args.resumable:
@@ -994,12 +993,10 @@ def main(argv: list[str] | None = None) -> int:
             # federated path (operators/federate.py): global-stats BM25
             # over disjoint shards. Term bag only — every other mode is
             # single-index (rejected in the arg-contract block above).
-            from .functions.analysis import analyze_query
             from .operators.federate import federated_bm25_topk_tokens
+            from .operators.search import query_bag
             shards = [load_index(spark, d) for d in args.index]
-            q_terms, phrases = analyze_query(args.q)
-            for ph in phrases:
-                q_terms.extend(ph)
+            q_terms = query_bag(args.q)
             w_imp = (args.boost_important
                      if args.boost_important is not None else 1.0)
             if args.filter:
@@ -1009,21 +1006,13 @@ def main(argv: list[str] | None = None) -> int:
                         p.error(f"column {c!r} is not in the index "
                                 f"docs table (have: {', '.join(dcols)})")
             try:
-                if args.after is not None:
-                    from .operators.federate import \
-                        federated_bm25_topk_after
-                    out = federated_bm25_topk_after(
-                        spark, shards, q_terms, k=args.k,
-                        after=(None if args.after == "start"
-                               else args.after),
-                        important_weight=w_imp,
-                        verify_disjoint=args.verify_disjoint)
-                else:
-                    out = federated_bm25_topk_tokens(
-                        spark, shards, q_terms, k=args.k,
-                        important_weight=w_imp,
-                        verify_disjoint=args.verify_disjoint,
-                        filters=args.filter or None)
+                out = federated_bm25_topk_tokens(
+                    spark, shards, q_terms, k=args.k,
+                    important_weight=w_imp,
+                    verify_disjoint=args.verify_disjoint,
+                    filters=args.filter or None,
+                    after=(None if args.after in (None, "start")
+                           else args.after))
                 if args.snippets:
                     out = _attach_snippets(
                         out, q_terms,
@@ -1184,13 +1173,10 @@ def main(argv: list[str] | None = None) -> int:
             elif args.fuzzy:
                 from pyspark.sql import functions as F
 
-                from .functions.analysis import analyze_query
                 from .operators.fuzzy import correct_tokens
-                from .operators.search import bm25_topk_tokens
+                from .operators.search import bm25_topk_tokens, query_bag
                 fz = _fuzzy_idx()
-                q_terms, phrases = analyze_query(args.q)
-                for ph in phrases:
-                    q_terms.extend(ph)
+                q_terms = query_bag(args.q)
                 known = {r["term"] for r in index["terms"].filter(
                     F.col("term").isin(list(set(q_terms))))
                     .select("term").collect()} if q_terms else set()
@@ -1273,8 +1259,7 @@ def main(argv: list[str] | None = None) -> int:
                 w_imp = (args.boost_important
                          if args.boost_important is not None else 1.0)
                 if args.after is not None:
-                    from .operators.search import bm25_topk_after
-                    out = bm25_topk_after(
+                    out = bm25_topk_tokens(
                         spark, index, q_terms, k=args.k,
                         after=(None if args.after == "start"
                                else args.after),
@@ -1339,7 +1324,7 @@ def main(argv: list[str] | None = None) -> int:
                     # plain solo query: same metadata route as the warm
                     # Searcher — the colocated kernel also wins COLD
                     # (measured at 2.4M: 0.7-1.0 s vs 1.3-4.7 s), both
-                    # routes rank-identical
+                    # routes bit-identical
                     from .operators.search import (
                         bm25_topk_colocated_tokens, route_solo)
                     if route_solo(index["stats"]) == "colocated":
@@ -1809,7 +1794,8 @@ def main(argv: list[str] | None = None) -> int:
             from .operators.audit import union_logs
             log = union_logs(audit_logs)
             if log is None:
-                log = spark.createDataFrame([], "doc_id long, stage string")
+                from .operators.search import empty_frame
+                log = empty_frame(spark, "doc_id long, stage string")
             log.write.mode("overwrite").parquet(args.audit)
             dropped = {r["stage"]: r["n"] for r in
                        spark.read.parquet(args.audit).groupBy("stage")

@@ -368,18 +368,17 @@ _BATCH_BAGS = {
 
 
 def bm25_batch_topk(spark, sf_dir):
-    """Batch BM25: three queries scored in ONE job (union-term probe +
-    broadcast per-query weights + one aggregation + per-query window
-    rank — operators/search.bm25_scores_batch). The eval-workload shape:
-    shared terms decode once for all queries. Oracle-paired with the
-    same (query_id, term) VALUES bag, duplicates carrying bag-semantics
-    multiplicity on both sides."""
+    """Batch BM25: three queries scored in ONE job on the segment-
+    colocated kernel bm25_topk_batch runs (union-term probe, bytes-only
+    shuffle, per-segment top-k — operators/search.
+    bm25_scores_batch_colocated) + per-query window rank. The bags are
+    already-analyzed tokens of the simple-profile index, so they enter
+    the kernel directly rather than through bm25_topk_batch's query
+    analyzer. The eval-workload shape: shared terms decode once for all
+    queries. Oracle-paired with the same (query_id, term) VALUES bag,
+    duplicates carrying bag-semantics multiplicity on both sides."""
     idx = entry_index(spark, sf_dir)
-    union_terms = sorted({t for bag in _BATCH_BAGS.values() for t in bag})
-    rows = S.query_term_postings(idx["postings"], union_terms,
-                                 int(idx["stats"]["n_buckets"]))
-    scores = S.bm25_scores_batch(rows, idx["terms"],
-                                 float(idx["stats"]["avgdl"]), _BATCH_BAGS)
+    scores = S.bm25_scores_batch_colocated(idx, _BATCH_BAGS, k=10)
     wnd = Window.partitionBy("query_id").orderBy(F.desc("score"),
                                                  F.asc("doc_id"))
     return (scores.withColumn("rank", F.row_number().over(wnd))
@@ -4511,27 +4510,23 @@ FROM parts p JOIN topk t USING (doc_id)"""
 
 
 def bm25_search_after(spark, sf_dir):
-    """Stateless deep pagination (search.bm25_topk_after — the
-    Elasticsearch search_after pattern): page 2 of the fixed query = the
-    top-20 rows strictly after page 1's last (score, doc_id) cursor in
-    (score DESC, doc_id ASC) order; every page costs one pruned probe +
-    one top-k regardless of depth, unlike the reference's LIMIT/OFFSET
+    """Stateless deep pagination (search.bm25_topk_tokens with `after`
+    — the Elasticsearch search_after pattern): page 2 of the fixed query
+    = the top-20 rows strictly after page 1's last (score, doc_id) cursor
+    in (score DESC, doc_id ASC) order; every page costs one pruned probe
+    + one top-k regardless of depth, unlike the reference's LIMIT/OFFSET
     (QueryResultsFetcher.java) whose cost grows linearly with the page
     number. The cursor is derived the way a client would: from the last
-    row of page 1 SERVED BY THE PAGINATION PATH (after=None — the CLI's
-    `--after start`). That is the search_after contract (Elasticsearch's
-    too: cursors are the sort values a previous page OF THE SAME PATH
-    returned): the after-filter recomputes scores with the deterministic
-    term-ordered fold and compares the cursor float with exact equality,
-    so a cursor taken from the plain hash-agg ranker can sit 1 ulp off
-    and re-serve or skip the boundary row — this entry caught exactly
-    that before the page-1 source was corrected. Oracle: DuckDB ranks
-    ALL scored docs once and emits rows 21-40 — the offset formulation
-    it must equal."""
+    row of page 1 (after=None — the CLI's `--after start`). The
+    after-filter recomputes scores and compares the cursor float with
+    exact equality; that is sound because every route folds the same
+    partials in term order, so the recompute is bitwise the served
+    score. Oracle: DuckDB ranks ALL scored docs once and emits rows
+    21-40 — the offset formulation it must equal."""
     idx = entry_index(spark, sf_dir)
-    p1 = S.bm25_topk_after(spark, idx, QT, k=20).collect()
+    p1 = S.bm25_topk_tokens(spark, idx, QT, k=20).collect()
     cur = (p1[-1]["score"], p1[-1]["doc_id"])
-    out = S.bm25_topk_after(spark, idx, QT, k=20, after=cur)
+    out = S.bm25_topk_tokens(spark, idx, QT, k=20, after=cur)
     return out.select("doc_id", _r(F.col("score")).alias("score_r"))
 
 
@@ -4555,19 +4550,18 @@ FROM scores ORDER BY s DESC, doc_id ASC LIMIT 20 OFFSET 20"""
 
 def federated_bm25_after_topk(spark, sf_dir):
     """Federated search_after (operators/federate.py
-    federated_bm25_topk_after): page 2 of the fixed query ACROSS the two
-    parity shards — page 1 served by the federated pagination path, its
-    (score, doc_id) cursor feeding the page-2 probe. The deterministic
-    term-ordered fold makes the cursor recompute bitwise AND keeps
-    federation invisible bitwise, so the oracle is the UNMODIFIED
-    monolithic OFFSET SQL (ORACLE_SQL['bm25_search_after']): a pass
-    proves sharded deep pagination returns exactly the single-index
-    pages — resharding between a user's pages cannot break a cursor."""
-    from .operators.federate import federated_bm25_topk_after
+    federated_bm25_topk_tokens with `after`): page 2 of the fixed query
+    ACROSS the two parity shards — page 1 served by the federated path,
+    its (score, doc_id) cursor feeding the page-2 probe. The term-ordered
+    fold makes the cursor recompute bitwise, so the oracle is the
+    UNMODIFIED monolithic OFFSET SQL (ORACLE_SQL['bm25_search_after']): a
+    pass proves sharded deep pagination returns exactly the single-index
+    pages."""
+    from .operators.federate import federated_bm25_topk_tokens
     shards = _fed_shards(spark, sf_dir)
-    p1 = federated_bm25_topk_after(spark, shards, QT, k=20).collect()
+    p1 = federated_bm25_topk_tokens(spark, shards, QT, k=20).collect()
     cur = (p1[-1]["score"], p1[-1]["doc_id"])
-    out = federated_bm25_topk_after(spark, shards, QT, k=20, after=cur)
+    out = federated_bm25_topk_tokens(spark, shards, QT, k=20, after=cur)
     return out.select("doc_id", _r(F.col("score")).alias("score_r"))
 
 

@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from ..functions.analysis import PROFILES
 from .search import (_pruned_postings, binary_postings,
                      bm25_topk_colocated_tokens, bm25_topk_tokens,
-                     query_idf, route_solo)
+                     empty_frame, query_idf, route_solo)
 
 
 def _match_doc_ids(index: dict, terms: list[str], mode: str) -> DataFrame:
@@ -114,7 +114,7 @@ def significant_terms(spark: SparkSession, index: dict, docs: DataFrame,
     fg_rows = fg_fn(spark, index, list(q_terms), int(k_docs)).collect()
     out_schema = "term string, fg_df long, df long, score_r double"
     if not fg_rows:
-        return spark.createDataFrame([], out_schema)
+        return empty_frame(spark, out_schema)
     fg_ids = [int(r["doc_id"]) for r in fg_rows]
     n_fg = len(fg_ids)
     profile = str(index["stats"].get("profile", "simple"))
@@ -137,7 +137,7 @@ def significant_terms(spark: SparkSession, index: dict, docs: DataFrame,
     fg_df_counts = {t: c for t, c in fg_df_counts.items()
                     if c >= int(min_fg_df)}
     if not fg_df_counts:
-        return spark.createDataFrame([], out_schema)
+        return empty_frame(spark, out_schema)
     bg_df = query_idf(index["terms"], list(fg_df_counts), "df",
                       index.get("idf_cache"))
     n_docs = float(index["stats"]["n_docs"])
@@ -153,7 +153,7 @@ def significant_terms(spark: SparkSession, index: dict, docs: DataFrame,
         score = (fg_pct - bg_pct) * (fg_pct / bg_pct)
         scored.append((t, int(fg), int(df), score))
     if not scored:
-        return spark.createDataFrame([], out_schema)
+        return empty_frame(spark, out_schema)
     scored.sort(key=lambda r: (-r[3], r[0]))
     top = [(t, fg, df, round(s, 6))
            for t, fg, df, s in scored[:int(top_terms)]]
@@ -178,7 +178,7 @@ def term_vector(spark: SparkSession, docs: DataFrame, doc_id: int,
            .select(text_col).limit(1).collect())
     out_schema = "term string, tf long, first_pos long"
     if not src or src[0][0] is None:
-        return spark.createDataFrame([], out_schema)
+        return empty_frame(spark, out_schema)
     toks = PROFILES[profile](src[0][0])
     tf: dict[str, int] = {}
     first: dict[str, int] = {}
@@ -188,5 +188,5 @@ def term_vector(spark: SparkSession, docs: DataFrame, doc_id: int,
             first[t] = pos
     rows = sorted((t, tf[t], first[t]) for t in tf)
     if not rows:
-        return spark.createDataFrame([], out_schema)
+        return empty_frame(spark, out_schema)
     return spark.createDataFrame(rows, out_schema)

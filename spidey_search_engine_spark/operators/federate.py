@@ -30,9 +30,10 @@ multiplicity weights enter the scoring stage as one literal map.
 Execution shape: per shard, the standard bucket-partition-pruned probe +
 vectorized segment decode (query_term_postings — each shard keeps its
 own n_buckets); the decoded row DataFrames union (no shuffle: union is
-plan-level concatenation); ONE hash aggregation on doc_id and ONE
-TakeOrderedAndProject produce the top-k. Cost = Σ per-shard probe bytes,
-identical to what a single index over the union would read.
+plan-level concatenation); ONE per-doc term-ordered fold
+(search.bm25_score_rows) and ONE TakeOrderedAndProject produce the top-k.
+Cost = Σ per-shard probe bytes, identical to what a single index over the
+union would read.
 
 Sharding contract: shards must be DISJOINT on doc_id — a doc present in
 two shards would sum its own partials twice. Operationally that means
@@ -62,12 +63,14 @@ from __future__ import annotations
 import math
 from functools import reduce
 
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .search import (batch_term_weights, bm25_score_rows,
-                     query_idf,
+from .search import (BATCH_CHUNK_QUERIES, MAX_BROADCAST_CANDIDATES,
+                     _analyze_bags, _bag_weights, _candidate_bound,
+                     _topk_after, batch_term_weights, bm25_score_rows,
+                     bm25_scores_batch_colocated, empty_frame,
+                     filter_doc_ids, query_bag, query_idf,
                      query_term_postings)
 
 
@@ -132,35 +135,39 @@ def federated_bm25_topk_tokens(spark: SparkSession, indexes: list[dict],
                                important_weight: float = 1.0,
                                verify_disjoint: bool = False,
                                gstats: dict | None = None,
-                               filters: dict | None = None) -> DataFrame:
+                               filters: dict | None = None,
+                               after: tuple[float, int] | None = None
+                               ) -> DataFrame:
     """Federated twin of search.bm25_topk_tokens: global-stats BM25
     top-k over an analyzed term bag across shards. Bag semantics
     (duplicate terms weight by multiplicity) and tie-breaks (score DESC,
     doc_id ASC) match the single-index path exactly — they must, the
-    invariant test diffs the two byte-for-byte. `gstats` lets a warm
+    invariant test diffs the two. `gstats` lets a warm
     serving tier (FederatedSearcher) pass the once-computed global stats
     instead of re-deriving them per query. `filters` is the facets
     drill-down across shards: each shard's docs table gets the SAME
     predicate-pushed two-column scan the single-index path uses
     (search.filter_doc_ids), unioned plan-level and applied LEFT SEMI
     before the top-k — per-shard pruning, one semi-join, no extra
-    postings decode."""
+    postings decode.
+
+    `after` is a search_after cursor (search._topk_after): every page
+    costs Σ per-shard probe bytes regardless of depth. Scores fold
+    per-doc partials in TERM order (bm25_score_rows), so the page-N+1
+    recompute is bitwise the page-N score the cursor carries."""
     if not indexes:
         raise ValueError("federated query needs at least one shard")
     if not q_terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return empty_frame(spark, "doc_id long, score double")
     if gstats is None:
         gstats = federated_stats(indexes)
-    idf = federated_idf(indexes, q_terms, n_docs=gstats["n_docs"])
-    weights = pd.Series(q_terms).value_counts()
-    iw = {t: idf[t] * float(weights[t]) for t in idf}
+    iw = _bag_weights(q_terms, federated_idf(indexes, q_terms,
+                                             n_docs=gstats["n_docs"]))
     rows = federated_posting_rows(indexes, q_terms,
                                   verify_disjoint=verify_disjoint)
     scores = bm25_score_rows(rows, iw, gstats["avgdl"],
                              important_weight=important_weight)
     if filters:
-        from .search import (MAX_BROADCAST_CANDIDATES, _candidate_bound,
-                             filter_doc_ids)
         keep = reduce(DataFrame.unionByName,
                       [filter_doc_ids(idx["docs"], filters)
                        for idx in indexes])
@@ -175,7 +182,7 @@ def federated_bm25_topk_tokens(spark: SparkSession, indexes: list[dict],
                       .select(*scores.columns))
         else:
             scores = scores.join(keep, "doc_id", "left_semi")
-    return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return _topk_after(scores, k, after)
 
 
 def federated_bm25_topk_batch_tokens(
@@ -197,18 +204,12 @@ def federated_bm25_topk_batch_tokens(
     BATCH_CHUNK_QUERIES chunk exactly like the single-index path. The
     string wrapper and the oracle-paired entry both call THIS — one
     pipeline, no copy to drift."""
-    from functools import reduce as _reduce
-
-    from pyspark.sql import DataFrame as _DF
-    from pyspark.sql import Window
-
-    from .search import BATCH_CHUNK_QUERIES, bm25_scores_batch_colocated
     if not indexes:
         raise ValueError("federated query needs at least one shard")
     bags = {qid: bag for qid, bag in bags.items() if bag}
     if not bags:
-        return spark.createDataFrame(
-            [], "query_id string, doc_id long, score double, rank int")
+        return empty_frame(
+            spark, "query_id string, doc_id long, score double, rank int")
     union_terms = sorted({t for bag in bags.values() for t in bag})
     if gstats is None:
         gstats = federated_stats(indexes)
@@ -225,7 +226,7 @@ def federated_bm25_topk_batch_tokens(
     parts = [bm25_scores_batch_colocated(idx, chunk, k, qrows=qrows,
                                          avgdl=float(gstats["avgdl"]))
              for chunk in chunks for idx in indexes]
-    cand = _reduce(_DF.unionByName, parts)
+    cand = reduce(DataFrame.unionByName, parts)
     wnd = Window.partitionBy("query_id").orderBy(F.desc("score"),
                                                  F.asc("doc_id"))
     return (cand.withColumn("rank", F.row_number().over(wnd))
@@ -241,16 +242,9 @@ def federated_bm25_topk_batch(spark: SparkSession, indexes: list[dict],
     hot terms decode once per shard regardless of how many queries use
     them. Same invariant as the single-query path: byte-identical to
     bm25_topk_batch over the monolithic union index."""
-    from ..functions.analysis import analyze_query
-    bags: dict[str, list[str]] = {}
-    for qid, qtext in queries.items():
-        q_terms, phrases = analyze_query(qtext)
-        for p in phrases:
-            q_terms.extend(p)
-        if q_terms:
-            bags[qid] = q_terms
     return federated_bm25_topk_batch_tokens(
-        spark, indexes, bags, k=k, verify_disjoint=verify_disjoint)
+        spark, indexes, _analyze_bags(queries), k=k,
+        verify_disjoint=verify_disjoint)
 
 
 def federated_bm25_topk(spark: SparkSession, indexes: list[dict],
@@ -259,60 +253,9 @@ def federated_bm25_topk(spark: SparkSession, indexes: list[dict],
                         verify_disjoint: bool = False) -> DataFrame:
     """Analyze → federated prune/decode → global-stats score → top-k.
     Phrase words enter the bag like the single-index bm25_topk."""
-    from ..functions.analysis import analyze_query
-    q_terms, phrases = analyze_query(query)
-    for p in phrases:
-        q_terms.extend(p)
     return federated_bm25_topk_tokens(
-        spark, indexes, q_terms, k=k, important_weight=important_weight,
-        verify_disjoint=verify_disjoint)
-
-
-def federated_bm25_topk_after(spark: SparkSession, indexes: list[dict],
-                              q_terms: list[str], k: int = 10,
-                              after: tuple[float, int] | None = None,
-                              important_weight: float = 1.0,
-                              verify_disjoint: bool = False,
-                              gstats: dict | None = None) -> DataFrame:
-    """Federated twin of search.bm25_topk_after — search_after deep
-    pagination across shards. Page N+1 = the top-k rows strictly after
-    the (score, doc_id) cursor of page N's last row in ranking order;
-    every page costs Σ per-shard probe bytes regardless of depth, where
-    an OFFSET over the federated result would sort and discard P·k rows
-    re-merged from every shard.
-
-    Scores fold per-doc partials in TERM order (bm25_score_rows
-    deterministic=True — the same fold the single-index pagination path
-    uses), which makes the cursor sound twice over: (a) the page-N+1
-    recompute is bitwise equal to the page-N score the cursor carries,
-    and (b) federation stays invisible BITWISE — the monolithic fold
-    sorts the same (term, partial) structs, partials are bitwise equal
-    (global idf/avgdl, the FED invariant), so a cursor from a federated
-    page is valid against the monolithic index and vice versa (pinned
-    by test). after=None is page 1 — pagination sessions start HERE
-    (the CLI's `--after start`), never from the plain hash-agg ranker
-    whose sum can sit 1 ulp off the fold."""
-    if not indexes:
-        raise ValueError("federated query needs at least one shard")
-    if not q_terms:
-        return spark.createDataFrame([], "doc_id long, score double")
-    if gstats is None:
-        gstats = federated_stats(indexes)
-    idf = federated_idf(indexes, q_terms, n_docs=gstats["n_docs"])
-    weights = pd.Series(q_terms).value_counts()
-    iw = {t: idf[t] * float(weights[t]) for t in idf}
-    rows = federated_posting_rows(indexes, q_terms,
-                                  verify_disjoint=verify_disjoint)
-    scores = bm25_score_rows(rows, iw, gstats["avgdl"],
-                             important_weight=important_weight,
-                             deterministic=True)
-    if after is not None:
-        s0, d0 = float(after[0]), int(after[1])
-        scores = scores.filter(
-            (F.col("score") < F.lit(s0))
-            | ((F.col("score") == F.lit(s0))
-               & (F.col("doc_id") > F.lit(d0))))
-    return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+        spark, indexes, query_bag(query), k=k,
+        important_weight=important_weight, verify_disjoint=verify_disjoint)
 
 
 class FederatedSearcher:
@@ -368,36 +311,26 @@ class FederatedSearcher:
 
     def bm25(self, query: str, k: int = 10,
              important_weight: float = 1.0) -> DataFrame:
-        from ..functions.analysis import analyze_query
-        q_terms, phrases = analyze_query(query)
-        for p in phrases:
-            q_terms.extend(p)
-        return self.bm25_tokens(q_terms, k=k,
+        return self.bm25_tokens(query_bag(query), k=k,
                                 important_weight=important_weight)
 
     def after(self, q_terms: list[str], k: int = 10,
               after: tuple[float, int] | None = None,
               important_weight: float = 1.0) -> DataFrame:
         """search_after pagination across the warmed shards — after=None
-        is page 1 (serve pagination sessions from here, not bm25_tokens:
-        the cursor recompute is exact-equality against the deterministic
-        fold). Cached global stats + per-shard idf_cache keep a warm
-        deep page at one planned job, same as page 1."""
-        return federated_bm25_topk_after(
+        is page 1. A cursor is valid from any page these shards served
+        (bm25, bm25_tokens or after): every route folds the same
+        partials in the same order. Cached global stats + per-shard
+        idf_cache keep a warm deep page at one planned job, same as
+        page 1."""
+        return federated_bm25_topk_tokens(
             self.spark, self.shards, q_terms, k=k, after=after,
             important_weight=important_weight, gstats=self.gstats)
 
     def batch(self, queries: dict[str, str], k: int = 10) -> DataFrame:
-        from ..functions.analysis import analyze_query
-        bags: dict[str, list[str]] = {}
-        for qid, qtext in queries.items():
-            q_terms, phrases = analyze_query(qtext)
-            for p in phrases:
-                q_terms.extend(p)
-            if q_terms:
-                bags[qid] = q_terms
         return federated_bm25_topk_batch_tokens(
-            self.spark, self.shards, bags, k=k, gstats=self.gstats)
+            self.spark, self.shards, _analyze_bags(queries), k=k,
+            gstats=self.gstats)
 
     def close(self) -> None:
         for s in self._searchers:

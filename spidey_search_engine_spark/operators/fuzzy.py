@@ -44,6 +44,8 @@ import os
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .search import empty_frame
+
 
 def _deletes(c: Column) -> Column:
     """array of every string obtained by deleting ONE character of `c`.
@@ -197,7 +199,7 @@ def fuzzy_lookup(del_index: DataFrame, tokens: list[str], *,
         for v in py_deletion_variants(q, max_d):
             var_to_qs.setdefault(v, []).append(q)
     if not var_to_qs:
-        return spark.createDataFrame([], _FUZZY_SCHEMA)
+        return empty_frame(spark, _FUZZY_SCHEMA)
     from .search import _buckets_of  # JVM xxhash64, cached per string
     vset = sorted(var_to_qs)
     buckets = sorted(set(_buckets_of(vset, n_buckets).values()))
@@ -231,7 +233,7 @@ def fuzzy_lookup_brute(terms_df: DataFrame, tokens: list[str], *,
     spark = terms_df.sparkSession
     toks = sorted(set(tokens))
     if not toks:
-        return spark.createDataFrame([], _FUZZY_SCHEMA)
+        return empty_frame(spark, _FUZZY_SCHEMA)
     cand = (terms_df
             .select("term", "df",
                     F.explode(F.array(*[F.lit(q) for q in toks]))

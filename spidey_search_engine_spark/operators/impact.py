@@ -67,7 +67,7 @@ from pyspark.sql import functions as F
 from .build import K1, B, decode_segment_nopos, _encode_partial
 from .search import (_buckets_of, _decode_posting_rows, _pruned_postings,
                      _term_weight_map, bm25_score_rows, bm25_topk_tokens,
-                     query_term_weights)
+                     empty_frame, query_bag, query_term_weights)
 
 # ascending tf-saturation cut points; band = (#thresholds) - (#cuts <= s),
 # so band 0 collects s >= 0.95 (high-tf / short-doc postings) and the
@@ -279,11 +279,11 @@ def bm25_impact_topk_tokens(spark: SparkSession, index: dict, impact: dict,
     seg_bits = int(stats["seg_bits"])
     n_buckets = int(stats["n_buckets"])
     if not q_terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return empty_frame(spark, "doc_id long, score double")
     iw = query_term_weights(index["terms"], q_terms,
                             index.get("idf_cache"))
     if not iw:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return empty_frame(spark, "doc_id long, score double")
     terms = sorted(iw)
 
     def exhaustive():
@@ -393,8 +393,5 @@ def bm25_impact_topk_tokens(spark: SparkSession, index: dict, impact: dict,
 
 def bm25_impact_topk(spark: SparkSession, index: dict, impact: dict,
                      query: str, k: int = 10, **kw) -> DataFrame:
-    from ..functions.analysis import analyze_query
-    q_terms, phrases = analyze_query(query)
-    for p in phrases:
-        q_terms.extend(p)
-    return bm25_impact_topk_tokens(spark, index, impact, q_terms, k, **kw)
+    return bm25_impact_topk_tokens(spark, index, impact, query_bag(query),
+                                   k, **kw)

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .search import empty_frame
+
 
 def pagerank(spark: SparkSession, edges: DataFrame, n_docs: int,
              damping: float = 0.85, tol: float = 0.001,
@@ -49,7 +51,7 @@ def pagerank(spark: SparkSession, edges: DataFrame, n_docs: int,
     cadence cost). ``iter_info`` (optional dict) records
     {"iterations": n, "delta": last} for tests and benches."""
     if n_docs <= 0:
-        return spark.createDataFrame([], "doc_id long, page_rank double")
+        return empty_frame(spark, "doc_id long, page_rank double")
     c = (1.0 - damping / n_docs) if mode == "reference" else \
         ((1.0 - damping) / n_docs)
 
@@ -145,7 +147,7 @@ def pagerank_algebraic(spark: SparkSession, edges: DataFrame, n_docs: int,
     agreeing to ~1e-9 at tight tolerance)."""
     import numpy as np
     if n_docs <= 0:
-        return spark.createDataFrame([], "doc_id long, page_rank double")
+        return empty_frame(spark, "doc_id long, page_rank double")
     c = (1.0 - damping / n_docs) if mode == "reference" else \
         ((1.0 - damping) / n_docs)
     e = (edges.select(F.col("src_doc_id").alias("src"),

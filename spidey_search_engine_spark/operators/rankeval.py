@@ -15,9 +15,10 @@ batch BM25 path) needs its OWN quality measured the same way: results
   (unserved slots count against, the standard convention).
 
 Scale shape: results are page-bounded (|queries| × k rows); judgments
-join on (query_id, doc_id); the ideal-DCG side is one windowed top-k
-over the judgments, never a corpus scan. Everything reduces in two hash
-aggregations — evaluation cost is proportional to the judgment set, not
+join on (query_id, doc_id) after one max-grade reduction per pair; the
+ideal-DCG side is one windowed top-k over the judgments, never a corpus
+scan. Everything reduces in hash aggregations over the results and the
+judgments — evaluation cost is proportional to the judgment set, not
 the corpus.
 """
 
@@ -34,15 +35,17 @@ def ranking_eval(results: DataFrame, judgments: DataFrame,
     `results`: (query_id, doc_id, rank) with rank 1-based — any ranker's
     page (rows past `rank > k` are ignored so a deeper page can be
     evaluated at several cutoffs). `judgments`: (query_id, doc_id,
-    grade); missing (query, doc) pairs grade 0. Queries present in
+    grade); missing (query, doc) pairs grade 0, and a pair judged more
+    than once takes its max grade (a repeated row must not fan out the
+    join or count twice in the ideal page). Queries present in
     `results` but absent from `judgments` score 0 across the board;
     queries only in `judgments` are not emitted (nothing was served)."""
     if k <= 0:
         raise ValueError(f"k must be positive (got {k})")
     r = (results.filter(F.col("rank") <= k)
          .select("query_id", "doc_id", "rank"))
-    j = judgments.select("query_id", "doc_id",
-                         F.col("grade").cast("double").alias("grade"))
+    j = (judgments.groupBy("query_id", "doc_id")
+         .agg(F.max(F.col("grade").cast("double")).alias("grade")))
     scored = (r.join(j, ["query_id", "doc_id"], "left")
               .withColumn("grade", F.coalesce("grade", F.lit(0.0))))
     gain = (F.pow(F.lit(2.0), F.col("grade")) - 1.0) / \

@@ -18,9 +18,11 @@ Two rankers over the same postings:
 Plan shape: the q-term filter prunes postings partitions by `bucket`
 (Q1 — the MySQL hash-index analog), a pandas UDF decodes segments to
 (doc_id, tf, dl[, positions]) Arrow batches, scores are built-in column
-expressions (JVM/codegen), per-doc rollup is a hash agg, and the top-k is
-TakeOrderedAndProject — no driver-side per-row loops, no full-corpus pass
-beyond the q-term postings themselves.
+expressions (JVM/codegen), per-doc rollup is a term-ordered fold (the
+same association and summation order as the numpy kernel score_segments,
+so every BM25 route on one index returns the same floats), and the top-k
+is TakeOrderedAndProject — no driver-side per-row loops, no full-corpus
+pass beyond the q-term postings themselves.
 """
 
 from __future__ import annotations
@@ -240,23 +242,30 @@ def query_idf(terms_df: DataFrame, query_terms: list[str],
     return {r["term"]: float(r[col]) for r in rows}
 
 
+def _bag_weights(bag: list[str], idf: dict[str, float]) -> dict[str, float]:
+    """term → idf×bag-multiplicity for one term bag — THE weight rule of
+    every BM25 ranker (single-index, federated, batch, colocated), so a
+    change to the multiplicity rule can never desync one from another.
+    Terms absent from `idf` (df=0) drop."""
+    weights = pd.Series(bag).value_counts()
+    return {t: float(idf[t]) * float(weights[t]) for t in weights.index
+            if t in idf}
+
+
 def query_term_weights(terms_df: DataFrame, query_terms: list[str],
                        idf_cache: dict | None = None) -> dict[str, float]:
-    """term → idf×bag-multiplicity — THE per-term weight derivation every
-    single-index BM25 variant uses (plain/explain/proximity/pagination).
-    One copy so a change to the multiplicity rule or idf column can never
-    desync one ranker from the others; terms absent from the dictionary
-    (df=0) drop here, which is also each caller's OOV early-exit test."""
-    weights = pd.Series(query_terms).value_counts()
-    idf = query_idf(terms_df, query_terms, "idf_bm25", idf_cache)
-    return {t: idf[t] * float(weights[t]) for t in idf}
+    """term → idf×bag-multiplicity from THIS index's dictionary (see
+    _bag_weights); terms absent from the dictionary (df=0) drop here,
+    which is also each caller's OOV early-exit test."""
+    return _bag_weights(query_terms,
+                        query_idf(terms_df, query_terms, "idf_bm25",
+                                  idf_cache))
 
 
 def bm25_scores(posting_rows: DataFrame, terms_df: DataFrame, avgdl: float,
                 query_terms: list[str],
                 idf_cache: dict | None = None,
-                important_weight: float = 1.0,
-                deterministic: bool = False) -> DataFrame:
+                important_weight: float = 1.0) -> DataFrame:
     """Per-doc BM25 over decoded posting rows. Duplicate query terms weight
     by multiplicity (bag semantics, matching the reference's repeated
     OR-columns, QueryResultsFetcher.java:239-240).
@@ -276,59 +285,69 @@ def bm25_scores(posting_rows: DataFrame, terms_df: DataFrame, avgdl: float,
     unchanged)."""
     iw = query_term_weights(terms_df, query_terms, idf_cache)
     return bm25_score_rows(posting_rows, iw, avgdl,
-                           important_weight=important_weight,
-                           deterministic=deterministic)
+                           important_weight=important_weight)
+
+
+def _effective_tf(important_weight: float):
+    """tf as the BM25 formula consumes it: tf·w on `important` postings
+    (BM25F-lite, see bm25_scores), plain tf otherwise."""
+    tf = F.col("tf").cast("double")
+    if important_weight == 1.0:
+        return tf
+    return F.when(F.col("important"),
+                  tf * F.lit(float(important_weight))).otherwise(tf)
+
+
+def _bm25_partial(w, tf, dl, avgdl: float):
+    """One posting's BM25 contribution as a Spark column,
+    ``w · ((tf·(K1+1)) / (tf + K1·(1−B+B·dl/avgdl)))`` — the exact
+    association score_segments evaluates in numpy (impact first, then
+    the weight), so every Spark ranker's partials are bitwise the
+    kernel's."""
+    return w * ((tf * (K1 + 1))
+                / (tf + K1 * (1 - B + B * dl / F.lit(avgdl))))
+
+
+def _term_ordered_sum(key: str = "term"):
+    """Per-doc sum of `partial` folded in `key` order — score_segments'
+    TERM-ORDERED fold (rows sorted by (segment, term)), written as an
+    aggregate over the sorted (key, partial) structs. Keys are unique per
+    doc, so the order is total and the sum is bitwise reproducible across
+    jobs and partitionings (a hash-agg sum merges in shuffle-fetch
+    order). Per-doc group size is ≤ |query terms|."""
+    return F.aggregate(F.array_sort(F.collect_list(F.struct(key, "partial"))),
+                       F.lit(0.0), lambda acc, x: acc + x["partial"])
 
 
 def bm25_score_rows(posting_rows: DataFrame, iw: dict[str, float],
                     avgdl: float,
-                    important_weight: float = 1.0,
-                    deterministic: bool = False) -> DataFrame:
+                    important_weight: float = 1.0) -> DataFrame:
     """The scoring tail of bm25_scores with the per-term weights (idf ×
     bag multiplicity) supplied by the CALLER — the single-index path
     derives them from the shard's own dictionary; the federated path
     (operators/federate.py) derives them from GLOBAL df/N so shard-local
     statistics never leak into the score.
 
-    ``deterministic=True`` folds each doc's per-term partials in TERM
-    order (array_sort over the collected (term, partial) structs) instead
-    of the plain hash-agg ``F.sum``, whose merge order follows shuffle
-    fetch order and can move a double sum by 1 ulp between jobs. Bitwise-
-    reproducible scores are what makes an exact-equality cursor sound —
-    the search_after path requires it; every other ranker keeps the plain
-    sum (one hash agg, no collect_list) because they never compare a
-    recomputed score against a stored float. Per-doc group size is
-    ≤ |query terms|, so the fold costs a few adds per doc either way."""
+    Partials are _bm25_partial and each doc's sum is _term_ordered_sum, so
+    a score here equals the colocated / resident kernel's bit for bit:
+    every route on one index returns the same floats, and a recomputed
+    score can be compared against a stored one with exact equality (the
+    search_after cursor)."""
     if not iw:
         return empty_frame(posting_rows.sparkSession,
                            "doc_id long, score double")
     m = _term_weight_map(iw)
-    tf_eff = F.col("tf").cast("double")
-    if important_weight != 1.0:
-        tf_eff = F.when(F.col("important"),
-                        tf_eff * F.lit(float(important_weight))) \
-            .otherwise(tf_eff)
     scored = posting_rows.withColumn(
-        "partial",
-        m[F.col("term")] * (tf_eff * (K1 + 1)) /
-        (tf_eff + K1 * (1 - B + B * F.col("dl") / F.lit(avgdl)))
+        "partial", _bm25_partial(m[F.col("term")],
+                                 _effective_tf(important_weight),
+                                 F.col("dl"), avgdl)
     ).filter(F.col("partial").isNotNull())
-    if deterministic:
-        # (term, doc) rows are unique post-merge, so term order is a
-        # total order and the left fold is bitwise reproducible.
-        return scored.groupBy("doc_id").agg(
-            F.aggregate(
-                F.array_sort(
-                    F.collect_list(F.struct("term", "partial"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["partial"]).alias("score"))
-    return scored.groupBy("doc_id").agg(F.sum("partial").alias("score"))
+    return scored.groupBy("doc_id").agg(_term_ordered_sum().alias("score"))
 
 
 def _bm25_scored_tokens(spark: SparkSession, index: dict,
                         q_terms: list[str],
-                        important_weight: float = 1.0,
-                        deterministic: bool = False) -> DataFrame:
+                        important_weight: float = 1.0) -> DataFrame:
     """Shared prune → decode → score prefix for every token-level BM25
     variant (plain, --fuzzy, --not, --must, wildcard, --boost-important) —
     one place for the idf-cache / bag-multiplicity behavior."""
@@ -339,58 +358,27 @@ def _bm25_scored_tokens(spark: SparkSession, index: dict,
     return bm25_scores(rows, index["terms"],
                        float(index["stats"]["avgdl"]), q_terms,
                        index.get("idf_cache"),
-                       important_weight=important_weight,
-                       deterministic=deterministic)
+                       important_weight=important_weight)
 
 
-def bm25_topk_tokens(spark: SparkSession, index: dict,
-                     q_terms: list[str], k: int = 10,
-                     important_weight: float = 1.0) -> DataFrame:
-    """The post-analysis tail of `bm25_topk`: prune → decode → score →
-    TakeOrderedAndProject top-k over an already-analyzed term bag. Shared
-    by the default and --fuzzy CLI paths so token rewriting (typo
-    correction) composes with EXACTLY the scoring/tie-break/empty-query
-    behavior the default path has — any change here changes both.
-    `important_weight` is the BM25F-lite boost (see bm25_scores); 1.0
-    (default) leaves the plan byte-identical to the unweighted ranker."""
-    scores = _bm25_scored_tokens(spark, index, q_terms,
-                                 important_weight=important_weight)
-    return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-def bm25_topk_after(spark: SparkSession, index: dict,
-                    q_terms: list[str], k: int = 10,
-                    after: tuple[float, int] | None = None,
-                    important_weight: float = 1.0) -> DataFrame:
-    """Stateless deep pagination (the Elasticsearch `search_after`
-    pattern): page N+1 = the top-k rows STRICTLY AFTER the cursor — the
-    (score, doc_id) of page N's last row — in the ranking order
-    (score DESC, doc_id ASC). after=None is page 1 and is byte-identical
-    to bm25_topk_tokens (pinned by test).
+def _topk_after(scores: DataFrame, k: int,
+                after: tuple[float, int] | None = None) -> DataFrame:
+    """The top-k of (doc_id, score) rows in ranking order (score DESC,
+    doc_id ASC) — with a search_after cursor, the top-k STRICTLY AFTER
+    it: the (score, doc_id) of the previous page's last row.
 
     The reference paginates by OFFSET (Q8/Q9 two-stage top-k + LIMIT/
     OFFSET in the serving SQL, QueryResultsFetcher.java) — fine at 10
     results a page on one box, but offset-k at page P sorts and discards
-    P·k rows: page 1000 costs 1000× page 1 and the driver-side skip grows
-    without bound. search_after instead filters the scored rows to
-    (score, doc_id) beyond the cursor BEFORE the TakeOrderedAndProject,
-    so EVERY page costs exactly one pruned probe + one top-k, independent
-    of depth — the only pagination that survives a 10^12-doc corpus.
+    P·k rows: page 1000 costs 1000× page 1. The cursor instead filters
+    the scored rows BEFORE the TakeOrderedAndProject, so EVERY page costs
+    one pruned probe + one top-k, independent of depth (the
+    Elasticsearch `search_after` pattern).
 
-    The cursor compares a RECOMPUTED score against page N's stored float
-    with exact equality, so this path scores with deterministic=True
-    (term-ordered fold, bm25_score_rows): a plain hash-agg F.sum merges
-    per-term partials in shuffle-fetch order, and a 1-ulp drift between
-    the page-N and page-N+1 jobs would make a boundary-tied doc vanish
-    (recomputes above s0: fails both branches) or duplicate (recomputes
-    below: passes score<s0). With bitwise-reproducible scores the strict
-    (score <, or ==score and doc_id >) composite comparison paginates
-    ties without loss or duplication; page 1 stays rank-identical to
-    bm25_topk_tokens with scores equal up to summation order (pinned at
-    9 decimals by test)."""
-    scores = _bm25_scored_tokens(spark, index, q_terms,
-                                 important_weight=important_weight,
-                                 deterministic=True)
+    The filter compares a RECOMPUTED score with exact equality, which is
+    sound because every route scores bit-identically (bm25_score_rows):
+    the strict (score <, or == score and doc_id >) comparison paginates
+    ties without loss or duplication, from a cursor any route served."""
     if after is not None:
         s0, d0 = float(after[0]), int(after[1])
         scores = scores.filter(
@@ -400,61 +388,35 @@ def bm25_topk_after(spark: SparkSession, index: dict,
     return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
+def bm25_topk_tokens(spark: SparkSession, index: dict,
+                     q_terms: list[str], k: int = 10,
+                     important_weight: float = 1.0,
+                     after: tuple[float, int] | None = None) -> DataFrame:
+    """The post-analysis tail of `bm25_topk`: prune → decode → score →
+    TakeOrderedAndProject top-k over an already-analyzed term bag. Shared
+    by the default and --fuzzy CLI paths so token rewriting (typo
+    correction) composes with EXACTLY the scoring/tie-break/empty-query
+    behavior the default path has — any change here changes both.
+    `important_weight` is the BM25F-lite boost (see bm25_scores); 1.0
+    (default) leaves the plan byte-identical to the unweighted ranker.
+    `after` is a search_after cursor (_topk_after); None is page 1."""
+    scores = _bm25_scored_tokens(spark, index, q_terms,
+                                 important_weight=important_weight)
+    return _topk_after(scores, k, after)
+
+
 def bm25_topk(spark: SparkSession, index: dict, query: str, k: int = 10) -> DataFrame:
     """Analyze → prune → decode → score → TakeOrderedAndProject top-k.
     Ties break by doc_id ASC (documented deviation, SURVEY.md §7 risk 2)."""
     return bm25_topk_tokens(spark, index, query_bag(query), k)
 
 
-def bm25_scores_batch(posting_rows: DataFrame, terms_df: DataFrame,
-                      avgdl: float, term_bags: dict[str, list[str]],
-                      idf_cache: dict | None = None) -> DataFrame:
-    """(query_id, doc_id, score) — BM25 for MANY queries in one pass.
-
-    `posting_rows` must cover the UNION of all bags' terms (one decode of
-    each shared hot term serves every query that uses it). Per-query
-    weights (idf × multiplicity, bag semantics as bm25_scores) form a tiny
-    (query_id, term, w) DataFrame broadcast INTO the decoded rows — the
-    batch analog of the single-query literal map. One shuffle on
-    (query_id, doc_id) scores everything."""
-    union_terms = sorted({t for bag in term_bags.values() for t in bag})
-    idf = query_idf(terms_df, union_terms, "idf_bm25", idf_cache)
-    return bm25_score_rows_batch(posting_rows,
-                                 batch_term_weights(term_bags, idf), avgdl)
-
-
 def batch_term_weights(term_bags: dict[str, list[str]],
                        idf: dict[str, float]) -> list[tuple]:
-    """(query_id, term, idf×multiplicity) rows for a batch — bag
-    semantics per query; terms absent from `idf` (df=0) drop."""
-    qrows = []
-    for qid, bag in term_bags.items():
-        for term, mult in pd.Series(bag).value_counts().items():
-            if term in idf:
-                qrows.append((qid, term, float(idf[term]) * float(mult)))
-    return qrows
-
-
-def bm25_score_rows_batch(posting_rows: DataFrame, qrows: list[tuple],
-                          avgdl: float) -> DataFrame:
-    """The batch scoring tail with the per-(query, term) weights supplied
-    by the CALLER — single-index callers derive them from the shard
-    dictionary (bm25_scores_batch); the federated path derives them from
-    global df/N (operators/federate.py). One broadcast of the tiny
-    weights table, one (query_id, doc_id) aggregation."""
-    spark = posting_rows.sparkSession
-    if not qrows:
-        return empty_frame(spark,
-                           "query_id string, doc_id long, score double")
-    qdf = spark.createDataFrame(qrows, "query_id string, term string, "
-                                       "w double")
-    return (posting_rows.join(F.broadcast(qdf), "term")
-            .withColumn("partial",
-                        F.col("w") * (F.col("tf") * (K1 + 1)) /
-                        (F.col("tf") + K1 * (1 - B + B * F.col("dl")
-                                             / F.lit(avgdl))))
-            .groupBy("query_id", "doc_id")
-            .agg(F.sum("partial").alias("score")))
+    """(query_id, term, idf×multiplicity) rows for a batch — _bag_weights
+    per query; terms absent from `idf` (df=0) drop."""
+    return [(qid, t, w) for qid, bag in term_bags.items()
+            for t, w in _bag_weights(bag, idf).items()]
 
 
 def query_bag(query: str) -> list[str]:
@@ -470,31 +432,6 @@ def query_bag(query: str) -> list[str]:
 def _analyze_bags(queries: dict[str, str]) -> dict[str, list[str]]:
     bags = {qid: query_bag(qtext) for qid, qtext in queries.items()}
     return {qid: bag for qid, bag in bags.items() if bag}
-
-
-def bm25_topk_batch_rowjoin(spark: SparkSession, index: dict,
-                            queries: dict[str, str], k: int = 10) -> DataFrame:
-    """The round-3 batch plan, kept for rank-identity tests and as the
-    shape reference: one decode of the union terms, broadcast of the
-    per-query weights fanned onto every decoded row, one
-    (query_id, doc_id) aggregation, one per-query window rank. Correct at
-    any scale, but the fan-out rows flow through TWO full exchanges —
-    measured 1.06 s/q at 2.4M docs (BENCH_SERVE r4), only 1.6× better
-    than solo. `bm25_topk_batch` (colocated kernel) replaces it."""
-    bags = _analyze_bags(queries)
-    if not bags:
-        return empty_frame(
-            spark, "query_id string, doc_id long, score double, rank int")
-    union_terms = sorted({t for bag in bags.values() for t in bag})
-    rows = query_term_postings(index["postings"], union_terms,
-                               int(index["stats"]["n_buckets"]))
-    scores = bm25_scores_batch(rows, index["terms"],
-                               float(index["stats"]["avgdl"]), bags,
-                               index.get("idf_cache"))
-    wnd = Window.partitionBy("query_id").orderBy(F.desc("score"),
-                                                 F.asc("doc_id"))
-    return (scores.withColumn("rank", F.row_number().over(wnd))
-            .filter(F.col("rank") <= k))
 
 
 # driver-side cap on queries scored per colocated job: the kernel's dense
@@ -607,16 +544,16 @@ def bm25_scores_batch_colocated(index: dict, bags: dict[str, list[str]],
     segment. The caller reduces n_segments × |Q| × k candidate rows to
     the global per-query top-k (tiny).
 
-    Versus the row-join plan this removes BOTH full-row exchanges (the
-    (query_id, doc_id) aggregation of the weight-fanned decode and the
-    per-query window): per-doc accumulation happens in numpy inside the
+    Versus a row-join plan (weights fanned onto decoded rows, one
+    (query_id, doc_id) aggregation) there is no decoded-row exchange at
+    all: per-doc accumulation happens in numpy inside the
     partition that already holds ALL of the doc's query-term postings —
     segments are doc-id-range aligned (build.py: segment = doc_id >>
     seg_bits), so a doc's postings for every term co-locate after the one
     bytes-shuffle. Accumulation iterates rows sorted (segment, term), so
     each doc's partial sum is a TERM-ORDERED fold — bitwise reproducible
-    across runs and partitionings (same contract as the pagination
-    fold)."""
+    across runs and partitionings, and bitwise equal to the Spark
+    rankers' _term_ordered_sum."""
     stats = index["stats"]
     if avgdl is None:
         avgdl = float(stats["avgdl"])
@@ -654,9 +591,8 @@ def bm25_topk_colocated_tokens(spark: SparkSession, index: dict,
     contract as bm25_topk_tokens (score DESC, doc_id ASC, k rows) with
     the per-doc aggregation folded into the decode partition — no
     decoded-row exchange at all. The candidate set entering the final
-    TakeOrderedAndProject is n_segments × k rows. Scores match
-    bm25_topk_tokens up to summation order (term-ordered numpy fold vs
-    hash-agg; pinned at 9 decimals by test)."""
+    TakeOrderedAndProject is n_segments × k rows. Scores equal
+    bm25_topk_tokens' bit for bit (pinned by test)."""
     if not q_terms:
         return empty_frame(spark, "doc_id long, score double")
     cand = bm25_scores_batch_colocated(index, {"q": list(q_terms)}, k,
@@ -676,8 +612,8 @@ def bm25_topk_batch(spark: SparkSession, index: dict,
     into the kernel as a closure, and per-doc aggregation never leaves
     numpy. Batches past BATCH_CHUNK_QUERIES split into unioned chunk
     plans to bound the kernel's dense accumulator. Ties break by doc_id
-    ASC per query (same discipline as bm25_topk); rank-identity with the
-    row-join plan is pinned by test."""
+    ASC per query (same discipline as bm25_topk); equality with per-query
+    bm25_topk_tokens is pinned by test."""
     bags = _analyze_bags(queries)
     if not bags:
         return empty_frame(
@@ -801,33 +737,18 @@ def _ws_release(spark: SparkSession) -> None:
 # cold at 2.4M: 0.7-1.0 vs 1.3-4.7 s) — the plan it removes is the
 # decoded-row exchange, which grows with df — so the floor only guards
 # the degenerate tiny-index case where the extra bytes-shuffle stage is
-# the whole cost. Env-overridable like the fuzzy crossover.
+# the whole cost. Both routes return the same floats, so the choice only
+# moves speed.
 SOLO_COLOCATED_MIN_DOCS = 1000
-SOLO_ROUTES = ("plain", "colocated")
 
 
 def route_solo(stats: dict) -> str:
     """'plain' or 'colocated' for a solo BM25 query on Spark, from the
     index's STORED doc count (shared by the warm Searcher's fallback and
-    the cold CLI default path; SPIDEY_SOLO_ROUTE forces, SPIDEY_COLO_MIN_DOCS
-    moves the floor — a malformed value of either raises ValueError).
-    Both routes are rank-identical (pinned by test)."""
-    import os
-    env = os.environ.get("SPIDEY_SOLO_ROUTE")
-    if env:
-        if env not in SOLO_ROUTES:
-            raise ValueError(f"SPIDEY_SOLO_ROUTE must be one of "
-                             f"{SOLO_ROUTES}, got {env!r}")
-        return env
-    raw = os.environ.get("SPIDEY_COLO_MIN_DOCS")
-    floor = SOLO_COLOCATED_MIN_DOCS
-    if raw is not None:
-        try:
-            floor = int(raw)
-        except ValueError:
-            raise ValueError(f"SPIDEY_COLO_MIN_DOCS must be an integer doc "
-                             f"count, got {raw!r}") from None
-    return "colocated" if int(stats["n_docs"]) >= floor else "plain"
+    the cold CLI default path). Both routes are bit-identical (pinned by
+    test)."""
+    return ("colocated" if int(stats["n_docs"]) >= SOLO_COLOCATED_MIN_DOCS
+            else "plain")
 
 
 class Searcher:
@@ -975,27 +896,17 @@ class Searcher:
             else:
                 self.index["postings"].count()
 
-    def _solo_route(self) -> str:
-        return route_solo(self.index["stats"])
-
-    def bm25(self, query: str, k: int = 10,
-             route: str | None = None) -> DataFrame:
-        """Warm solo BM25. `route` None scores in-process when the warm
-        kept the postings resident, else on the Spark route route_solo
-        picks from the index's stored doc count; "plain" or "colocated"
-        force that Spark route. All are rank-identical (plain vs
-        colocated pinned at 9 decimals by test; resident equals colocated
-        bit for bit)."""
-        if route is None and self._resident is not None:
+    def bm25(self, query: str, k: int = 10) -> DataFrame:
+        """Warm solo BM25: scored in-process when the warm kept the
+        postings resident, else on the Spark route route_solo picks from
+        the index's stored doc count. All three return the same floats
+        (pinned by test)."""
+        if self._resident is not None:
             pdf = bm25_topk_resident(self._resident, self.index,
                                      {"q": query_bag(query)}, k)
             return local_frame(self.spark, pdf[["doc_id", "score"]],
                                TOPK_SCHEMA)
-        r = route or self._solo_route()
-        if r not in SOLO_ROUTES:
-            raise ValueError(f"unknown route {r!r}; expected one of "
-                             f"{SOLO_ROUTES}")
-        if r == "colocated":
+        if route_solo(self.index["stats"]) == "colocated":
             return self.bm25_colocated(query, k)
         return bm25_topk(self.spark, self.index, query, k)
 
@@ -1078,16 +989,14 @@ class Searcher:
               after: tuple[float, int] | None = None,
               important_weight: float = 1.0) -> DataFrame:
         """search_after pagination over the warmed index — after=None is
-        page 1 (serve pagination sessions from HERE, not from bm25():
-        the cursor filter recomputes the deterministic fold score and
-        compares the cursor with exact equality, and the plain ranker's
-        hash-agg sum can sit 1 ulp off). Same operator the CLI's
-        `--after start`/`--after SCORE:DOC_ID` path runs; the warmed
-        dictionary and postings caches serve every page, so deep pages
-        cost exactly what page 1 costs."""
-        return bm25_topk_after(self.spark, self.index, q_terms, k=k,
-                               after=after,
-                               important_weight=important_weight)
+        page 1. A cursor is valid from any page of the same index, whichever
+        route served it (bm25(), bm25_batch(), the CLI): every route
+        scores bit-identically. Same operator the CLI's `--after` path
+        runs; the warmed dictionary and postings caches serve every page,
+        so deep pages cost exactly what page 1 costs."""
+        return bm25_topk_tokens(self.spark, self.index, q_terms, k=k,
+                                important_weight=important_weight,
+                                after=after)
 
     def close(self) -> None:
         # unpersist ONLY what this instance cached — never a postings
@@ -1680,9 +1589,8 @@ def bm25f_topk_tokens(spark: SparkSession, index: dict,
     if important_weight <= 0:
         raise ValueError(
             f"important_weight must be > 0, got {important_weight}")
-    scores = _bm25_scored_tokens(spark, index, q_terms,
-                                 important_weight=important_weight)
-    return scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
+    return bm25_topk_tokens(spark, index, q_terms, k,
+                            important_weight=important_weight)
 
 
 def filter_doc_ids(docs: DataFrame, filters: dict[str, object]) -> DataFrame:
@@ -1823,17 +1731,20 @@ def bm25_synonym_topk(spark: SparkSession, index: dict,
     [fetch, get, retrieve] scores tf=3 once — NOT three inflated
     independent terms, which is what naive bag expansion does and why
     Lucene added the blended query. Singleton groups reproduce plain
-    BM25 exactly (pinned by test).
+    BM25 bit for bit (pinned by test).
 
     Scale shape: one partition-pruned probe + decode of the UNION of all
     members, a term→group literal map (no join), then two df-bounded
-    hash aggs — (doc_id, gid) to blend member tfs, (doc_id) to sum group
-    scores. Groups with no dictionary member drop (df=0 discipline);
-    partially-known groups blend over the known members. A term may
-    appear in only one group — overlapping groups would make the blend
-    ambiguous, so they raise."""
-    groups = [list(dict.fromkeys(t for t in g if t)) for g in groups]
-    groups = [g for g in groups if g]
+    aggs — (doc_id, gid) to blend member tfs, (doc_id) to fold group
+    scores in gid order. Groups with no dictionary member drop (df=0
+    discipline); partially-known groups blend over the known members. A
+    term may appear in only one group — overlapping groups would make the
+    blend ambiguous, so they raise."""
+    # groups numbered in order of their least member: the score fold
+    # runs in gid order, so singleton groups fold in the plain ranker's
+    # term order and reproduce its floats bit for bit
+    groups = sorted((list(dict.fromkeys(t for t in g if t))
+                     for g in groups if any(g)), key=min)
     if not groups:
         return empty_frame(spark, "doc_id long, score double")
     term_gid: dict[str, int] = {}
@@ -1868,11 +1779,10 @@ def bm25_synonym_topk(spark: SparkSession, index: dict,
                .agg(F.sum("tf").cast("double").alias("tf"),
                     F.max("dl").alias("dl")))
     scored = blended.withColumn(
-        "partial",
-        wmap[F.col("gid")] * (F.col("tf") * (K1 + 1)) /
-        (F.col("tf") + K1 * (1 - B + B * F.col("dl") / F.lit(avgdl))))
+        "partial", _bm25_partial(wmap[F.col("gid")], F.col("tf"),
+                                 F.col("dl"), avgdl))
     return (scored.groupBy("doc_id")
-            .agg(F.sum("partial").alias("score"))
+            .agg(_term_ordered_sum("gid").alias("score"))
             .orderBy(F.desc("score"), F.asc("doc_id")).limit(k))
 
 
@@ -1888,10 +1798,10 @@ def bm25_explain_topk(spark: SparkSession, index: dict,
     ranker used), ``tf_eff`` = the EFFECTIVE tf the formula consumed
     (tf·important_weight on important postings — without it a boosted
     row's (w, tf, dl) could not reproduce its own partial), ``partial``
-    = that term's BM25 contribution, and Σ partial over a doc's rows ==
-    its score EXACTLY (same expression, same plan shape — explanation is
-    derived from the ranker's own decoded rows, never a parallel
-    reimplementation that could drift).
+    = that term's BM25 contribution, and the term-ordered sum of a doc's
+    partials IS its score, bit for bit the ranker's (same _bm25_partial,
+    same _term_ordered_sum — explanation is derived from the ranker's own
+    decoded rows, never a parallel reimplementation that could drift).
 
     Cost: TWO passes over the same pruned decode (the candidate top-k
     pass, then the explanation join — the parity two-stage discipline,
@@ -1913,19 +1823,14 @@ def bm25_explain_topk(spark: SparkSession, index: dict,
     rows = query_term_postings(index["postings"], q_terms,
                                int(index["stats"]["n_buckets"]))
     m = _term_weight_map(iw)
-    tf_eff = F.col("tf").cast("double")
-    if important_weight != 1.0:
-        tf_eff = F.when(F.col("important"),
-                        tf_eff * F.lit(float(important_weight))) \
-            .otherwise(tf_eff)
-    detailed = rows.withColumn("tf_eff", tf_eff).withColumn(
-        "partial",
-        m[F.col("term")] * (F.col("tf_eff") * (K1 + 1)) /
-        (F.col("tf_eff") + K1 * (1 - B + B * F.col("dl") / F.lit(avgdl)))
+    detailed = rows.withColumn(
+        "tf_eff", _effective_tf(important_weight)).withColumn(
+        "partial", _bm25_partial(m[F.col("term")], F.col("tf_eff"),
+                                 F.col("dl"), avgdl)
     ).filter(F.col("partial").isNotNull()) \
         .withColumn("w", m[F.col("term")])
     topk = (detailed.groupBy("doc_id")
-            .agg(F.sum("partial").alias("score"))
+            .agg(_term_ordered_sum().alias("score"))
             .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
             .withColumn("rank", F.row_number().over(
                 Window.orderBy(F.desc("score"), F.asc("doc_id"))))

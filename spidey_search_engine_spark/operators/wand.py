@@ -53,9 +53,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.analysis import analyze_query
 from .build import B, K1, decode_segment_nopos
-from .search import EXPLODE_SCHEMA, bm25_scores
+from .search import EXPLODE_SCHEMA, bm25_scores, empty_frame, query_bag
 from .search import _pruned_postings as _pruned_meta
 
 
@@ -74,7 +73,7 @@ def query_range_bounds(index: dict, q_terms: list[str],
     iw = {t: idf[t] * float(weights[t]) for t in idf}
     if not iw:
         spark = SparkSession.getActiveSession()
-        return spark.createDataFrame([], "rng long, ub double")
+        return empty_frame(spark, "rng long, ub double")
     m = _term_weight_map(iw)
     # impact upper bound reconstructed from avgdl-independent block stats:
     # tf/(tf+k1(1-b+b·dl/avgdl)) is increasing in tf, decreasing in dl, so
@@ -217,7 +216,7 @@ def bm25_topk_pruned_terms(spark: SparkSession, index: dict,
     this; on a uniform-score corpus the fraction is ~1.0 and pruning would
     only add overhead, measured +4–8 s per hot query at 2.4M docs)."""
     if not q_terms:
-        return spark.createDataFrame([], "doc_id long, score double")
+        return empty_frame(spark, "doc_id long, score double")
     avgdl = float(index["stats"]["avgdl"])
 
     def exhaustive():
@@ -248,7 +247,7 @@ def bm25_topk_pruned_terms(spark: SparkSession, index: dict,
     head = bounds.limit(max_mask_ranges + 1).collect()
     if len(head) <= max_mask_ranges:
         if not head:
-            return spark.createDataFrame([], "doc_id long, score double")
+            return empty_frame(spark, "doc_id long, score double")
         if len(head) <= probe_ranges:
             return exhaustive()  # probing would already score every range
         ranked = sorted(head, key=lambda r: (-r["ub"], r["rng"]))
@@ -297,8 +296,6 @@ def bm25_topk_pruned(spark: SparkSession, index: dict, query: str,
                      prune_frac: float = 0.5) -> DataFrame:
     """Top-k BM25 with block-max range pruning; provably identical to
     search.bm25_topk (no false dismissals)."""
-    q_terms, phrases = analyze_query(query)
-    for p in phrases:
-        q_terms.extend(p)
-    return bm25_topk_pruned_terms(spark, index, q_terms, k, range_bits,
-                                  probe_ranges, max_mask_ranges, prune_frac)
+    return bm25_topk_pruned_terms(spark, index, query_bag(query), k,
+                                  range_bits, probe_ranges, max_mask_ranges,
+                                  prune_frac)

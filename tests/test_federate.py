@@ -330,23 +330,23 @@ def test_federated_search_after(spark, fed):
     cursor. 3-term bag so summation ORDER actually matters; exact
     floats, no rounding."""
     from spidey_search_engine_spark.operators.federate import (
-        FederatedSearcher, federated_bm25_topk_after)
+        FederatedSearcher, federated_bm25_topk_tokens)
     from spidey_search_engine_spark.operators.search import \
-        bm25_topk_after
+        bm25_topk_tokens
     bag = ["merge", "sort", "hash"]
     exact = [(r["doc_id"], r["score"]) for r in
-             bm25_topk_after(spark, fed["all"], bag, k=18).collect()]
-    fp1 = federated_bm25_topk_after(spark, fed["shards"], bag,
-                                    k=6).collect()
+             bm25_topk_tokens(spark, fed["all"], bag, k=18).collect()]
+    fp1 = federated_bm25_topk_tokens(spark, fed["shards"], bag,
+                                     k=6).collect()
     pages = [(r["doc_id"], r["score"]) for r in fp1]
     cur = (fp1[-1]["score"], fp1[-1]["doc_id"])
     # page 2 from the MONOLITHIC path with the FEDERATED cursor — the
     # cross-path validity the bitwise invariant buys
-    mp2 = bm25_topk_after(spark, fed["all"], bag, k=6,
-                          after=cur).collect()
+    mp2 = bm25_topk_tokens(spark, fed["all"], bag, k=6,
+                           after=cur).collect()
     pages += [(r["doc_id"], r["score"]) for r in mp2]
     # page 3 federated again, cursor from the monolithic page
-    fp3 = federated_bm25_topk_after(
+    fp3 = federated_bm25_topk_tokens(
         spark, fed["shards"], bag, k=6,
         after=(mp2[-1]["score"], mp2[-1]["doc_id"])).collect()
     pages += [(r["doc_id"], r["score"]) for r in fp3]

@@ -113,3 +113,23 @@ def test_ranking_eval_k_cutoff_and_guard(spark):
         (31 / math.log2(4)) / (31 / math.log2(2)), abs=1e-12)
     with pytest.raises(ValueError):
         ranking_eval(results, judgments, k=0)
+
+
+def test_ranking_eval_duplicate_judgment(spark):
+    """A (query, doc) pair judged twice counts once, at its max grade:
+    the duplicate row must not fan out the join (dcg, n_rel) or take
+    two slots of the ideal page (idcg)."""
+    from spidey_search_engine_spark.operators.rankeval import ranking_eval
+    results = spark.createDataFrame(
+        [("q", 1, 1), ("q", 2, 2)],
+        "query_id string, doc_id long, rank int")
+    judgments = spark.createDataFrame(
+        [("q", 1, 1), ("q", 1, 2), ("q", 2, 1)],
+        "query_id string, doc_id long, grade int")
+    row = ranking_eval(results, judgments, k=2).collect()[0]
+    # doc 1 at grade 2, doc 2 at grade 1: served in the ideal order
+    assert (row["ndcg"], row["mrr"], row["precision"]) == \
+        (pytest.approx(1.0, abs=1e-12), 1.0, 1.0)
+    deduped = spark.createDataFrame(
+        [("q", 1, 2), ("q", 2, 1)], "query_id string, doc_id long, grade int")
+    assert ranking_eval(results, deduped, k=2).collect() == [row]

@@ -206,3 +206,20 @@ def test_index_diff_and_cli_compare(spark, tmp_path, mono, capsys):
     assert json.loads(capsys.readouterr().out.strip()
                       .splitlines()[-1])["equal"] is True
     assert main(["compare", "--a", mono_dir, "--b", other_dir]) == 1
+
+
+def test_reshard_cli_rejects_bad_ngram_flags(tmp_path, capsys):
+    """`reshard` validates its n-gram flags the way `build` does, before
+    any work: an n-gram projection needs the wildcard projections it
+    rides with, and a gram narrower than 2 cannot serve an infix."""
+    from spidey_search_engine_spark.cli import main
+    base = ["reshard", "--input", str(tmp_path / "in"),
+            "--output", str(tmp_path / "out"), "--shards", "2"]
+    for extra, msg in ((["--ngram-index", "--no-wildcard-index"],
+                        "conflicts with --no-wildcard-index"),
+                       (["--ngram-index", "--ngram-size", "1"],
+                        "--ngram-size must be >= 2")):
+        with pytest.raises(SystemExit):
+            main(base + extra)
+        assert msg in capsys.readouterr().err
+    assert not (tmp_path / "out").exists()

@@ -56,7 +56,7 @@ def test_resident_equals_colocated_exactly(spark, searcher):
     for q in [_hot_term(searcher)] + QUERIES:
         res = _rows(searcher.bm25(q, k=10))
         # exact floats, not rounded: the Spark colocated route
-        assert res == _rows(searcher.bm25(q, k=10, route="colocated")), q
+        assert res == _rows(searcher.bm25_colocated(q, k=10)), q
         assert bool(res) == (q not in ("", "zzz_unknown_term")), q
 
 
@@ -90,19 +90,17 @@ def test_resident_batch_equals_spark_batch(spark, searcher):
 def test_over_budget_falls_back_to_spark(spark, index, searcher,
                                          monkeypatch):
     from spidey_search_engine_spark.operators.search import (
-        Searcher, bm25_topk_batch, route_solo)
+        Searcher, bm25_topk, bm25_topk_batch)
     resident = {q: _rows(searcher.bm25(q, k=8))
                 for q in ["merge sort lookup", "merge merge sort"]}
     monkeypatch.setattr(Searcher, "RESIDENT_MAX_POSTINGS", 0)
     with Searcher(spark, index, cache_postings=True, coalesce_to=4) as s:
         assert s._resident is None
         for q, want in resident.items():
-            fallback = s.bm25(q, k=8)
-            assert _rows(fallback) == _rows(
-                s.bm25(q, k=8, route=route_solo(s.index["stats"])))
-            # plain (hash-agg) vs colocated fold: 9-decimal contract
-            assert [(d, round(x, 9)) for d, x in _rows(fallback)] == \
-                [(d, round(x, 9)) for d, x in want]
+            # the 400-doc index routes plain; exact floats on every route
+            fallback = _rows(s.bm25(q, k=8))
+            assert fallback == _rows(bm25_topk(spark, s.index, q, 8))
+            assert fallback == _rows(s.bm25_colocated(q, k=8)) == want
         queries = {"a": "merge sort lookup", "b": "hash join scan"}
         assert sorted(s.bm25_batch(queries, 8).collect()) == \
             sorted(bm25_topk_batch(spark, s.index, queries, 8).collect())
@@ -142,22 +140,15 @@ def test_close_drops_resident_postings(spark, index):
     assert s._resident is None
 
 
-def test_route_inputs_validated(searcher, monkeypatch):
-    from spidey_search_engine_spark.operators.search import route_solo
-    with pytest.raises(ValueError, match="coloc"):
-        searcher.bm25("merge sort", route="coloc")
-    monkeypatch.setenv("SPIDEY_SOLO_ROUTE", "coloc")
-    with pytest.raises(ValueError, match="SPIDEY_SOLO_ROUTE"):
-        route_solo(searcher.index["stats"])
-    monkeypatch.delenv("SPIDEY_SOLO_ROUTE")
-    monkeypatch.setenv("SPIDEY_COLO_MIN_DOCS", "1k")
-    with pytest.raises(ValueError, match="SPIDEY_COLO_MIN_DOCS"):
-        route_solo(searcher.index["stats"])
-
-
 def test_empty_frame_runs_no_task(spark):
+    from spidey_search_engine_spark.operators.pagerank import pagerank
     from spidey_search_engine_spark.operators.search import empty_frame
     df = empty_frame(spark, "doc_id long, score double")
     assert df.columns == ["doc_id", "score"]
-    rows, _, tasks = _jobs_and_tasks(spark, "empty-frame", df.collect)
-    assert rows == [] and tasks == 0
+    # an operator's empty answer (no docs to rank) takes the same path
+    ranks = pagerank(spark, empty_frame(spark, "src long, dst long"), 0)
+    assert ranks.columns == ["doc_id", "page_rank"]
+    for i, frame in enumerate((df, ranks)):
+        rows, _, tasks = _jobs_and_tasks(spark, f"empty-frame-{i}",
+                                         frame.collect)
+        assert rows == [] and tasks == 0

@@ -189,13 +189,13 @@ def test_searcher_matches_cold_paths(spark, index):
                   s.synonym([["merg", "sort"]], k=8).collect()]
         assert warm_s == cold_s and warm_s
         # warm pagination: Searcher.after page 1 + cursor page 2 stitch
-        # to exactly the cold pagination path (bitwise — the fold makes
-        # the cursor handoff reproducible across the warm/cold caches)
+        # to exactly the cold ranker (bitwise — the fold makes the
+        # cursor handoff reproducible across the warm/cold caches)
         from spidey_search_engine_spark.operators.search import \
-            bm25_topk_after
+            bm25_topk_tokens
         cold_a = [(r["doc_id"], r["score"]) for r in
-                  bm25_topk_after(spark, index, q_terms,
-                                  k=16).collect()]
+                  bm25_topk_tokens(spark, index, q_terms,
+                                   k=16).collect()]
         wp1 = s.after(q_terms, k=8).collect()
         wcur = (wp1[-1]["score"], wp1[-1]["doc_id"])
         wp2 = s.after(q_terms, k=8, after=wcur).collect()
@@ -352,37 +352,41 @@ def test_bm25_batch_equals_per_query(spark, index):
         s.close()
 
 
+def _term_ordered_sums(rows):
+    """doc_id → its explain partials summed in term order (the rankers'
+    fold), from 0.0 like the kernel's accumulator."""
+    out: dict[int, float] = {}
+    for r in sorted(rows, key=lambda r: (r["doc_id"], r["term"])):
+        out[r["doc_id"]] = out.get(r["doc_id"], 0.0) + r["partial"]
+    return out
+
+
 def test_bm25_explain(spark, index):
-    """Explain rows: partials sum to the ranker's score per doc, ranks
-    and doc set equal the plain top-k, and the boosted variant explains
-    the boosted ranker."""
+    """Explain rows: partials fold to the ranker's score per doc bit for
+    bit, ranks and doc set equal the plain top-k, and the boosted
+    variant explains the boosted ranker."""
     from spidey_search_engine_spark.operators.search import (
         bm25_explain_topk, bm25_topk_tokens)
     bag = ["merge", "sort", "merge"]  # bag multiplicity rides into w
-    plain = [(r["doc_id"], round(r["score"], 9)) for r in
+    plain = [(r["doc_id"], r["score"]) for r in
              bm25_topk_tokens(spark, index, bag, k=8).collect()]
     rows = bm25_explain_topk(spark, index, bag, k=8).collect()
     by_doc = {}
     for r in rows:
         by_doc.setdefault(r["doc_id"], []).append(r)
     assert set(by_doc) == {d for d, _ in plain}
+    sums = _term_ordered_sums(rows)
     for doc_id, score in plain:
-        grp = by_doc[doc_id]
-        assert round(sum(r["partial"] for r in grp), 9) == round(
-            grp[0]["score"], 9)
-        assert round(grp[0]["score"], 9) == score
+        assert sums[doc_id] == by_doc[doc_id][0]["score"] == score
     ranks = {r["doc_id"]: r["rank"] for r in rows}
     assert [ranks[d] for d, _ in plain] == list(range(1, len(plain) + 1))
     # boosted explanation matches the boosted ranker's scores
-    boosted = {r["doc_id"]: round(r["score"], 9) for r in
+    boosted = {r["doc_id"]: r["score"] for r in
                bm25_topk_tokens(spark, index, bag, k=8,
                                 important_weight=3.0).collect()}
     brows = bm25_explain_topk(spark, index, bag, k=8,
                               important_weight=3.0).collect()
-    bsum = {}
-    for r in brows:
-        bsum[r["doc_id"]] = bsum.get(r["doc_id"], 0.0) + r["partial"]
-    assert {d: round(s, 9) for d, s in bsum.items()} == boosted
+    assert _term_ordered_sums(brows) == boosted
     # each row is self-explanatory: partial recomputable from the
     # emitted (w, tf_eff, dl) even under the boost (tf alone cannot)
     from spidey_search_engine_spark.operators.search import B, K1
@@ -390,9 +394,9 @@ def test_bm25_explain(spark, index):
     for r in brows:
         assert r["tf_eff"] == (r["tf"] * 3.0 if r["important"]
                                else float(r["tf"]))
-        recomputed = (r["w"] * r["tf_eff"] * (K1 + 1)
-                      / (r["tf_eff"] + K1 * (1 - B + B * r["dl"] / avgdl)))
-        assert round(recomputed, 9) == round(r["partial"], 9)
+        recomputed = r["w"] * (r["tf_eff"] * (K1 + 1) / (
+            r["tf_eff"] + K1 * (1 - B + B * r["dl"] / avgdl)))
+        assert recomputed == r["partial"]
     # empty / unknown-only bags explain to nothing
     assert bm25_explain_topk(spark, index, [], k=5).count() == 0
     assert bm25_explain_topk(spark, index, ["zz_nosuch"], k=5).count() == 0
@@ -466,30 +470,37 @@ def test_bm25_proximity(spark, index, tmp_path):
 
 
 def test_bm25_search_after(spark, index, tmp_path):
-    """search_after pagination: page1=None-cursor is rank-identical to
-    the plain top-k (scores equal at 9 decimals — the pagination path
-    sums in deterministic term order so its cursor is bitwise
-    reproducible; the plain ranker keeps the hash-agg sum); stitched
-    pages equal the exact top-N with no loss or duplication, including
+    """search_after pagination: page 1 (after=None) is the plain top-k,
+    exact floats; stitched pages equal the exact top-N with no loss or
+    duplication, including from a cursor the resident route served and
     across a hand-built tie boundary; non-finite CLI cursors are
     rejected."""
     from spidey_search_engine_spark.operators.build import (build_index,
                                                             load_index)
     from spidey_search_engine_spark.operators.search import (
-        bm25_topk_after, bm25_topk_tokens)
+        Searcher, bm25_topk_tokens)
 
     bag = ["merg", "sort"]
-    exact = [(r["doc_id"], round(r["score"], 9)) for r in
+    exact = [(r["doc_id"], r["score"]) for r in
              bm25_topk_tokens(spark, index, bag, k=30).collect()]
-    p1 = bm25_topk_after(spark, index, bag, k=10).collect()
-    assert [(r["doc_id"], round(r["score"], 9)) for r in p1] == exact[:10]
-    pages = [(r["doc_id"], round(r["score"], 9)) for r in p1]
+    p1 = bm25_topk_tokens(spark, index, bag, k=10, after=None).collect()
+    assert [(r["doc_id"], r["score"]) for r in p1] == exact[:10]
+    pages = [(r["doc_id"], r["score"]) for r in p1]
     cur = (p1[-1]["score"], p1[-1]["doc_id"])
     for _ in range(2):
-        pn = bm25_topk_after(spark, index, bag, k=10, after=cur).collect()
-        pages += [(r["doc_id"], round(r["score"], 9)) for r in pn]
+        pn = bm25_topk_tokens(spark, index, bag, k=10,
+                              after=cur).collect()
+        pages += [(r["doc_id"], r["score"]) for r in pn]
         cur = (pn[-1]["score"], pn[-1]["doc_id"])
     assert pages == exact  # 3 stitched pages == exact top-30
+    # a cursor from the driver-resident route is valid on the Spark path
+    with Searcher(spark, index) as s:
+        assert s._resident is not None
+        r1 = s.bm25("merge sort", k=10).collect()
+    r2 = bm25_topk_tokens(spark, index, bag, k=10,
+                          after=(r1[-1]["score"], r1[-1]["doc_id"]))
+    assert [(r["doc_id"], r["score"]) for r in r1 + r2.collect()] == \
+        exact[:20]
 
     # tie boundary: 4 docs with identical scores, page size 2 — the
     # composite (score, doc_id) cursor must split the tie cleanly
@@ -501,13 +512,13 @@ def test_bm25_search_after(spark, index, tmp_path):
     out = str(tmp_path / "after_idx")
     build_index(spark, cdf, out, profile="code", seg_bits=4, n_buckets=2)
     idx2 = load_index(spark, out)
-    a = bm25_topk_after(spark, idx2, ["merg"], k=2).collect()
+    a = bm25_topk_tokens(spark, idx2, ["merg"], k=2).collect()
     assert [r["doc_id"] for r in a] == [0, 1]
-    b = bm25_topk_after(spark, idx2, ["merg"], k=2,
-                        after=(a[-1]["score"], a[-1]["doc_id"])).collect()
+    b = bm25_topk_tokens(spark, idx2, ["merg"], k=2,
+                         after=(a[-1]["score"], a[-1]["doc_id"])).collect()
     assert [r["doc_id"] for r in b] == [2, 3]
     assert b[0]["score"] == a[0]["score"]  # the tie is real
-    assert bm25_topk_after(
+    assert bm25_topk_tokens(
         spark, idx2, ["merg"], k=2,
         after=(b[-1]["score"], b[-1]["doc_id"])).count() == 0
 
@@ -524,17 +535,15 @@ def test_bm25_search_after(spark, index, tmp_path):
 
 def test_cli_after_start_stitch(spark, index, index_dir, capsys):
     """The CLI pagination contract end-to-end: page 1 comes from
-    `--after start` (the pagination path, deterministic fold), its
-    printed cursor feeds page 2, and the stitch equals the operator's
-    exact top-N. Cursors from the PLAIN ranker's output are not part of
-    the contract — its hash-agg sum can sit 1 ulp off the fold's
-    recompute and re-serve or skip the boundary row (the sf0.01 oracle
-    gate caught exactly that drift before `start` existed)."""
+    `--after start`, its printed cursor feeds page 2, and the stitch
+    equals the operator's exact top-N; a cursor from the default
+    (unpaginated) query output is just as valid — every route prints
+    the same floats."""
     import json
 
     from spidey_search_engine_spark.cli import main as cli_main
     from spidey_search_engine_spark.operators.search import \
-        bm25_topk_after
+        bm25_topk_tokens
 
     def run(argv):
         assert cli_main(argv) == 0
@@ -550,8 +559,11 @@ def test_cli_after_start_stitch(spark, index, index_dir, capsys):
     got = [(r["doc_id"], r["score"]) for r in p1 + p2]
     bag = ["merg", "sort"]
     exact = [(r["doc_id"], r["score"]) for r in
-             bm25_topk_after(spark, index, bag, k=20).collect()]
+             bm25_topk_tokens(spark, index, bag, k=20).collect()]
     assert got == exact  # json float repr round-trips: stitch is exact
+    plain = run(["query", "--index", index_dir, "--q", "merge sort",
+                 "--k", "10"])
+    assert plain == p1
 
 
 def _full_scores(spark, index, bag):
@@ -667,14 +679,15 @@ def test_bm25_synonym_topk(spark, index):
     from spidey_search_engine_spark.operators.search import (
         bm25_synonym_topk, bm25_topk_tokens, query_term_postings)
 
-    # singleton groups == the plain ranker (scores at 1e-9)
+    # singleton groups == the plain ranker, bit for bit, whatever the
+    # order the groups are given in
     bag = ["merg", "sort"]
-    plain = [(r["doc_id"], round(r["score"], 9)) for r in
+    plain = [(r["doc_id"], r["score"]) for r in
              bm25_topk_tokens(spark, index, bag, k=10).collect()]
-    single = [(r["doc_id"], round(r["score"], 9)) for r in
-              bm25_synonym_topk(spark, index, [["merg"], ["sort"]],
-                                k=10).collect()]
-    assert single == plain
+    for groups in ([["merg"], ["sort"]], [["sort"], ["merg"]]):
+        single = [(r["doc_id"], r["score"]) for r in
+                  bm25_synonym_topk(spark, index, groups, k=10).collect()]
+        assert single == plain, groups
 
     # blended group: recompute independently
     groups = [["merg", "sort"], ["binari"]]
@@ -772,11 +785,11 @@ def test_cli_filter_collapse_syn(spark, corpus_pdf, tmp_path, capsys):
     capsys.readouterr()
 
 
-def test_bm25_batch_colocated_equals_rowjoin(spark, index, monkeypatch):
-    """The segment-colocated batch kernel and the round-3 row-join plan
-    must be row-identical (ids, 10-decimal scores, ranks) — including
-    when the batch splits into unioned chunk plans (chunk cap forced to
-    2 so 4 queries exercise the union path)."""
+def test_bm25_batch_colocated_equals_per_query(spark, index, monkeypatch):
+    """The segment-colocated batch kernel returns, per query, exactly the
+    per-query bm25_topk_tokens rows (ids, exact scores, ranks) —
+    including when the batch splits into unioned chunk plans (chunk cap
+    forced to 2 so 4 queries exercise the union path)."""
     from spidey_search_engine_spark.operators import search as S
     queries = {
         "q1": "merge sort",
@@ -784,27 +797,71 @@ def test_bm25_batch_colocated_equals_rowjoin(spark, index, monkeypatch):
         "q3": "merge merge data",
         "q4": "fast heap",
     }
-
-    def rows(df):
-        return sorted((r["query_id"], r["doc_id"], round(r["score"], 10),
-                       r["rank"]) for r in df.collect())
-
     monkeypatch.setattr(S, "BATCH_CHUNK_QUERIES", 2)
-    got = rows(S.bm25_topk_batch(spark, index, queries, k=8))
-    want = rows(S.bm25_topk_batch_rowjoin(spark, index, queries, k=8))
+    got = sorted((r["query_id"], r["rank"], r["doc_id"], r["score"])
+                 for r in S.bm25_topk_batch(spark, index, queries,
+                                            k=8).collect())
+    want = sorted(
+        (qid, rank, r["doc_id"], r["score"]) for qid, q in queries.items()
+        for rank, r in enumerate(S.bm25_topk_tokens(
+            spark, index, S.query_bag(q), k=8).collect(), start=1))
     assert got == want and got
 
 
+@pytest.mark.parametrize("query", [
+    "merge sort",                     # two terms
+    "merge merge data",               # duplicate term: 2x idf weight
+    '"merge sort" fast',              # phrase words join the bag
+    "zzz_unknown_term",               # unknown only: empty everywhere
+    "merge sort zzz_unknown_term",    # unknown term beside known ones
+])
+def test_routes_bit_identical(spark, index, query):
+    """One BM25 arithmetic on every route: the plain Spark ranker, its
+    page 1 (after=None), the segment-colocated kernel, the driver-
+    resident kernel and the explain score column return the SAME floats
+    — exact equality, no rounding — with and without the BM25F boost."""
+    from spidey_search_engine_spark.operators.search import (
+        Searcher, bm25_explain_topk, bm25_topk_colocated_tokens,
+        bm25_topk_resident, bm25_topk_tokens, query_bag)
+    bag = query_bag(query)
+    k = 20
+
+    def rows(df):
+        return [(r["doc_id"], r["score"]) for r in df.collect()]
+
+    with Searcher(spark, index) as s:
+        assert s._resident is not None
+        for w in (1.0, 2.5):
+            plain = rows(bm25_topk_tokens(spark, index, bag, k,
+                                          important_weight=w))
+            assert bool(plain) == ("merge" in query), (query, w)
+            assert rows(bm25_topk_tokens(spark, index, bag, k,
+                                         important_weight=w,
+                                         after=None)) == plain, w
+            assert rows(bm25_topk_colocated_tokens(
+                spark, index, bag, k, important_weight=w)) == plain, w
+            pdf = bm25_topk_resident(s._resident, s.index, {"q": bag}, k,
+                                     important_weight=w)
+            assert list(zip(pdf["doc_id"], pdf["score"])) == plain, w
+            explained = sorted({(r["rank"], r["doc_id"], r["score"])
+                                for r in bm25_explain_topk(
+                                    spark, index, bag, k,
+                                    important_weight=w).collect()})
+            assert [(d, sc) for _, d, sc in explained] == plain, w
+        assert rows(s.bm25(query, k=k)) == rows(
+            bm25_topk_tokens(spark, index, bag, k))
+
+
 def test_bm25_colocated_solo_equals_plain(spark, index):
-    """Solo colocated ranker: rank-identical to bm25_topk_tokens with
-    scores equal at 9 decimals (term-ordered numpy fold vs hash-agg),
-    including the BM25F important-field boost and the empty-query /
-    unknown-term edges; via Searcher too."""
+    """Solo colocated ranker: equal to bm25_topk_tokens bit for bit
+    (both fold the same partials in term order), including the BM25F
+    important-field boost and the empty-query / unknown-term edges; via
+    Searcher too."""
     from spidey_search_engine_spark.operators.search import (
         Searcher, bm25_topk_colocated_tokens, bm25_topk_tokens)
 
     def rows(df):
-        return [(r["doc_id"], round(r["score"], 9)) for r in df.collect()]
+        return [(r["doc_id"], r["score"]) for r in df.collect()]
 
     for bag in (["merg", "sort"], ["merg", "merg", "data"], ["fast"]):
         assert rows(bm25_topk_colocated_tokens(spark, index, bag, k=8)) \

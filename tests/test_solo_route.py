@@ -1,8 +1,7 @@
 """Warm solo-BM25 routing (Searcher.bm25 auto-selects plain vs the
 segment-colocated kernel from the stored doc count — the ROUTE
-discipline)."""
-
-import os
+discipline). Both routes return the same floats, so the route only
+moves speed."""
 
 import pytest
 
@@ -16,24 +15,24 @@ def searcher(spark, index):
 
 
 def test_route_boundary_from_metadata(searcher, monkeypatch):
+    from spidey_search_engine_spark.operators import search as S
+    stats = searcher.index["stats"]
     # the 400-doc test index sits under the default floor → plain
-    assert searcher._solo_route() == "plain"
-    monkeypatch.setenv("SPIDEY_COLO_MIN_DOCS", "400")
-    assert searcher._solo_route() == "colocated"
-    monkeypatch.setenv("SPIDEY_COLO_MIN_DOCS", "401")
-    assert searcher._solo_route() == "plain"
-    # explicit env route overrides the metadata decision
-    monkeypatch.setenv("SPIDEY_SOLO_ROUTE", "colocated")
-    assert searcher._solo_route() == "colocated"
+    assert S.route_solo(stats) == "plain"
+    monkeypatch.setattr(S, "SOLO_COLOCATED_MIN_DOCS", 400)
+    assert S.route_solo(stats) == "colocated"
+    monkeypatch.setattr(S, "SOLO_COLOCATED_MIN_DOCS", 401)
+    assert S.route_solo(stats) == "plain"
 
 
 def test_routes_rank_identical(spark, searcher):
+    from spidey_search_engine_spark.operators.search import bm25_topk
     q = "merge sort lookup"
-    plain = [(r["doc_id"], round(r["score"], 9))
-             for r in searcher.bm25(q, k=10, route="plain").collect()]
-    colo = [(r["doc_id"], round(r["score"], 9))
-            for r in searcher.bm25(q, k=10, route="colocated").collect()]
-    auto = [(r["doc_id"], round(r["score"], 9))
+    plain = [(r["doc_id"], r["score"])
+             for r in bm25_topk(spark, searcher.index, q, k=10).collect()]
+    colo = [(r["doc_id"], r["score"])
+            for r in searcher.bm25_colocated(q, k=10).collect()]
+    auto = [(r["doc_id"], r["score"])
             for r in searcher.bm25(q, k=10).collect()]
     assert plain == colo == auto
     assert len(plain) == 10
@@ -42,29 +41,26 @@ def test_routes_rank_identical(spark, searcher):
 def test_cli_default_path_routes_identically(spark, index_dir, capsys,
                                              monkeypatch):
     """The CLI default query path routes by the same metadata floor;
-    forced plain and forced colocated print identical rows (the 400-doc
-    test index sits below the floor, so auto == plain there)."""
+    forced plain and forced colocated print identical rows, exact floats
+    (the 400-doc test index sits below the floor, so auto == plain
+    there)."""
     import json
 
     from spidey_search_engine_spark.cli import main
+    from spidey_search_engine_spark.operators import search as S
 
     def rows():
-        # the two kernels sum partials in different orders (hash agg vs
-        # term-ordered fold): scores agree at 9 decimals, not bitwise —
-        # the same contract the operator-level identity tests pin
-        return [(d["doc_id"], round(d["score"], 9)) for d in
+        return [(d["doc_id"], d["score"]) for d in
                 (json.loads(ln) for ln in
                  capsys.readouterr().out.strip().splitlines())]
 
-    assert main(["query", "--index", index_dir, "--q", "merge sort",
-                 "--k", "8"]) == 0
+    argv = ["query", "--index", index_dir, "--q", "merge sort", "--k", "8"]
+    assert main(argv) == 0
     auto = rows()
-    monkeypatch.setenv("SPIDEY_SOLO_ROUTE", "plain")
-    assert main(["query", "--index", index_dir, "--q", "merge sort",
-                 "--k", "8"]) == 0
+    monkeypatch.setattr(S, "SOLO_COLOCATED_MIN_DOCS", 10 ** 9)
+    assert main(argv) == 0
     plain = rows()
-    monkeypatch.setenv("SPIDEY_SOLO_ROUTE", "colocated")
-    assert main(["query", "--index", index_dir, "--q", "merge sort",
-                 "--k", "8"]) == 0
+    monkeypatch.setattr(S, "SOLO_COLOCATED_MIN_DOCS", 0)
+    assert main(argv) == 0
     colo = rows()
     assert auto == plain == colo and len(plain) == 8
