@@ -39,8 +39,7 @@ def main() -> None:
 
     rows = S.query_term_postings(idx["postings"], EQ.QT,
                                  int(idx["stats"]["n_buckets"]))
-    scores = S.bm25_scores(rows, idx["terms"], float(idx["stats"]["avgdl"]),
-                           EQ.QT)
+    scores = S.bm25_scores(rows, idx, EQ.QT)
     topk = scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(10)
     sections.append((
         "BM25 top-10 (Q1 dictionary pruning → decode → score → top-k)",
@@ -715,7 +714,7 @@ def main() -> None:
         _colocated_partials)
     from spidey_search_engine_spark.operators.search import (
         query_term_weights)
-    iw = query_term_weights(idx["terms"], EQ.QT)
+    iw = query_term_weights(idx, EQ.QT)
     mcut = S._term_weight_map({t: 1.0 for t in iw})
     _buckets = sorted(set(S._buckets_of(
         sorted(iw), int(idx["stats"]["n_buckets"])).values()))

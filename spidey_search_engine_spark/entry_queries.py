@@ -119,7 +119,7 @@ def a2_positions(spark, sf_dir):
 def bm25_topk_fixed(spark, sf_dir):
     idx = entry_index(spark, sf_dir)
     rows = S.query_term_postings(idx["postings"], QT, int(idx["stats"]["n_buckets"]))
-    scores = S.bm25_scores(rows, idx["terms"], float(idx["stats"]["avgdl"]), QT)
+    scores = S.bm25_scores(rows, idx, QT)
     return (scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(20)
             .select("doc_id", _r(F.col("score")).alias("score_r")))
 
@@ -140,8 +140,7 @@ def bm25_pruned_topk(spark, sf_dir):
 def parity_relevance_fixed(spark, sf_dir):
     idx = entry_index(spark, sf_dir)
     rows = S.query_term_postings(idx["postings"], QT, int(idx["stats"]["n_buckets"]))
-    scored = S.parity_word_scores(rows, idx["terms"],
-                                  int(idx["stats"]["n_docs"]), QT)
+    scored = S.parity_word_scores(rows, idx, QT)
     return scored.select("doc_id", _r(F.col("relevance")).alias("relevance_r"),
                          "important")
 
@@ -162,8 +161,7 @@ def two_stage_topk(spark, sf_dir):
     reorder by relevance × static."""
     idx = entry_index(spark, sf_dir)
     rows = S.query_term_postings(idx["postings"], QT, int(idx["stats"]["n_buckets"]))
-    rel = S.parity_word_scores(rows, idx["terms"], int(idx["stats"]["n_docs"]), QT) \
-        .select("doc_id", "relevance")
+    rel = S.parity_word_scores(rows, idx, QT).select("doc_id", "relevance")
     stage1 = rel.orderBy(F.desc("relevance"), F.asc("doc_id")).limit(20)
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
     # broadcast the 20-row candidate set into the doc-dim scan, not vice versa
@@ -915,9 +913,7 @@ def q7_history_join(spark, sf_dir):
     idx = entry_index(spark, sf_dir)
     rows = S.query_term_postings(idx["postings"], QT,
                                  int(idx["stats"]["n_buckets"]))
-    rel = S.parity_word_scores(rows, idx["terms"],
-                               int(idx["stats"]["n_docs"]), QT) \
-        .select("doc_id", "relevance")
+    rel = S.parity_word_scores(rows, idx, QT).select("doc_id", "relevance")
     ev = load_table(spark, sf_dir, "events")
     hist = (ev.filter(F.col("user_id") == 7)
             .select((F.col("event_id") % 500).alias("doc_id"))
@@ -2018,9 +2014,7 @@ def serve_page(spark, sf_dir):
     idx = entry_index(spark, sf_dir)
     rows = S.query_term_postings(idx["postings"], QT,
                                  int(idx["stats"]["n_buckets"]))
-    rel = S.parity_word_scores(rows, idx["terms"],
-                               int(idx["stats"]["n_docs"]), QT) \
-        .select("doc_id", "relevance")
+    rel = S.parity_word_scores(rows, idx, QT).select("doc_id", "relevance")
     stage1 = rel.orderBy(F.desc("relevance"), F.asc("doc_id")).limit(20)
     docs = load_table(spark, sf_dir, "documents") \
         .select("doc_id", "n_chars", "text")
@@ -2079,9 +2073,8 @@ def a8_requery_after_delete(spark, sf_dir):
     republish stats (n_docs/avgdl from the rewritten sentinels) and term
     df/cf, then run BM25 top-20 against the maintained index — checked
     against a from-scratch SQL build over the surviving documents."""
-    from .operators.build import doc_lengths, doc_stats
-    from .operators.maintenance import (delete_docs_postings,
-                                        refresh_term_stats)
+    from .operators.build import doc_lengths, doc_stats, term_stats
+    from .operators.maintenance import delete_docs_postings
     idx = entry_index(spark, sf_dir)
     raw = spark.read.parquet(os.path.join(entry_index_dir(sf_dir),
                                           "postings"))
@@ -2093,9 +2086,9 @@ def a8_requery_after_delete(spark, sf_dir):
     sent = cleaned_all.filter(F.col("bucket") == n_buckets)
     stats = doc_stats(doc_lengths(sent))
     cleaned = cleaned_all.filter(F.col("bucket") < n_buckets)
-    terms2 = refresh_term_stats(cleaned, stats["n_docs"])
+    terms2 = term_stats(cleaned)
     rows = S.query_term_postings(cleaned, QT, n_buckets)
-    scores = S.bm25_scores(rows, terms2, float(stats["avgdl"]), QT)
+    scores = S.bm25_scores(rows, {"terms": terms2, "stats": stats}, QT)
     return (scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(20)
             .select("doc_id", _r(F.col("score")).alias("score_r")))
 
@@ -2152,8 +2145,7 @@ def a7_compact_requery(spark, sf_dir):
     assert "chunk" not in idx["postings_raw"].columns
     rows = S.query_term_postings(idx["postings"], QT,
                                  int(idx["stats"]["n_buckets"]))
-    scores = S.bm25_scores(rows, idx["terms"], float(idx["stats"]["avgdl"]),
-                           QT)
+    scores = S.bm25_scores(rows, idx, QT)
     return (scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(20)
             .select("doc_id", _r(F.col("score")).alias("score_r")))
 
@@ -4966,8 +4958,7 @@ def rank_eval_docs(spark, sf_dir):
     idx = entry_index(spark, sf_dir)
     rows = S.query_term_postings(idx["postings"], QT,
                                  int(idx["stats"]["n_buckets"]))
-    scores = S.bm25_scores(rows, idx["terms"],
-                           float(idx["stats"]["avgdl"]), QT)
+    scores = S.bm25_scores(rows, idx, QT)
     results = (scores.orderBy(F.desc("score"), F.asc("doc_id")).limit(10)
                .withColumn("query_id", F.lit("q1"))
                .withColumn("rank", F.row_number().over(

@@ -21,7 +21,7 @@ analytics surface re-expressed Spark-first:
 Scale discipline (same rules as operators/search.py): every path is
 query-shaped, never corpus-shaped — foreground sets are top-k-bounded,
 match sets are query-df-bounded, dictionary lookups ride the pushdown /
-warm-cache path (query_idf), and nothing unbounded lands on the driver.
+warm-cache path (query_df), and nothing unbounded lands on the driver.
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from ..functions.analysis import PROFILES
 from .search import (_pruned_postings, binary_postings,
                      bm25_topk_colocated_tokens, bm25_topk_tokens,
-                     empty_frame, query_idf, route_solo)
+                     empty_frame, query_df, route_solo)
 
 
 def _match_doc_ids(index: dict, terms: list[str], mode: str) -> DataFrame:
@@ -92,7 +92,7 @@ def significant_terms(spark: SparkSession, index: dict, docs: DataFrame,
     pushdown, tokenized with the index's analyzer (stats.profile — a
     code-profile index stems/splits identifiers, so any other tokenizer
     would miss the dictionary), and reduced to per-term foreground doc
-    frequencies. Background df comes from the dictionary via query_idf's
+    frequencies. Background df comes from the dictionary via query_df's
     pushdown/warm-cache lookup over the foreground vocabulary (bounded by
     k docs' analyzer-truncated token streams — the more_like_this
     discipline, never a dictionary stream).
@@ -138,8 +138,8 @@ def significant_terms(spark: SparkSession, index: dict, docs: DataFrame,
                     if c >= int(min_fg_df)}
     if not fg_df_counts:
         return empty_frame(spark, out_schema)
-    bg_df = query_idf(index["terms"], list(fg_df_counts), "df",
-                      index.get("idf_cache"))
+    bg_df = query_df(index["terms"], list(fg_df_counts),
+                     index.get("idf_cache"))
     n_docs = float(index["stats"]["n_docs"])
     scored = []
     for t, fg in fg_df_counts.items():

@@ -647,15 +647,14 @@ def merge_partition_count(n_buckets: int, salt_factor: int,
     return max(1, min(width, -(-int(n_docs) // DOCS_PER_MERGE_TASK)))
 
 
-def term_stats(postings: DataFrame, n_docs: int) -> DataFrame:
-    """Dictionary + df/cf (A4/A5): plain associative sums over segments —
-    no get-or-create lock, no surrogate ids (SURVEY.md §4)."""
+def term_stats(postings: DataFrame) -> DataFrame:
+    """Dictionary (term, df, cf) (A4/A5): plain associative sums over
+    segments — no get-or-create lock, no surrogate ids (SURVEY.md §4).
+    No idf is stored: it is a query-time function of df and N
+    (search.bm25_idf / search.ref_idf), as in the reference's dictionary,
+    which keeps only pages_count."""
     return (postings.groupBy("term")
-            .agg(F.sum("n_docs").alias("df"), F.sum("cf").alias("cf"))
-            .withColumn("idf_bm25",
-                        F.log((F.lit(float(n_docs)) - F.col("df") + 0.5)
-                              / (F.col("df") + 0.5) + 1.0))
-            .withColumn("idf_ref", F.log(1.0 + F.lit(float(n_docs)) / F.col("df"))))
+            .agg(F.sum("n_docs").alias("df"), F.sum("cf").alias("cf")))
 
 
 def build_index(spark: SparkSession, corpus: DataFrame, out_dir: str,
@@ -706,8 +705,7 @@ def build_index(spark: SparkSession, corpus: DataFrame, out_dir: str,
          .write.mode("overwrite").parquet(os.path.join(out_dir, "docs")))
 
     def _terms_job():
-        terms = term_stats(postings_w.filter(F.col("bucket") != n_buckets),
-                           stats["n_docs"])
+        terms = term_stats(postings_w.filter(F.col("bucket") != n_buckets))
         terms.write.mode("overwrite").parquet(os.path.join(out_dir, "terms"))
 
     errors: list[BaseException] = []

@@ -91,13 +91,20 @@ def index_diff(a: dict, b: dict) -> dict:
                   doc-range aligned only at equal seg_bits),
     * dictionary — (term, df, cf) full-outer join; any row present on
                   one side only, or disagreeing on df/cf, counts,
+    * documents — (doc_id, n_tokens, content_sha256) rows of the docs
+                  tables, compared both ways; a doc on one side only, or
+                  with another length or content hash, counts (the DOCLEN/
+                  DOCSHA sentinel rows that carry these are pruned from
+                  the query-facing postings view, so the postings
+                  comparison never sees them),
     * postings  — (term, segment) -> sha2(bin) full-outer join; the
                   compressed bytes themselves must agree (reshard and
                   compaction preserve them; a fresh build reproduces
                   them — pinned by the reshard tests).
 
     Returns {"equal": bool, "stats_equal": bool, "term_mismatches": int,
-    "posting_mismatches": int, ...}. Cost: one dictionary join + one
+    "doc_mismatches": int, "posting_mismatches": int, ...}. Cost: one
+    dictionary join + one three-column docs comparison + one
     postings-metadata join (term/segment/bin-hash — position bytes ride
     inside `bin` and are hashed in-scan, never decoded). Bucket layout
     and file layout are deliberately IGNORED: n_buckets is a physical
@@ -118,6 +125,13 @@ def index_diff(a: dict, b: dict) -> dict:
                   | (F.col("cf") != F.col("cf_b")))
           .count())
     out["term_mismatches"] = int(tm)
+    cols = ["doc_id", "n_tokens", "content_sha256"]
+    da, db = a["docs"].select(*cols), b["docs"].select(*cols)
+    # EXCEPT compares NULLs as equal; a doc differing in either column,
+    # or present on one side only, counts once
+    dm = (da.subtract(db).unionByName(db.subtract(da))
+          .select("doc_id").distinct().count())
+    out["doc_mismatches"] = int(dm)
     if int(sa["seg_bits"]) == int(sb["seg_bits"]):
         pa = a["postings"].select("term", "segment",
                                  F.sha2("bin", 256).alias("h"))
@@ -130,6 +144,6 @@ def index_diff(a: dict, b: dict) -> dict:
         out["posting_mismatches"] = int(pm)
     else:
         out["posting_mismatches"] = None  # incomparable layouts
-    out["equal"] = bool(stats_equal and tm == 0
+    out["equal"] = bool(stats_equal and tm == 0 and dm == 0
                         and out["posting_mismatches"] == 0)
     return out

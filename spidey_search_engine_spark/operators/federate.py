@@ -17,15 +17,13 @@ That holds iff every score input is computed GLOBALLY:
 
 * N (corpus size) = Σ shard n_docs,
 * avgdl = Σ shard total_tokens / Σ shard n_docs,
-* df(term) = Σ shard df(term)  → idf from the build's exact formula
-  (ln((N − df + 0.5)/(df + 0.5) + 1), operators/build.term_stats).
+* df(term) = Σ shard df(term)  → search.bm25_idf(df, N), the same
+  query-time function the single-index path applies to its own df.
 
-Each shard's STORED idf_bm25 is shard-local and is deliberately never
-read here — using it would make a doc's score depend on which shard it
-landed in. Instead the k query terms' df rows are fetched per shard
-(the same Q1 pushdown lookup the single-index path does — k tiny scans,
-never a dictionary scan), summed driver-side, and the global idf×
-multiplicity weights enter the scoring stage as one literal map.
+The k query terms' df rows are fetched per shard (the same Q1 pushdown
+lookup the single-index path does — k tiny scans, never a dictionary
+scan), summed driver-side, and the global idf×multiplicity weights
+enter the scoring stage as one literal map.
 
 Execution shape: per shard, the standard bucket-partition-pruned probe +
 vectorized segment decode (query_term_postings — each shard keeps its
@@ -60,7 +58,6 @@ reference analog, invariant-tested against the monolithic build instead.
 
 from __future__ import annotations
 
-import math
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -70,7 +67,7 @@ from .search import (BATCH_CHUNK_QUERIES, MAX_BROADCAST_CANDIDATES,
                      _analyze_bags, _bag_weights, _candidate_bound,
                      _topk_after, batch_term_weights, bm25_score_rows,
                      bm25_scores_batch_colocated, empty_frame,
-                     filter_doc_ids, query_bag, query_idf,
+                     filter_doc_ids, query_bag, query_df,
                      query_term_postings)
 
 
@@ -88,23 +85,18 @@ def federated_stats(indexes: list[dict]) -> dict:
             "avgdl": total_tokens / n_docs}
 
 
-def federated_idf(indexes: list[dict], q_terms: list[str],
-                  n_docs: int | None = None) -> dict[str, float]:
-    """Global idf for the k query terms: per-shard df pushdown lookups
-    (query_idf with col='df' — the same k-term Q1 scan, one per shard),
-    summed, then the build's exact idf formula over global df and global
-    N. Terms absent from EVERY shard drop (df=0 contributes nothing,
-    same contract as the single-index lookup)."""
-    if n_docs is None:
-        n_docs = federated_stats(indexes)["n_docs"]
+def federated_df(indexes: list[dict],
+                 q_terms: list[str]) -> dict[str, float]:
+    """Global df for the k query terms: per-shard df pushdown lookups
+    (query_df — the same k-term Q1 scan, one per shard), summed. Terms
+    absent from EVERY shard drop (df=0 contributes nothing, same
+    contract as the single-index lookup)."""
     df_sum: dict[str, float] = {}
     for idx in indexes:
-        shard_df = query_idf(idx["terms"], q_terms, col="df",
-                             cache=idx.get("idf_cache"))
-        for t, d in shard_df.items():
+        for t, d in query_df(idx["terms"], q_terms,
+                             idx.get("idf_cache")).items():
             df_sum[t] = df_sum.get(t, 0.0) + d
-    return {t: math.log((n_docs - d + 0.5) / (d + 0.5) + 1.0)
-            for t, d in df_sum.items()}
+    return df_sum
 
 
 def federated_posting_rows(indexes: list[dict], q_terms: list[str],
@@ -161,8 +153,8 @@ def federated_bm25_topk_tokens(spark: SparkSession, indexes: list[dict],
         return empty_frame(spark, "doc_id long, score double")
     if gstats is None:
         gstats = federated_stats(indexes)
-    iw = _bag_weights(q_terms, federated_idf(indexes, q_terms,
-                                             n_docs=gstats["n_docs"]))
+    iw = _bag_weights(q_terms, federated_df(indexes, q_terms),
+                      gstats["n_docs"])
     rows = federated_posting_rows(indexes, q_terms,
                                   verify_disjoint=verify_disjoint)
     scores = bm25_score_rows(rows, iw, gstats["avgdl"],
@@ -213,8 +205,8 @@ def federated_bm25_topk_batch_tokens(
     union_terms = sorted({t for bag in bags.values() for t in bag})
     if gstats is None:
         gstats = federated_stats(indexes)
-    idf = federated_idf(indexes, union_terms, n_docs=gstats["n_docs"])
-    qrows = batch_term_weights(bags, idf)
+    qrows = batch_term_weights(bags, federated_df(indexes, union_terms),
+                               gstats["n_docs"])
     if verify_disjoint:
         # the overlap check is a standalone query-bounded job over the
         # decoded union rows (the colocated kernel never materializes
@@ -266,14 +258,15 @@ class FederatedSearcher:
     global-stats derivation and (b) one df lookup per shard — this class
     removes both from the steady state: global (N, total_tokens, avgdl)
     are computed once at open, and each shard's Searcher preloads its
-    dictionary INCLUDING the df column into idf_cache, so
-    federated_idf's per-shard lookup is a dict hit (zero Spark jobs).
+    dictionary's df column into idf_cache, so federated_df's per-shard
+    lookup is a dict hit (zero Spark jobs).
     A warm federated query then plans exactly one job, the same as the
     single-index Searcher.
 
-    Searcher kwargs pass through to every shard (cache_postings,
-    head_df_threshold auto-preload, codegen suppression — refcounted
-    session-wide, so nesting is safe). Construction is exception-safe:
+    Searcher kwargs (cache_postings, preload_dict, coalesce_to) pass
+    through to every shard; each shard's codegen suppression is
+    refcounted session-wide, so nesting is safe. Construction is
+    exception-safe:
     a shard failing to warm closes the shards already opened."""
 
     def __init__(self, spark: SparkSession, indexes: list[dict],

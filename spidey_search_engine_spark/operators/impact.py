@@ -280,8 +280,7 @@ def bm25_impact_topk_tokens(spark: SparkSession, index: dict, impact: dict,
     n_buckets = int(stats["n_buckets"])
     if not q_terms:
         return empty_frame(spark, "doc_id long, score double")
-    iw = query_term_weights(index["terms"], q_terms,
-                            index.get("idf_cache"))
+    iw = query_term_weights(index, q_terms)
     if not iw:
         return empty_frame(spark, "doc_id long, score double")
     terms = sorted(iw)

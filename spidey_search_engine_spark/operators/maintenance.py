@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from .build import (BLOCK_SIZE, DOCLEN_TERM, K1, B, POSTING_SCHEMA,
                     SENTINEL_PREFIX,
                     _decode_partial, _encode_partial, build_partials,
-                    merge_partials, term_stats)
+                    merge_partials)
 
 # ---------------------------------------------------------------------------
 # F8 — URL normalization (Crawler.java:282-306), as a column expression
@@ -181,7 +181,11 @@ def delete_docs_postings(postings: DataFrame,
     pruned out by load_index) or the full on-disk table. NOTE: global stats
     (n_docs/avgdl) and the docs table are derived artifacts — republish
     them after a delete (doc_lengths + doc_stats over the rewritten
-    sentinels, refresh_term_stats for df/cf), as build_index does."""
+    sentinels, build.term_stats for df/cf), as build_index does. A
+    caller that persists the new terms over an index dir's `terms` table
+    must also call wildcard.refresh_aux_terms(spark, index_dir): the
+    prefix/suffix/n-gram projections derive from `terms` and would
+    otherwise serve the pre-maintenance vocabulary."""
     out_cols = [f.name for f in POSTING_SCHEMA.fields] + ["bucket"]
     from .build import DOCSHA_TERM
 
@@ -305,18 +309,6 @@ def _remerge_duplicate_keys(postings: DataFrame) -> DataFrame:
     return (postings.repartition("term", "segment")
             .sortWithinPartitions("term", "segment")
             .select(*out_cols).mapInPandas(merge, schema=schema))
-
-
-def refresh_term_stats(postings: DataFrame, n_docs: int) -> DataFrame:
-    """df/cf/idf recompute after maintenance (Indexer.java:650-654's
-    decrement, done exactly instead of incrementally).
-
-    Callers that persist the result over an index dir's `terms` table
-    must also call wildcard.refresh_aux_terms(spark, index_dir)
-    afterwards — the prefix/suffix/n-gram dictionary projections are
-    derived from `terms` and would otherwise serve the pre-maintenance
-    vocabulary (the build/resume/streaming-publish paths all do this)."""
-    return term_stats(postings, n_docs)
 
 
 # ---------------------------------------------------------------------------

@@ -138,9 +138,10 @@ def doc_keywords(df, terms, n_docs: int, k: int = 5,
                  tokens=None):
     """(id, term, tf, score, rank) — the k most salient terms per
     document by tf·idf against the INDEX dictionary: score =
-    tf · ln(1 + N/df), the engine's BM25 idf (operators/build.term_stats)
-    without the length normalization — keyword salience should not
-    penalize long documents the way retrieval scoring must.
+    tf · ln(1 + N/df), the reference ranker's idf (search.ref_idf, here
+    as a Spark column because every doc's terms rank in one
+    aggregation) without the length normalization — keyword salience
+    should not penalize long documents the way retrieval scoring must.
 
     Reference analog: none — the reference ranks documents for a query
     (Ranker.java); this is the transpose (rank TERMS for a document),

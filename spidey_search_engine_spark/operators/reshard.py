@@ -164,7 +164,7 @@ def reshard_index(spark: SparkSession, in_dirs: list[str], out_dir: str,
             stats = doc_stats(spark.read.parquet(os.path.join(sdir, "docs")))
             postings_k = (spark.read.option("basePath", pdir).parquet(pdir)
                           .filter(F.col("bucket") < nb_out))
-            term_stats(postings_k, stats["n_docs"]).write.mode(
+            term_stats(postings_k).write.mode(
                 "overwrite").parquet(os.path.join(sdir, "terms"))
             stats_row = dict(stats, avgdl=float(stats["avgdl"]),
                              profile=profile, seg_bits=seg_bits,

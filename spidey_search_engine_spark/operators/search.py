@@ -27,6 +27,8 @@ pass beyond the q-term postings themselves.
 
 from __future__ import annotations
 
+import math
+from collections import Counter
 from typing import Iterator
 
 import numpy as np
@@ -210,65 +212,79 @@ def _term_weight_map(values: dict[str, float]):
     return F.create_map(*pairs)
 
 
-def query_idf(terms_df: DataFrame, query_terms: list[str],
-              col: str = "idf_bm25",
-              cache: dict[str, dict[str, float]] | None = None) -> dict[str, float]:
-    """Q1 dictionary lookup, literally: fetch the k query terms' idf rows
-    (filter pushed into the terms parquet scan). Terms absent from the
-    dictionary (df=0) are dropped — they contribute no score.
+def bm25_idf(df: float, n_docs: int) -> float:
+    """BM25 idf, ``ln((N − df + 0.5)/(df + 0.5) + 1)`` — the one place
+    the formula is written."""
+    return math.log((n_docs - df + 0.5) / (df + 0.5) + 1.0)
 
-    With a preloaded `cache` ({col: {term: idf}}, see Searcher) the lookup
+
+def ref_idf(df: float, n_docs: int) -> float:
+    """The reference ranker's idf, ``ln(1 + N/df)``
+    (QueryResultsFetcher.java:239,252) — the one place it is written."""
+    return math.log(1.0 + n_docs / df)
+
+
+def query_df(terms_df: DataFrame, query_terms: list[str],
+             cache: dict | None = None) -> dict[str, float]:
+    """Q1 dictionary lookup, literally: fetch the k query terms' df rows
+    (filter pushed into the terms parquet scan). Terms absent from the
+    dictionary (df=0) are dropped — they contribute no score. idf is a
+    query-time function of this df and N (bm25_idf / ref_idf), as in the
+    reference's serving SQL (QueryResultsFetcher.java:239,252).
+
+    With a preloaded `cache` ({"df": {term: df}}, see Searcher) the lookup
     is a dict hit and the query plans exactly ONE Spark job. A HEAD-ONLY
-    cache (cache["partial"] is True — Searcher(head_df_threshold=...)) holds
-    just the high-df terms; cache misses there mean "tail or absent", so the
-    missing terms fall back to the pushdown lookup (one tiny extra job) and
-    the answer is memoized for the next query that repeats them."""
-    if cache is not None and col in cache:
-        c = cache[col]
-        out = {t: c[t] for t in set(query_terms) if t in c}
-        missing = [t for t in set(query_terms) if t not in c]
+    cache (cache["partial"] is True — the Searcher's preload budget was
+    exceeded) holds just the high-df terms; cache misses there mean "tail
+    or absent", so the missing terms fall back to the pushdown lookup (one
+    tiny extra job) and the answer is memoized for the next query that
+    repeats them."""
+    terms = set(query_terms)
+    if cache is not None:
+        c = cache["df"]
+        missing = [t for t in terms if t not in c]
         if missing and cache.get("partial"):
             rows = terms_df.filter(F.col("term").isin(missing)) \
-                .select("term", col).collect()
+                .select("term", "df").collect()
             for r in rows:
-                out[r["term"]] = c[r["term"]] = float(r[col])
+                c[r["term"]] = float(r["df"])
             for t in missing:
-                if t not in out:
-                    c[t] = None  # memoize the absence too
-            return {t: v for t, v in out.items() if v is not None}
-        return {t: v for t, v in out.items() if v is not None}
+                c.setdefault(t, None)  # memoize the absence too
+        return {t: c[t] for t in terms if c.get(t) is not None}
     rows = terms_df.filter(
-        F.col("term").isin(list(set(query_terms)))).select("term", col).collect()
-    return {r["term"]: float(r[col]) for r in rows}
+        F.col("term").isin(list(terms))).select("term", "df").collect()
+    return {r["term"]: float(r["df"]) for r in rows}
 
 
-def _bag_weights(bag: list[str], idf: dict[str, float]) -> dict[str, float]:
-    """term → idf×bag-multiplicity for one term bag — THE weight rule of
-    every BM25 ranker (single-index, federated, batch, colocated), so a
+def _bag_weights(bag: list, dfs: dict, n_docs: int,
+                 idf=bm25_idf) -> dict:
+    """term → idf(df, N)×bag-multiplicity for one term bag — THE weight
+    rule of every ranker (single-index, federated, batch, colocated,
+    block-max bounds, impact, parity; `idf` defaults to bm25_idf), so a
     change to the multiplicity rule can never desync one from another.
-    Terms absent from `idf` (df=0) drop."""
-    weights = pd.Series(bag).value_counts()
-    return {t: float(idf[t]) * float(weights[t]) for t in weights.index
-            if t in idf}
+    Terms absent from `dfs` (df=0) drop."""
+    return {t: float(idf(dfs[t], n_docs)) * float(c)
+            for t, c in Counter(bag).items() if t in dfs}
 
 
-def query_term_weights(terms_df: DataFrame, query_terms: list[str],
-                       idf_cache: dict | None = None) -> dict[str, float]:
-    """term → idf×bag-multiplicity from THIS index's dictionary (see
-    _bag_weights); terms absent from the dictionary (df=0) drop here,
-    which is also each caller's OOV early-exit test."""
+def query_term_weights(index: dict, query_terms: list[str],
+                       idf=bm25_idf) -> dict[str, float]:
+    """term → idf×bag-multiplicity from THIS index's dictionary and N
+    (see _bag_weights); terms absent from the dictionary (df=0) drop
+    here, which is also each caller's OOV early-exit test."""
     return _bag_weights(query_terms,
-                        query_idf(terms_df, query_terms, "idf_bm25",
-                                  idf_cache))
+                        query_df(index["terms"], query_terms,
+                                 index.get("idf_cache")),
+                        int(index["stats"]["n_docs"]), idf)
 
 
-def bm25_scores(posting_rows: DataFrame, terms_df: DataFrame, avgdl: float,
+def bm25_scores(posting_rows: DataFrame, index: dict,
                 query_terms: list[str],
-                idf_cache: dict | None = None,
                 important_weight: float = 1.0) -> DataFrame:
-    """Per-doc BM25 over decoded posting rows. Duplicate query terms weight
-    by multiplicity (bag semantics, matching the reference's repeated
-    OR-columns, QueryResultsFetcher.java:239-240).
+    """Per-doc BM25 over decoded posting rows, with N, avgdl and df from
+    `index`. Duplicate query terms weight by multiplicity (bag semantics,
+    matching the reference's repeated OR-columns,
+    QueryResultsFetcher.java:239-240).
 
     The k-term dictionary lookup happens driver-side first (Q1 — one tiny
     pushdown scan of `terms`); idf×weight then enters the scoring stage as
@@ -283,8 +299,9 @@ def bm25_scores(posting_rows: DataFrame, terms_df: DataFrame, avgdl: float,
     Zaragoza 2009 §3.3). w=1.0 is byte-identical to unweighted BM25 (the
     expression is only added when w≠1, keeping the default plan
     unchanged)."""
-    iw = query_term_weights(terms_df, query_terms, idf_cache)
-    return bm25_score_rows(posting_rows, iw, avgdl,
+    return bm25_score_rows(posting_rows,
+                           query_term_weights(index, query_terms),
+                           float(index["stats"]["avgdl"]),
                            important_weight=important_weight)
 
 
@@ -355,9 +372,7 @@ def _bm25_scored_tokens(spark: SparkSession, index: dict,
         return empty_frame(spark, "doc_id long, score double")
     rows = query_term_postings(index["postings"], q_terms,
                                int(index["stats"]["n_buckets"]))
-    return bm25_scores(rows, index["terms"],
-                       float(index["stats"]["avgdl"]), q_terms,
-                       index.get("idf_cache"),
+    return bm25_scores(rows, index, q_terms,
                        important_weight=important_weight)
 
 
@@ -412,11 +427,11 @@ def bm25_topk(spark: SparkSession, index: dict, query: str, k: int = 10) -> Data
 
 
 def batch_term_weights(term_bags: dict[str, list[str]],
-                       idf: dict[str, float]) -> list[tuple]:
+                       dfs: dict[str, float], n_docs: int) -> list[tuple]:
     """(query_id, term, idf×multiplicity) rows for a batch — _bag_weights
-    per query; terms absent from `idf` (df=0) drop."""
+    per query; terms absent from `dfs` (df=0) drop."""
     return [(qid, t, w) for qid, bag in term_bags.items()
-            for t, w in _bag_weights(bag, idf).items()]
+            for t, w in _bag_weights(bag, dfs, n_docs).items()]
 
 
 def query_bag(query: str) -> list[str]:
@@ -456,9 +471,9 @@ def colocated_weights(index: dict, bags: dict[str, list[str]],
     results are empty when no bag has a known term."""
     union_terms = {t for bag in bags.values() for t in bag}
     if qrows is None:
-        idf = query_idf(index["terms"], sorted(union_terms), "idf_bm25",
-                        index.get("idf_cache"))
-        qrows = batch_term_weights(bags, idf)
+        dfs = query_df(index["terms"], sorted(union_terms),
+                       index.get("idf_cache"))
+        qrows = batch_term_weights(bags, dfs, int(index["stats"]["n_docs"]))
     else:
         qrows = [r for r in qrows if r[0] in bags and r[1] in union_terms]
     qids = sorted({q for q, _, _ in qrows})
@@ -759,7 +774,7 @@ class Searcher:
 
     What it warms:
     * the dictionary (`terms`) is cached in executor memory — the per-query
-      k-term idf lookup becomes an InMemoryTableScan instead of a parquet
+      k-term df lookup becomes an InMemoryTableScan instead of a parquet
       listing + scan;
     * optionally the postings table is cached the same way (`cache_postings`;
       at sandbox scale the whole table fits — at 10^12 files you would
@@ -792,85 +807,61 @@ class Searcher:
 
     def __init__(self, spark: SparkSession, index: dict,
                  cache_postings: bool = True, preload_dict: bool = True,
-                 coalesce_to: int | None = None,
-                 head_df_threshold: int | None = None,
-                 max_preload_terms: int | None = None,
-                 disable_wholestage_codegen: bool = True):
+                 coalesce_to: int | None = None):
         self.spark = spark
         self.index = dict(index)
         self._cached = []
         # term → [(segment, bytes)] when the warm kept the postings on the
         # driver (see the class docstring), else None
         self._resident: dict[str, list[tuple[int, bytes]]] | None = None
-        self._holds_ws = False
-        if disable_wholestage_codegen:
-            # Every query carries fresh literals (idf map, term list), so
-            # whole-stage codegen compiles a NEW generated class per query
-            # - pure planning overhead at serving row counts (the cached
-            # postings a query touches are ~10^5 rows). Interpreted
-            # expression eval over that is cheaper than the compile:
-            # measured p50 0.48->0.42s, p95 0.66->0.46s at sf0.1
-            # (order-controlled, both directions) - crossing the
-            # reference's <500 ms warm anchor. Session-level knob,
-            # refcounted across nested Searchers and restored when the
-            # LAST one closes; build jobs sharing the session while a
-            # Searcher is open would also run interpreted (don't do that -
-            # builds want codegen).
-            _ws_acquire(spark)
-            self._holds_ws = True
+        # Every query carries fresh literals (idf map, term list), so
+        # whole-stage codegen compiles a NEW generated class per query -
+        # pure planning overhead at serving row counts (the cached
+        # postings a query touches are ~10^5 rows). Interpreted
+        # expression eval over that is cheaper than the compile:
+        # measured p50 0.48->0.42s, p95 0.66->0.46s at sf0.1
+        # (order-controlled, both directions) - crossing the
+        # reference's <500 ms warm anchor. Session-level knob,
+        # refcounted across nested Searchers and restored when the
+        # LAST one closes; build jobs sharing the session while a
+        # Searcher is open would also run interpreted (don't do that -
+        # builds want codegen).
+        _ws_acquire(spark)
+        self._holds_ws = True
         try:
-            self._warm(index, cache_postings, preload_dict, coalesce_to,
-                       head_df_threshold, max_preload_terms)
+            self._warm(index, cache_postings, preload_dict, coalesce_to)
         except BaseException:
             # __init__ failing must not leave the session interpreted:
             # no object exists for the caller to close()
-            if self._holds_ws:
-                _ws_release(spark)
+            _ws_release(spark)
             raise
 
-    def _warm(self, index, cache_postings, preload_dict, coalesce_to,
-              head_df_threshold, max_preload_terms=None):
+    def _warm(self, index, cache_postings, preload_dict, coalesce_to):
         self.index["terms"] = index["terms"].cache()
         self._cached.append(self.index["terms"])
         if preload_dict:
-            # one pass over the dictionary loads idf values AND term→bucket
-            # (the reference's always-resident MySQL dictionary). The k-term
+            # one pass over the dictionary loads df AND term→bucket (the
+            # reference's always-resident MySQL dictionary). The k-term
             # lookup becomes a dict hit → each BM25 query plans exactly ONE
-            # Spark job. At 10^12-file scale the whole vocabulary
-            # (10^8–10^9 terms) cannot land on one driver: pass
-            # `head_df_threshold` to preload ONLY the df>threshold head —
-            # Zipf puts the overwhelming share of query-term hits there —
-            # and the rare tail term falls back to the per-query pushdown
-            # lookup (query_idf partial-cache path), memoized on first use.
+            # Spark job. The full-vocabulary collect is only the default
+            # while it's provably bounded: one count over the (cached)
+            # dictionary decides, and past AUTO_PRELOAD_MAX_TERMS only the
+            # top-df head preloads — Zipf puts the overwhelming share of
+            # query-term hits there — while tail terms fall back to the
+            # memoized per-query pushdown lookup (query_df partial path).
+            # The count doubles as the cache materialization.
             n_buckets = int(self.index["stats"]["n_buckets"])
             head = self.index["terms"]
-            partial = head_df_threshold is not None
+            partial = head.count() > self.AUTO_PRELOAD_MAX_TERMS
             if partial:
-                head = head.filter(F.col("df") > int(head_df_threshold))
-            else:
-                # auto-select: the full-vocabulary collect is only the
-                # default while it's provably bounded. One count over the
-                # (cached) dictionary decides; past the budget, preload
-                # the top-df head — Zipf puts the overwhelming share of
-                # query-term hits there — and tail terms fall back to the
-                # memoized per-query pushdown lookup (query_idf partial
-                # path). The count doubles as the cache materialization
-                # the old code paid inside collect().
-                cap = (int(max_preload_terms) if max_preload_terms
-                       is not None else self.AUTO_PRELOAD_MAX_TERMS)
-                if head.count() > cap:
-                    head = head.orderBy(F.col("df").desc(),
-                                        "term").limit(cap)
-                    partial = True
+                head = head.orderBy(F.col("df").desc(), "term").limit(
+                    self.AUTO_PRELOAD_MAX_TERMS)
             rows = (head
-                    .select("term", "idf_bm25", "idf_ref", "df",
+                    .select("term", "df",
                             F.pmod(F.xxhash64("term"), F.lit(n_buckets))
                             .cast("int").alias("bucket")).collect())
             self.index["idf_cache"] = {
-                "idf_bm25": {r["term"]: float(r["idf_bm25"]) for r in rows},
-                "idf_ref": {r["term"]: float(r["idf_ref"]) for r in rows},
-                "df": {r["term"]: float(r["df"]) for r in rows},
-            }
+                "df": {r["term"]: float(r["df"]) for r in rows}}
             if partial:
                 self.index["idf_cache"]["partial"] = True
             for r in rows:
@@ -981,7 +972,7 @@ class Searcher:
 
     def synonym(self, groups: list[list[str]], k: int = 10) -> DataFrame:
         """Synonym-group scoring over the warmed index — the cached
-        dictionary serves the per-group min-idf lookup (one driver dict
+        dictionary serves the per-group max-df lookup (one driver dict
         hit per member instead of a parquet probe)."""
         return bm25_synonym_topk(self.spark, self.index, groups, k=k)
 
@@ -1023,14 +1014,11 @@ class Searcher:
 # Reference-parity ranker (Q3–Q9)
 # ---------------------------------------------------------------------------
 
-def parity_word_scores(posting_rows: DataFrame, terms_df: DataFrame,
-                       n_docs: int, query_terms: list[str],
-                       idf_cache: dict | None = None) -> DataFrame:
+def parity_word_scores(posting_rows: DataFrame, index: dict,
+                       query_terms: list[str]) -> DataFrame:
     """Q3/Q4 words sub-scorer: Σ_w  tf·(1+ln tf)·ln(1+N/df) with the
     occurrence-count multiplier quirk, + BIT_OR(important)."""
-    weights = pd.Series(query_terms).value_counts()
-    idf = query_idf(terms_df, query_terms, "idf_ref", idf_cache)
-    iw = {t: idf[t] * float(weights[t]) for t in idf}
+    iw = query_term_weights(index, query_terms, ref_idf)
     if not iw:
         return empty_frame(
             posting_rows.sparkSession,
@@ -1231,8 +1219,7 @@ def bm25_proximity_topk(spark: SparkSession, index: dict,
     empty = "doc_id long, score double, min_dist long"
     if not q_terms:
         return empty_frame(spark, empty)
-    iw = query_term_weights(index["terms"], q_terms,
-                            index.get("idf_cache"))
+    iw = query_term_weights(index, q_terms)
     if not iw:
         return empty_frame(spark, empty)
     need_pos = prox_weight > 0 and len(set(q_terms)) >= 2
@@ -1329,7 +1316,7 @@ def parity_phrase_scores(spark: SparkSession, index: dict, phrase: list[str],
     n_docs = int(index["stats"]["n_docs"])
     empty = empty_frame(
         spark, "doc_id long, relevance double, important int, is_phrase int")
-    dfs = query_idf(index["terms"], phrase, "df", index.get("idf_cache"))
+    dfs = query_df(index["terms"], phrase, index.get("idf_cache"))
     if any(t not in dfs for t in phrase):
         return empty
     if two_pass is None:
@@ -1347,7 +1334,7 @@ def parity_phrase_scores(spark: SparkSession, index: dict, phrase: list[str],
         return empty_frame(
             spark,
             "doc_id long, relevance double, important int, is_phrase int")
-    idf = float(np.log(1.0 + n_docs / df_phrase))
+    idf = ref_idf(df_phrase, n_docs)
     return matches.select(
         "doc_id",
         (F.lit(idf) * (1 + F.log(F.col("m")))).alias("relevance"),
@@ -1374,9 +1361,7 @@ def parity_search(spark: SparkSession, index: dict, query: str,
     if q_terms:
         rows = query_term_postings(index["postings"], q_terms,
                                    int(index["stats"]["n_buckets"]))
-        parts.append(parity_word_scores(rows, index["terms"],
-                                        int(index["stats"]["n_docs"]), q_terms,
-                                        index.get("idf_cache")))
+        parts.append(parity_word_scores(rows, index, q_terms))
     for ph in phrases:
         parts.append(parity_phrase_scores(spark, index, ph, q_terms,
                                            slop=slop))
@@ -1476,13 +1461,11 @@ def more_like_this(spark: SparkSession, index: dict, docs: DataFrame,
     driver-side with THE INDEX'S OWN analyzer (stats.profile — a
     code-profile index stems/splits identifiers, so deriving keywords
     with any other tokenizer would silently miss the dictionary), and
-    the df lookup is query_idf's term-IN pushdown scan of the k distinct
+    the df lookup is query_df's term-IN pushdown scan of the k distinct
     doc terms — the full vocabulary table is never streamed, unlike the
     distributed batch path (report.doc_keywords) which pays a dictionary
     join because it keywords EVERY doc. One doc's content on the driver
     is bounded by the analyzer's own field-truncation profiles."""
-    import math
-
     from ..functions.analysis import PROFILES
     src_rows = (docs.filter(F.col(id_col) == doc_id)
                 .select(text_col).limit(1).collect())
@@ -1491,15 +1474,9 @@ def more_like_this(spark: SparkSession, index: dict, docs: DataFrame,
         return empty
     profile = str(index["stats"].get("profile", "simple"))
     toks = PROFILES[profile](src_rows[0][0])
-    tf: dict[str, int] = {}
-    for t in toks:
-        tf[t] = tf.get(t, 0) + 1
-    dfs = query_idf(index["terms"], list(tf), "df", index.get("idf_cache"))
-    n_docs = int(index["stats"]["n_docs"])
-    scored = sorted(
-        ((-tf[t] * math.log(1.0 + n_docs / dfs[t]), t) for t in tf
-         if t in dfs and dfs[t] > 0))
-    terms = [t for _, t in scored[:k_terms]]
+    weights = query_term_weights(index, toks, ref_idf)
+    terms = [t for _, t in sorted((-w, t) for t, w in weights.items())
+             [:k_terms]]
     if not terms:
         return empty
     res = bm25_topk_tokens(spark, index, terms, k + 1)
@@ -1674,8 +1651,7 @@ def _candidate_bound(index: dict, q_terms: list[str]) -> int | None:
     over the postings)."""
     if not q_terms:
         return 0
-    dfm = query_idf(index["terms"], q_terms, "df",
-                    index.get("idf_cache"))
+    dfm = query_df(index["terms"], q_terms, index.get("idf_cache"))
     return int(sum(dfm.values()))
 
 
@@ -1755,13 +1731,12 @@ def bm25_synonym_topk(spark: SparkSession, index: dict,
                     f"term {t!r} appears in more than one synonym group")
             term_gid[t] = gid
     all_terms = list(term_gid)
-    idf = query_idf(index["terms"], all_terms, "idf_bm25",
-                    index.get("idf_cache"))
-    gw = {}
-    for gid, g in enumerate(groups):
-        known = [idf[t] for t in g if t in idf]
-        if known:
-            gw[gid] = min(known)  # max-df member's idf
+    dfs = query_df(index["terms"], all_terms, index.get("idf_cache"))
+    # each group weighs once, at the idf of its max-df member
+    group_df = {gid: max(dfs[t] for t in g if t in dfs)
+                for gid, g in enumerate(groups) if any(t in dfs for t in g)}
+    gw = _bag_weights(list(group_df), group_df,
+                      int(index["stats"]["n_docs"]))
     if not gw:
         return empty_frame(spark, "doc_id long, score double")
     avgdl = float(index["stats"]["avgdl"])
@@ -1815,8 +1790,7 @@ def bm25_explain_topk(spark: SparkSession, index: dict,
                     "dl int, partial double")
     if not q_terms:
         return empty_frame(spark, empty_schema)
-    iw = query_term_weights(index["terms"], q_terms,
-                            index.get("idf_cache"))
+    iw = query_term_weights(index, q_terms)
     if not iw:
         return empty_frame(spark, empty_schema)
     avgdl = float(index["stats"]["avgdl"])

@@ -64,13 +64,10 @@ def query_range_bounds(index: dict, q_terms: list[str],
     POSTING LIST (128 entries), not doc space — a sparse term's block can
     span many ranges, so its bound is charged to every range in
     [first_doc>>rb, last_doc>>rb] (bounded by the segment's range count)."""
-    from .search import _term_weight_map, query_idf
+    from .search import _term_weight_map, query_term_weights
 
     n_buckets = int(index["stats"]["n_buckets"])
-    weights = pd.Series(q_terms).value_counts()
-    idf = query_idf(index["terms"], q_terms, "idf_bm25",
-                    index.get("idf_cache"))
-    iw = {t: idf[t] * float(weights[t]) for t in idf}
+    iw = query_term_weights(index, q_terms)
     if not iw:
         spark = SparkSession.getActiveSession()
         return empty_frame(spark, "rng long, ub double")
@@ -217,15 +214,12 @@ def bm25_topk_pruned_terms(spark: SparkSession, index: dict,
     only add overhead, measured +4–8 s per hot query at 2.4M docs)."""
     if not q_terms:
         return empty_frame(spark, "doc_id long, score double")
-    avgdl = float(index["stats"]["avgdl"])
 
     def exhaustive():
-        from .search import bm25_scores as _scores
         from .search import query_term_postings as _qtp
         rows = _qtp(index["postings"], q_terms,
                     int(index["stats"]["n_buckets"]))
-        return (_scores(rows, index["terms"], avgdl, q_terms,
-                        index.get("idf_cache"))
+        return (bm25_scores(rows, index, q_terms)
                 .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
                 .select("doc_id", "score"))
 
@@ -234,8 +228,7 @@ def bm25_topk_pruned_terms(spark: SparkSession, index: dict,
     def theta_from_probe(probe: list[int]) -> float:
         probe_rows_df = query_term_postings_in_ranges(index, q_terms, probe,
                                                       range_bits)
-        seed = (bm25_scores(probe_rows_df, index["terms"], avgdl, q_terms,
-                            index.get("idf_cache"))
+        seed = (bm25_scores(probe_rows_df, index, q_terms)
                 .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
                 .collect())
         return seed[-1]["score"] if len(seed) >= k else 0.0
@@ -259,8 +252,7 @@ def bm25_topk_pruned_terms(spark: SparkSession, index: dict,
             return exhaustive()
         rows = query_term_postings_in_ranges(index, q_terms, surviving_rngs,
                                              range_bits, max_mask_ranges)
-        return (bm25_scores(rows, index["terms"], avgdl, q_terms,
-                            index.get("idf_cache"))
+        return (bm25_scores(rows, index, q_terms)
                 .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
                 .select("doc_id", "score"))
 
@@ -283,8 +275,7 @@ def bm25_topk_pruned_terms(spark: SparkSession, index: dict,
     surviving = bounds.filter(F.col("ub") >= F.lit(float(theta)))
     rows = query_term_postings_in_ranges(index, q_terms, surviving,
                                          range_bits, max_mask_ranges)
-    return (bm25_scores(rows, index["terms"], avgdl, q_terms,
-                        index.get("idf_cache"))
+    return (bm25_scores(rows, index, q_terms)
             .orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
             .select("doc_id", "score"))
 

@@ -141,7 +141,7 @@ def build_index_resumable(spark: SparkSession, corpus: DataFrame,
     # publish: global dictionary + stats over all chunks
     postings_all = spark.read.option("basePath", os.path.join(out_dir, "postings")) \
         .parquet(os.path.join(out_dir, "postings"))
-    terms = term_stats(postings_all, n_docs)
+    terms = term_stats(postings_all)
     terms.write.mode("overwrite").parquet(os.path.join(out_dir, "terms"))
     stats_row = dict(stats, profile=profile, seg_bits=seg_bits,
                      n_buckets=n_buckets, k1=1.2, b=0.75,

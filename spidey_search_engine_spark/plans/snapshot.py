@@ -151,7 +151,7 @@ def publish_delete(spark: SparkSession, out_dir: str,
     sent = cleaned_w.filter(F.col("bucket") == n_buckets)
     new_stats = doc_stats(doc_lengths(sent))
     query_view = cleaned_w.filter(F.col("bucket") < n_buckets)
-    terms = term_stats(query_view, new_stats["n_docs"])
+    terms = term_stats(query_view)
     terms.write.mode("overwrite").parquet(os.path.join(vdir, "terms"))
 
     docs = spark.read.parquet(os.path.join(out_dir, cur["docs"]))

@@ -189,7 +189,7 @@ def publish_index(spark: SparkSession, out_dir: str, profile: str = "code",
     spark.catalog.refreshByPath(postings_dir)
     postings_all = spark.read.option("basePath", postings_dir) \
         .parquet(postings_dir)
-    terms = term_stats(postings_all, stats["n_docs"])
+    terms = term_stats(postings_all)
     terms.write.mode("overwrite").parquet(os.path.join(out_dir, "terms"))
     stats_row = dict(stats, profile=profile, seg_bits=seg_bits,
                      n_buckets=n_buckets, k1=1.2, b=0.75)

@@ -204,7 +204,7 @@ def test_publish_with_open_searcher_equals_closed(spark, corpus_pdf,
     publish_index(spark, out, profile="code", seg_bits=6, n_buckets=8)
 
     def terms():
-        return {r["term"]: (r["df"], r["cf"], r["idf_bm25"]) for r in
+        return {r["term"]: (r["df"], r["cf"]) for r in
                 spark.read.parquet(os.path.join(out, "terms")).collect()}
 
     searcher = Searcher(spark, load_index_resumable(spark, out))

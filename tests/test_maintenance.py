@@ -18,9 +18,11 @@ def _postings_map(df):
 
 
 def test_delete_docs_equals_fresh_build(spark, corpus_pdf, tmp_path):
-    from spidey_search_engine_spark.operators.build import build_index, load_index
-    from spidey_search_engine_spark.operators.maintenance import (
-        delete_docs_postings, refresh_term_stats)
+    from spidey_search_engine_spark.operators.build import (build_index,
+                                                            load_index,
+                                                            term_stats)
+    from spidey_search_engine_spark.operators.maintenance import \
+        delete_docs_postings
 
     out_full = str(tmp_path / "full")
     corpus = spark.createDataFrame(corpus_pdf).repartition(4)
@@ -46,8 +48,8 @@ def test_delete_docs_equals_fresh_build(spark, corpus_pdf, tmp_path):
     assert _postings_map(cleaned) == _postings_map(fresh)
 
     # df reflects deletions exactly
-    stats = refresh_term_stats(
-        cleaned, int(idx["stats"]["n_docs"]) - len(victims))
+    stats = term_stats(cleaned)
+    assert stats.columns == ["term", "df", "cf"]
     df_after = {r["term"]: r["df"] for r in stats.collect()}
     df_fresh = {r["term"]: r["n"] for r in
                 fresh.groupBy("term").agg(F.sum("n_docs").alias("n")).collect()}

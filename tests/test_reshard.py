@@ -208,6 +208,25 @@ def test_index_diff_and_cli_compare(spark, tmp_path, mono, capsys):
     assert main(["compare", "--a", mono_dir, "--b", other_dir]) == 1
 
 
+def test_index_diff_compares_doc_lengths(mono):
+    """Two indexes that differ only in one doc's length are not equal:
+    the DOCLEN/DOCSHA sentinel rows are pruned from the query-facing
+    postings, so index_diff compares the docs tables' (doc_id, n_tokens,
+    content_sha256) rows."""
+    from spidey_search_engine_spark.operators.diffing import index_diff
+
+    _, idx = mono
+    for col, edit in (("n_tokens", F.col("n_tokens") + 1),
+                      ("content_sha256", F.lit("0" * 64))):
+        other = dict(idx, docs=idx["docs"].withColumn(
+            col, F.when(F.col("doc_id") == 7, edit).otherwise(F.col(col))))
+        res = index_diff(idx, other)
+        assert not res["equal"], col
+        assert res["stats_equal"] and res["term_mismatches"] == 0
+        assert res["posting_mismatches"] == 0 and res["doc_mismatches"] == 1
+    assert index_diff(idx, idx)["doc_mismatches"] == 0
+
+
 def test_reshard_cli_rejects_bad_ngram_flags(tmp_path, capsys):
     """`reshard` validates its n-gram flags the way `build` does, before
     any work: an n-gram projection needs the wildcard projections it

@@ -106,12 +106,17 @@ def test_over_budget_falls_back_to_spark(spark, index, searcher,
             sorted(bm25_topk_batch(spark, s.index, queries, 8).collect())
 
 
-def test_resident_needs_full_preload(spark, index):
+def test_resident_needs_full_preload(spark, index, monkeypatch):
     from spidey_search_engine_spark.operators.search import Searcher
-    for kw in ({"cache_postings": False}, {"max_preload_terms": 5},
-               {"preload_dict": False}):
+    for kw in ({"cache_postings": False}, {"preload_dict": False}):
         with Searcher(spark, index, **kw) as s:
             assert s._resident is None, kw
+    # a head-only dictionary (over the preload budget) keeps postings
+    # on the Spark routes too
+    monkeypatch.setattr(Searcher, "AUTO_PRELOAD_MAX_TERMS", 5)
+    with Searcher(spark, index) as s:
+        assert s.index["idf_cache"].get("partial") is True
+        assert s._resident is None
 
 
 def test_resident_query_runs_no_spark_task(spark, searcher):

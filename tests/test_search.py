@@ -3,7 +3,6 @@ and build invariants (§5.3, §5.5)."""
 
 import math
 
-import numpy as np
 import pytest
 
 from tests.oracle import OracleIndex
@@ -124,9 +123,9 @@ def test_searcher_matches_cold_paths(spark, index):
     try:
         for q in ["merge sort", "hash join scan", "zzz_unknown_term",
                   'fast "merge sort"']:
-            cold = [(r["doc_id"], round(r["score"], 10)) for r in
+            cold = [(r["doc_id"], r["score"]) for r in
                     bm25_topk(spark, index, q, k=8).collect()]
-            warm = [(r["doc_id"], round(r["score"], 10)) for r in
+            warm = [(r["doc_id"], r["score"]) for r in
                     s.bm25(q, k=8).collect()]
             assert warm == cold, q
         q = "merge sort parse"
@@ -151,41 +150,41 @@ def test_searcher_matches_cold_paths(spark, index):
             if t not in seen:
                 terms.append(t)
                 seen.add(t)
-        cold_b = [(r["doc_id"], round(r["score"], 10)) for r in
+        cold_b = [(r["doc_id"], r["score"]) for r in
                   bm25_topk_boolean(spark, index, terms, must=["merg"],
                                     exclude=["scan"], k=8).collect()]
-        warm_b = [(r["doc_id"], round(r["score"], 10)) for r in
+        warm_b = [(r["doc_id"], r["score"]) for r in
                   s.boolean(q_terms, must=["merg"], exclude=["scan"],
                             wildcards=["ha*"], k=8).collect()]
         assert warm_b == cold_b and warm_b
         # wildcard patterns lowercase before expansion, same as the CLI
         # path — "HA*" must not silently expand to nothing
-        warm_uc = [(r["doc_id"], round(r["score"], 10)) for r in
+        warm_uc = [(r["doc_id"], r["score"]) for r in
                    s.boolean(q_terms, must=["merg"], exclude=["scan"],
                              wildcards=["HA*"], k=8).collect()]
         assert warm_uc == warm_b
         # the round-4 results-page algebra over the warmed index == cold
         from spidey_search_engine_spark.operators.search import (
             bm25_collapse_topk, bm25_filtered_topk, bm25_synonym_topk)
-        cold_f = [(r["doc_id"], round(r["score"], 10)) for r in
+        cold_f = [(r["doc_id"], r["score"]) for r in
                   bm25_filtered_topk(spark, index, index["docs"],
                                      q_terms, {"lang": "py"},
                                      k=8).collect()]
-        warm_f = [(r["doc_id"], round(r["score"], 10)) for r in
+        warm_f = [(r["doc_id"], r["score"]) for r in
                   s.filtered(q_terms, {"lang": "py"}, k=8).collect()]
         assert warm_f == cold_f and warm_f
-        cold_c = [(r["doc_id"], round(r["score"], 10), r["repo"],
+        cold_c = [(r["doc_id"], r["score"], r["repo"],
                    r["group_size"]) for r in
                   bm25_collapse_topk(spark, index, index["docs"],
                                      q_terms, "repo", k=8).collect()]
-        warm_c = [(r["doc_id"], round(r["score"], 10), r["repo"],
+        warm_c = [(r["doc_id"], r["score"], r["repo"],
                    r["group_size"]) for r in
                   s.collapse(q_terms, "repo", k=8).collect()]
         assert warm_c == cold_c and warm_c
-        cold_s = [(r["doc_id"], round(r["score"], 10)) for r in
+        cold_s = [(r["doc_id"], r["score"]) for r in
                   bm25_synonym_topk(spark, index,
                                     [["merg", "sort"]], k=8).collect()]
-        warm_s = [(r["doc_id"], round(r["score"], 10)) for r in
+        warm_s = [(r["doc_id"], r["score"]) for r in
                   s.synonym([["merg", "sort"]], k=8).collect()]
         assert warm_s == cold_s and warm_s
         # warm pagination: Searcher.after page 1 + cursor page 2 stitch
@@ -219,10 +218,10 @@ def test_phrase_two_pass_equals_one_pass(spark, index):
     for q in ['"merge sort"', '"binary search"']:
         _, phrases = analyze_query(q)
         (ph,) = phrases
-        one = sorted((r["doc_id"], round(r["relevance"], 10))
+        one = sorted((r["doc_id"], r["relevance"])
                      for r in parity_phrase_scores(spark, index, ph, ph,
                                                    two_pass=False).collect())
-        two = sorted((r["doc_id"], round(r["relevance"], 10))
+        two = sorted((r["doc_id"], r["relevance"])
                      for r in parity_phrase_scores(spark, index, ph, ph,
                                                    two_pass=True).collect())
         assert one == two, q
@@ -232,86 +231,64 @@ def test_phrase_two_pass_equals_one_pass(spark, index):
     assert got == []
 
 
-def test_searcher_head_only_dict(spark, index):
-    """head_df_threshold preloads only the high-df dictionary head; a query
-    mixing head terms, a TAIL term (df <= threshold, absent from the cache)
-    and an absent term must still equal the cold path exactly — the tail
-    term resolves through the pushdown fallback, memoized on repeat."""
-    from pyspark.sql import functions as F
-    from spidey_search_engine_spark.operators.search import Searcher, bm25_topk
-
+def test_searcher_auto_head_preload(spark, index, monkeypatch):
+    """The full-dictionary driver collect is only the default while |V| is
+    under the preload budget: past `AUTO_PRELOAD_MAX_TERMS` the Searcher
+    auto-switches to head-only (top-df) preload + pushdown fallback — a
+    huge-vocab index must never materialize its whole dictionary
+    driver-side by default. A query mixing head terms, a TAIL term
+    (absent from the cache) and an absent term returns exactly the cold
+    path's floats; the tail hit and the absence are memoized on first
+    use, and the repeat returns the same floats."""
     from spidey_search_engine_spark.functions.analysis import analyze_query
+    from spidey_search_engine_spark.operators.search import (Searcher,
+                                                             bm25_topk)
+
     dfs = {r["term"]: r["df"] for r in index["terms"].collect()}
-    thresh = int(np.median(list(dfs.values())))
+    n_terms = len(dfs)
+    cap = 5
+    assert n_terms > cap
 
     def fixed_point(t):  # query analysis must reproduce the stored term
         return analyze_query(t) == ([t], [])
 
-    tail_terms = [t for t, d in sorted(dfs.items())
-                  if d <= thresh and fixed_point(t)]
-    head_terms = [t for t, d in sorted(dfs.items())
-                  if d > thresh and fixed_point(t)]
-    assert tail_terms and head_terms
-    s = Searcher(spark, index, cache_postings=True, coalesce_to=4,
-                 head_df_threshold=thresh)
+    def top(q):
+        return [(r["doc_id"], r["score"]) for r in q.collect()]
+
+    monkeypatch.setattr(Searcher, "AUTO_PRELOAD_MAX_TERMS", cap)
+    s = Searcher(spark, index, cache_postings=True, coalesce_to=4)
     try:
         cache = s.index["idf_cache"]
         assert cache.get("partial") is True
-        assert tail_terms[0] not in cache["idf_bm25"]
+        assert len(cache["df"]) == cap          # never the full |V|
+        # the head really is the top-df slice
+        ranked = sorted(dfs.values(), reverse=True)
+        assert all(d >= ranked[cap] or d == ranked[cap - 1]
+                   for d in cache["df"].values())
+        for q in ["merge sort", "hash join scan zzz_unknown_term"]:
+            warm = top(s.bm25(q, k=8))
+            assert warm == top(bm25_topk(spark, index, q, k=8)) and warm, q
+        head_terms = [t for t in sorted(cache["df"]) if fixed_point(t)]
+        tail_terms = [t for t in sorted(dfs)
+                      if t not in cache["df"] and fixed_point(t)]
+        assert tail_terms and head_terms
         q = f"{head_terms[0]} {tail_terms[0]} zzz_unknown_term"
-        cold = [(r["doc_id"], round(r["score"], 10)) for r in
-                bm25_topk(spark, index, q, k=8).collect()]
-        warm = [(r["doc_id"], round(r["score"], 10)) for r in
-                s.bm25(q, k=8).collect()]
+        cold = top(bm25_topk(spark, index, q, k=8))
+        warm = top(s.bm25(q, k=8))
         assert warm == cold and warm
         # first use memoized both the tail hit and the absence
-        assert cache["idf_bm25"].get(tail_terms[0]) is not None
-        assert "zzz_unknown_term" in cache["idf_bm25"] \
-            and cache["idf_bm25"]["zzz_unknown_term"] is None
-        warm2 = [(r["doc_id"], round(r["score"], 10)) for r in
-                 s.bm25(q, k=8).collect()]
-        assert warm2 == cold
-    finally:
-        s.close()
-
-
-def test_searcher_auto_head_preload(spark, index):
-    """The full-dictionary driver collect is only the default while |V| is
-    under the preload budget: past `max_preload_terms` the Searcher
-    auto-switches to head-only (top-df) preload + pushdown fallback — a
-    huge-vocab index must never materialize its whole dictionary
-    driver-side by default. Results stay exactly the cold path's."""
-    from spidey_search_engine_spark.operators.search import (Searcher,
-                                                             bm25_topk)
-
-    n_terms = index["terms"].count()
-    cap = 5
-    assert n_terms > cap
-    s = Searcher(spark, index, cache_postings=True, coalesce_to=4,
-                 max_preload_terms=cap)
-    try:
-        cache = s.index["idf_cache"]
-        assert cache.get("partial") is True
-        assert len(cache["idf_bm25"]) == cap          # never the full |V|
-        # the head really is the top-df slice
-        dfs = sorted((r["df"] for r in index["terms"].collect()),
-                     reverse=True)
-        assert all(cache["df"][t] >= dfs[cap] or cache["df"][t] == dfs[cap - 1]
-                   for t in cache["df"])
-        for q in ["merge sort", "hash join scan zzz_unknown_term"]:
-            cold = [(r["doc_id"], round(r["score"], 10)) for r in
-                    bm25_topk(spark, index, q, k=8).collect()]
-            warm = [(r["doc_id"], round(r["score"], 10)) for r in
-                    s.bm25(q, k=8).collect()]
-            assert warm == cold and warm, q
+        assert cache["df"][tail_terms[0]] == float(dfs[tail_terms[0]])
+        assert "zzz_unknown_term" in cache["df"] \
+            and cache["df"]["zzz_unknown_term"] is None
+        assert top(s.bm25(q, k=8)) == cold
     finally:
         s.close()
     # under the budget nothing changes: full preload, no partial flag
-    s2 = Searcher(spark, index, cache_postings=False,
-                  max_preload_terms=n_terms)
+    monkeypatch.setattr(Searcher, "AUTO_PRELOAD_MAX_TERMS", n_terms)
+    s2 = Searcher(spark, index, cache_postings=False)
     try:
         assert "partial" not in s2.index["idf_cache"]
-        assert len(s2.index["idf_cache"]["idf_bm25"]) == n_terms
+        assert len(s2.index["idf_cache"]["df"]) == n_terms
     finally:
         s2.close()
 
@@ -338,15 +315,15 @@ def test_bm25_batch_equals_per_query(spark, index):
         got = sorted(by_q[qid], key=lambda r: r["rank"])
         assert [r["rank"] for r in got] == list(range(1, len(got) + 1))
         single = bm25_topk(spark, index, queries[qid], k=8).collect()
-        assert [(r["doc_id"], round(r["score"], 10)) for r in got] == \
-            [(r["doc_id"], round(r["score"], 10)) for r in single], qid
+        assert [(r["doc_id"], r["score"]) for r in got] == \
+            [(r["doc_id"], r["score"]) for r in single], qid
 
     s = Searcher(spark, index, cache_postings=False)
     try:
         warm = s.bm25_batch({"q1": queries["q1"]}, k=8).collect()
-        assert [(r["doc_id"], round(r["score"], 10))
+        assert [(r["doc_id"], r["score"])
                 for r in sorted(warm, key=lambda r: r["rank"])] == \
-            [(r["doc_id"], round(r["score"], 10))
+            [(r["doc_id"], r["score"])
              for r in bm25_topk(spark, index, queries["q1"], k=8).collect()]
     finally:
         s.close()
@@ -677,7 +654,7 @@ def test_bm25_synonym_topk(spark, index):
 
     from spidey_search_engine_spark.operators.build import K1, B
     from spidey_search_engine_spark.operators.search import (
-        bm25_synonym_topk, bm25_topk_tokens, query_term_postings)
+        bm25_idf, bm25_synonym_topk, bm25_topk_tokens, query_term_postings)
 
     # singleton groups == the plain ranker, bit for bit, whatever the
     # order the groups are given in
@@ -691,7 +668,8 @@ def test_bm25_synonym_topk(spark, index):
 
     # blended group: recompute independently
     groups = [["merg", "sort"], ["binari"]]
-    idf = {r["term"]: r["idf_bm25"] for r in
+    n_docs = int(index["stats"]["n_docs"])
+    idf = {r["term"]: bm25_idf(r["df"], n_docs) for r in
            index["terms"].filter(
                F.col("term").isin("merg", "sort", "binari")).collect()}
     rows = query_term_postings(index["postings"],

@@ -35,8 +35,7 @@ def test_bounds_are_sound(spark, index):
               query_range_bounds(index, q_terms, range_bits).collect()}
     rows = query_term_postings(index["postings"], q_terms,
                                int(index["stats"]["n_buckets"]))
-    scores = bm25_scores(rows, index["terms"],
-                         float(index["stats"]["avgdl"]), q_terms).collect()
+    scores = bm25_scores(rows, index, q_terms).collect()
     assert scores
     for r in scores:
         rng = r["doc_id"] >> range_bits
