@@ -231,16 +231,56 @@ def test_phrase_two_pass_equals_one_pass(spark, index):
     assert got == []
 
 
+def test_searcher_head_only_dict(spark, index, monkeypatch):
+    """A preload budget below |V| keeps only the high-df dictionary head
+    driver-side; a query mixing head terms, a TAIL term (absent from the
+    cache) and an absent term must still equal the cold path exactly — the
+    tail term resolves through the pushdown fallback, and both the tail hit
+    and the absence are memoized on first use; the repeat returns the same
+    floats."""
+    from spidey_search_engine_spark.functions.analysis import analyze_query
+    from spidey_search_engine_spark.operators.search import (Searcher,
+                                                             bm25_topk)
+
+    dfs = {r["term"]: r["df"] for r in index["terms"].collect()}
+    thresh = sorted(dfs.values())[len(dfs) // 2]
+    head_size = sum(1 for d in dfs.values() if d > thresh)
+    assert 0 < head_size < len(dfs)
+
+    def fixed_point(t):  # query analysis must reproduce the stored term
+        return analyze_query(t) == ([t], [])
+
+    def top(q):
+        return [(r["doc_id"], r["score"]) for r in q.collect()]
+
+    monkeypatch.setattr(Searcher, "AUTO_PRELOAD_MAX_TERMS", head_size)
+    s = Searcher(spark, index, cache_postings=True, coalesce_to=4)
+    try:
+        cache = s.index["idf_cache"]
+        assert cache.get("partial") is True
+        head_terms = [t for t in sorted(cache["df"]) if fixed_point(t)]
+        tail_terms = [t for t in sorted(dfs)
+                      if t not in cache["df"] and fixed_point(t)]
+        assert tail_terms and head_terms
+        q = f"{head_terms[0]} {tail_terms[0]} zzz_unknown_term"
+        cold = top(bm25_topk(spark, index, q, k=8))
+        warm = top(s.bm25(q, k=8))
+        assert warm == cold and warm
+        # first use memoized both the tail hit and the absence
+        assert cache["df"][tail_terms[0]] == float(dfs[tail_terms[0]])
+        assert "zzz_unknown_term" in cache["df"] \
+            and cache["df"]["zzz_unknown_term"] is None
+        assert top(s.bm25(q, k=8)) == cold
+    finally:
+        s.close()
+
+
 def test_searcher_auto_head_preload(spark, index, monkeypatch):
     """The full-dictionary driver collect is only the default while |V| is
     under the preload budget: past `AUTO_PRELOAD_MAX_TERMS` the Searcher
     auto-switches to head-only (top-df) preload + pushdown fallback — a
     huge-vocab index must never materialize its whole dictionary
-    driver-side by default. A query mixing head terms, a TAIL term
-    (absent from the cache) and an absent term returns exactly the cold
-    path's floats; the tail hit and the absence are memoized on first
-    use, and the repeat returns the same floats."""
-    from spidey_search_engine_spark.functions.analysis import analyze_query
+    driver-side by default. Results stay exactly the cold path's."""
     from spidey_search_engine_spark.operators.search import (Searcher,
                                                              bm25_topk)
 
@@ -248,9 +288,6 @@ def test_searcher_auto_head_preload(spark, index, monkeypatch):
     n_terms = len(dfs)
     cap = 5
     assert n_terms > cap
-
-    def fixed_point(t):  # query analysis must reproduce the stored term
-        return analyze_query(t) == ([t], [])
 
     def top(q):
         return [(r["doc_id"], r["score"]) for r in q.collect()]
@@ -268,19 +305,6 @@ def test_searcher_auto_head_preload(spark, index, monkeypatch):
         for q in ["merge sort", "hash join scan zzz_unknown_term"]:
             warm = top(s.bm25(q, k=8))
             assert warm == top(bm25_topk(spark, index, q, k=8)) and warm, q
-        head_terms = [t for t in sorted(cache["df"]) if fixed_point(t)]
-        tail_terms = [t for t in sorted(dfs)
-                      if t not in cache["df"] and fixed_point(t)]
-        assert tail_terms and head_terms
-        q = f"{head_terms[0]} {tail_terms[0]} zzz_unknown_term"
-        cold = top(bm25_topk(spark, index, q, k=8))
-        warm = top(s.bm25(q, k=8))
-        assert warm == cold and warm
-        # first use memoized both the tail hit and the absence
-        assert cache["df"][tail_terms[0]] == float(dfs[tail_terms[0]])
-        assert "zzz_unknown_term" in cache["df"] \
-            and cache["df"]["zzz_unknown_term"] is None
-        assert top(s.bm25(q, k=8)) == cold
     finally:
         s.close()
     # under the budget nothing changes: full preload, no partial flag
