@@ -4,7 +4,7 @@ Measures the two authoritative metrics from BASELINE.json:
 * index-build throughput (files/sec) — full code-profile build (tokenize →
   partial postings → segment merge → compress → partitioned write) over the
   `documents` table at $SPARK_GRAFT_SF_DIR,
-* BM25 top-10 query latency — exhaustive and block-max-pruned paths, plus
+* BM25 top-10 query latency (warm, batch, colocated), plus
   phrase/parity/relational/ANN headline queries.
 
 Prints ONE JSON line:
@@ -35,7 +35,6 @@ def main() -> None:
     from spidey_search_engine_spark.operators.search import (Searcher,
                                                              bm25_topk,
                                                              parity_search)
-    from spidey_search_engine_spark.operators.wand import bm25_topk_pruned
     from spidey_search_engine_spark.session import get_spark
     from spidey_search_engine_spark.sources.tables import documents_as_corpus
     from spidey_search_engine_spark import entry_queries as EQ
@@ -103,10 +102,6 @@ def main() -> None:
         timed(name, lambda q=q: searcher.bm25(q, k=10).collect(),
               repeats=2)
         lat.append(timings[name])
-    for name, q in list(bm25_queries.items())[:2]:
-        timed(name + "_pruned",
-              lambda q=q: searcher.bm25_pruned(q, k=10).collect(),
-              repeats=2)
     # batch serving: all 5 queries in ONE job (eval-workload shape)
     # warm with an IN-VOCABULARY query: OOV terms short-circuit before the
     # probe/decode/window stages and would leave the batch path cold
@@ -148,21 +143,6 @@ def main() -> None:
     timed("bm25_q1_colocated",
           lambda: searcher.bm25_colocated(bm25_queries["bm25_q1"],
                                           k=10).collect(), repeats=2)
-    # round-5 impact-ordered early termination (exact top-k): projection
-    # built untimed (an opt-in aux index, like the Searcher warm); the
-    # probe is the serving-path metric. Guarded — bench must never crash.
-    try:
-        from spidey_search_engine_spark.operators.impact import (
-            bm25_impact_topk, load_impact_index, write_impact_index)
-        imp_dir = os.path.join(idx_dir, "impact")
-        write_impact_index(spark, searcher.index, imp_dir)
-        _imp = load_impact_index(spark, imp_dir)
-        timed("bm25_q1_impact",
-              lambda: bm25_impact_topk(spark, searcher.index, _imp,
-                                       bm25_queries["bm25_q1"],
-                                       k=10).collect(), repeats=2)
-    except Exception as e:  # pragma: no cover - defensive bench guard
-        print(f"impact probe skipped: {e}", file=sys.stderr)
 
     timed("tpch_q1", lambda: EQ.tpch_q1(spark, sf_dir).collect(),
           repeats=2)

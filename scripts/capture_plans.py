@@ -63,30 +63,6 @@ def main() -> None:
         "corpus at scale).",
         capture(EQ.two_stage_topk(spark, sf_dir))))
 
-    # pruned-BM25 surviving-range scan: the bound table stays a DataFrame
-    # (round-2 fix — no driver materialization); surviving ranges reach the
-    # segment scan via a broadcast equi LEFT-SEMI join on the derived
-    # segment id, never a broadcast-nested-loop join
-    from spidey_search_engine_spark.operators import wand as W
-    from pyspark.sql import functions as F
-    bounds = W.query_range_bounds(idx, EQ.QT, 6)
-    # ub >= 0.0 keeps every range (bounds are positive) → the surviving set
-    # is provably non-empty, so the mask probe (limit(1)) finds a row and
-    # the captured plan shows the REAL bounds lineage behind the semi-join,
-    # not an empty-literal fallback
-    surviving = bounds.filter(F.col("ub") >= 0.0)
-    rows_p = W.query_term_postings_in_ranges(idx, EQ.QT, surviving, 6,
-                                             max_mask_ranges=0)
-    sections.append((
-        "Pruned BM25: surviving doc-ranges → segment scan (no driver "
-        "materialization)",
-        "Look for: the bounds lineage (metadata-only scan + two "
-        "HashAggregates) feeding a BroadcastExchange, then "
-        "BroadcastHashJoin LeftSemi on the derived `segment` key into the "
-        "bucket/term-pruned postings scan; no BroadcastNestedLoopJoin, no "
-        "collect of the bound table.",
-        capture(rows_p)))
-
     # phrase two-pass decode: the positional (pass-2) scan must show the
     # broadcast semi-join on `segment` pruning segments that contain no
     # doc-set-intersection doc; the doc-level mask happens inside the
@@ -693,8 +669,9 @@ def main() -> None:
         "one bytes-only exchange, per-doc aggregation inside the kernel",
         "Look for: the pruned segment scan (PartitionFilters bucket IN, "
         "PushedFilters term IN) feeding ONE Exchange "
-        "hashpartitioning(segment) whose rows are (term, segment, bin) — "
-        "the COMPRESSED binaries, never decoded posting rows; a local "
+        "hashpartitioning(segment) whose rows are (term, segment, bin, "
+        "max_tf, min_dl) — the COMPRESSED binaries plus each segment's "
+        "block-max bound inputs, never decoded posting rows; a local "
         "Sort (segment, term, band-free) so the kernel's fold order is "
         "deterministic; then a single MapInPandas producing the "
         "per-segment top-k candidates. No (query_id, doc_id) hash "
@@ -702,43 +679,6 @@ def main() -> None:
         "the two full-row exchanges the round-3 batch plan paid are "
         "gone; the caller's window sees n_segments × |Q| × k rows.",
         capture(dbatch)))
-
-    # Impact-ordered prefix probe: (band, bucket) partition pruning
-    from spidey_search_engine_spark.operators.impact import (
-        load_impact_index, write_impact_index)
-    imp_dir = EQ.entry_index_dir(sf_dir) + "_impact"
-    if not os.path.exists(os.path.join(imp_dir, "meta.json")):
-        write_impact_index(spark, idx, imp_dir)
-    imp = load_impact_index(spark, imp_dir)
-    from spidey_search_engine_spark.operators.impact import (
-        _colocated_partials)
-    from spidey_search_engine_spark.operators.search import (
-        query_term_weights)
-    iw = query_term_weights(idx, EQ.QT)
-    mcut = S._term_weight_map({t: 1.0 for t in iw})
-    _buckets = sorted(set(S._buckets_of(
-        sorted(iw), int(idx["stats"]["n_buckets"])).values()))
-    prefix = (imp["rows"].filter(F.col("band") <= 1)
-              .filter(F.col("bucket").isin(_buckets)
-                      & F.col("term").isin(sorted(iw)))
-              .filter(F.col("band") <= mcut[F.col("term")]))
-    dimp = _colocated_partials(prefix, iw,
-                               float(idx["stats"]["avgdl"]),
-                               int(idx["stats"]["seg_bits"]), topk=10)
-    sections.append((
-        "Impact-ordered prefix probe (impact._colocated_partials): the "
-        "θ-discovery job reads only the high-impact bands",
-        "Look for: PartitionFilters carrying BOTH band and bucket "
-        "membership (the impact rows are partitioned (band, bucket) — "
-        "the low-impact mass is pruned unread at the file level), "
-        "PushedFilters term IN, the per-term band cut as a literal map "
-        "in the Filter, one Exchange hashpartitioning(segment) of the "
-        "compressed band binaries, and the MapInPandas accumulation "
-        "kernel. Candidate collection re-uses this exact shape with the "
-        "per-doc mask threshold; the exact rescore afterwards adds "
-        "`segment IN (...)` of the candidate segments to the MAIN "
-        "postings scan so non-candidate segments never decode.",
-        capture(dimp)))
 
     from spidey_search_engine_spark.operators.build import merge_partials
     pdirs = os.path.join(EQ.entry_index_dir(sf_dir), "postings")

@@ -10,13 +10,15 @@ Steps:
      (append_index_stream, publish_every=1 → terms/stats published);
   4. CLI `verify` the delta index and the monolithic rebuild (exit 0);
   5. CLI `build` the monolithic index over corpus ∪ delta
-     (--ngram-index --fuzzy-index --impact-index);
+     (--ngram-index --fuzzy-index);
   6. scripted session: plain / boolean(+must,--not) / filtered /
      search_after page-1+2 / batch run FEDERATED over
      [shard_0, shard_1, delta] and MONOLITHIC — outputs must be
      row-identical (scores at 9 decimals); wildcard / fuzzy / suggest /
-     collapse / synonyms / facets / explain / pruned / impact run
-     monolithic (single-index surfaces) and are sanity-asserted.
+     collapse / synonyms / facets / explain run monolithic
+     (single-index surfaces) and are sanity-asserted; "pruned" checks
+     that the default path (the block-max kernel) prints the unpruned
+     ranker's rows.
 
 Run standalone (`python scripts/scenario_smoke.py`, env
 SPIDEY_SCENARIO_DOCS / SPIDEY_SCENARIO_DELTA, defaults 100k/2k at
@@ -61,6 +63,8 @@ def _ranks(rows: list[dict]) -> list[tuple]:
 def run(spark, workdir: str, n_docs: int, n_delta: int) -> dict:
     from pyspark.sql import functions as F
 
+    from spidey_search_engine_spark.operators.build import load_index
+    from spidey_search_engine_spark.operators.search import bm25_topk
     from spidey_search_engine_spark.sources.corpus import generate_corpus_df
     from spidey_search_engine_spark.streaming.incremental import (
         append_index_stream)
@@ -103,7 +107,7 @@ def run(spark, workdir: str, n_docs: int, n_delta: int) -> dict:
     # 4. monolithic rebuild over corpus ∪ delta, with every projection
     _cli(["build", "--input", union_src, "--output", mono_dir,
           "--seg-bits", "10", "--n-buckets", "16",
-          "--ngram-index", "--fuzzy-index", "--impact-index"])
+          "--ngram-index", "--fuzzy-index"])
 
     # 5. verify: per-row sha audit must be clean on both
     _cli(["verify", "--index", delta_idx, "--corpus", delta_src])
@@ -156,16 +160,13 @@ def run(spark, workdir: str, n_docs: int, n_delta: int) -> dict:
                       "--not", "heap", "--k", "10"]))
     assert bl, "boolean"
     checks["boolean_must_not"] = True
-    for name, extra in [
-            ("wildcard", ["--q", "mer* sort", "--k", "10"]),
-            ("pruned", ["--q", "merge sort", "--k", "10", "--pruned"]),
-            ("impact", ["--q", "merge sort", "--k", "10", "--impact"]),
-    ]:
-        rows = _ranks(_cli(["query", *mono, *extra]))
-        assert rows, name
-        if name in ("pruned", "impact"):
-            assert rows == plain, (name, rows[:3], plain[:3])
-        checks[name] = True
+    assert _ranks(_cli(["query", *mono, "--q", "mer* sort", "--k", "10"]))
+    checks["wildcard"] = True
+    unpruned = [(r["doc_id"], round(r["score"], 9)) for r in
+                bm25_topk(spark, load_index(spark, mono_dir), "merge sort",
+                          k=10).collect()]
+    assert plain == unpruned and plain, (plain[:3], unpruned[:3])
+    checks["pruned"] = True
     fz = _ranks(_cli(["query", *mono, "--q", "merj sort", "--k", "10",
                       "--fuzzy"]))
     assert fz == plain, ("fuzzy", fz[:3], plain[:3])

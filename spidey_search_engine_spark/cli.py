@@ -86,10 +86,6 @@ def main(argv: list[str] | None = None) -> int:
                    help="also materialize the SymSpell delete-neighborhood "
                         "index under <output>/fuzzy for `query --fuzzy`")
     b.add_argument("--fuzzy-buckets", type=int, default=64)
-    b.add_argument("--impact-index", action="store_true",
-                   help="also materialize the impact-ordered posting "
-                        "bands under <output>/impact for `query "
-                        "--impact` (early-terminated exact BM25)")
     b.add_argument("--no-wildcard-index", action="store_true",
                    help="skip the prefix-/reversed-term dictionary "
                         "projections (<output>/prefix, <output>/suffix) "
@@ -130,13 +126,6 @@ def main(argv: list[str] | None = None) -> int:
                         "reference's 20-result page)")
     q.add_argument("--parity", action="store_true",
                    help="reference-parity ranker instead of BM25")
-    q.add_argument("--pruned", action="store_true",
-                   help="block-max pruned BM25 path")
-    q.add_argument("--impact", action="store_true",
-                   help="impact-ordered early-terminated BM25 path "
-                        "(needs build --impact-index; identical top-k, "
-                        "wins on tf-skewed hot-term queries where the "
-                        "block-max fraction fallback punts)")
     q.add_argument("--fuzzy", action="store_true",
                    help="correct out-of-dictionary query terms via the "
                         "SymSpell index (<index>/fuzzy if materialized, "
@@ -412,8 +401,6 @@ def main(argv: list[str] | None = None) -> int:
                     help="also write each shard's SymSpell deletion "
                          "index")
     rs.add_argument("--fuzzy-buckets", type=int, default=64)
-    rs.add_argument("--impact-index", action="store_true",
-                    help="also write each shard's impact-ordered bands")
 
     c = sub.add_parser(
         "clean", help="training-corpus cleaning pipeline: unicode "
@@ -549,15 +536,8 @@ def main(argv: list[str] | None = None) -> int:
         if args.k is not None and args.k <= 0:
             p.error(f"--k must be a positive integer (got {args.k})")
         args.k = args.k if args.k is not None else (20 if args.parity else 10)
-        if args.fuzzy and (args.parity or args.pruned):
+        if args.fuzzy and args.parity:
             p.error("--fuzzy is supported on the default BM25 path only")
-        if args.impact and (args.parity or args.pruned or args.fuzzy
-                            or args.facets or args.suggest or args.explain
-                            or args.batch or args.exclude
-                            or args.more_like is not None
-                            or args.boost_important is not None):
-            p.error("--impact is a ranking mode for the default BM25 "
-                    "term path; drop the other mode flags")
         if args.slop and not args.parity:
             p.error("--slop applies to quoted phrases in --parity mode")
         if args.slop < 0:
@@ -572,7 +552,7 @@ def main(argv: list[str] | None = None) -> int:
             p.error("--sig-terms / --histogram / --term-vector are "
                     "different analytics queries; pick one")
         if n_analytics:
-            if (args.parity or args.pruned or args.impact or args.fuzzy
+            if (args.parity or args.fuzzy
                     or args.facets or args.suggest or args.explain
                     or args.batch or args.exclude
                     or args.more_like is not None
@@ -619,13 +599,13 @@ def main(argv: list[str] | None = None) -> int:
             p.error("--facets and --more-like are different queries; "
                     "pick one")
         if ((args.facets or args.more_like is not None)
-                and (args.parity or args.pruned or args.fuzzy)):
+                and (args.parity or args.fuzzy)):
             p.error("--facets/--more-like replace the ranking mode; "
-                    "drop --parity/--pruned/--fuzzy")
+                    "drop --parity/--fuzzy")
         if args.batch:
             if args.q is not None:
                 p.error("--batch reads its queries from FILE; drop --q")
-            if (args.parity or args.pruned or args.impact or args.fuzzy or args.facets
+            if (args.parity or args.fuzzy or args.facets
                     or args.suggest or args.explain or args.exclude
                     or args.more_like is not None
                     or args.boost_important is not None):
@@ -653,7 +633,7 @@ def main(argv: list[str] | None = None) -> int:
                     # like every other cursor-contract violation
                     p.error(f"--after: score must be finite, got "
                             f"{parts[0]!r}")
-            if (args.parity or args.pruned or args.impact or args.fuzzy or args.facets
+            if (args.parity or args.fuzzy or args.facets
                     or args.suggest or args.explain or args.batch
                     or args.exclude or args.more_like is not None
                     or args.proximity is not None):
@@ -668,7 +648,7 @@ def main(argv: list[str] | None = None) -> int:
             if args.proximity <= 0:
                 p.error(f"--proximity must be > 0 (got {args.proximity};"
                         " W=0 is the plain ranker — drop the flag)")
-            if (args.parity or args.pruned or args.impact or args.fuzzy or args.facets
+            if (args.parity or args.fuzzy or args.facets
                     or args.suggest or args.explain or args.batch
                     or args.exclude or args.more_like is not None
                     or args.boost_important is not None
@@ -680,7 +660,7 @@ def main(argv: list[str] | None = None) -> int:
                 p.error("--proximity takes plain terms (no +term / "
                         "wildcards)")
         if args.filter or args.collapse or args.syn:
-            if (args.parity or args.pruned or args.impact or args.fuzzy or args.facets
+            if (args.parity or args.fuzzy or args.facets
                     or args.suggest or args.explain or args.batch
                     or args.exclude or args.more_like is not None
                     or args.after is not None
@@ -728,7 +708,7 @@ def main(argv: list[str] | None = None) -> int:
             if args.corpus is None:
                 p.error("--snippets needs --corpus (the source text to "
                         "cut windows from)")
-            if (args.parity or args.pruned or args.impact or args.fuzzy or args.facets
+            if (args.parity or args.fuzzy or args.facets
                     or args.suggest or args.explain or args.batch
                     or args.more_like is not None):
                 p.error("--snippets decorates the default BM25 result "
@@ -762,12 +742,12 @@ def main(argv: list[str] | None = None) -> int:
         has_must = bool(args.q) and any(
             t.startswith("+") and len(t) > 1 for t in args.q.split())
         if ((args.exclude or has_wild or has_must)
-                and (args.parity or args.pruned or args.fuzzy
+                and (args.parity or args.fuzzy
                      or args.facets or args.more_like is not None)):
             p.error("--not / +term / wildcard terms are supported on "
                     "the default BM25 path only")
         if len(args.index) > 1 and (
-                args.parity or args.pruned or args.impact or args.fuzzy or args.facets
+                args.parity or args.fuzzy or args.facets
                 or args.suggest or args.explain
                 or args.more_like is not None
                 or args.exclude or has_wild or has_must):
@@ -775,7 +755,7 @@ def main(argv: list[str] | None = None) -> int:
                     "default BM25 term path only — drop the mode flags "
                     "/ operators, or query one shard")
         if args.explain and (
-                args.parity or args.pruned or args.impact or args.fuzzy or args.facets
+                args.parity or args.fuzzy or args.facets
                 or args.suggest or args.more_like is not None
                 or args.exclude or has_wild or has_must):
             p.error("--explain explains the default BM25 term path "
@@ -784,7 +764,7 @@ def main(argv: list[str] | None = None) -> int:
             p.error("--verify-disjoint only applies to a federated "
                     "query (multiple --index)")
         if args.suggest:
-            if (args.parity or args.pruned or args.impact or args.fuzzy or args.facets
+            if (args.parity or args.fuzzy or args.facets
                     or args.more_like is not None):
                 p.error("--suggest replaces the search; drop the "
                         "ranking/mode flags")
@@ -798,7 +778,7 @@ def main(argv: list[str] | None = None) -> int:
             if args.boost_important <= 0:
                 p.error(f"--boost-important must be > 0 "
                         f"(got {args.boost_important})")
-            if (args.parity or args.pruned or args.facets or args.suggest
+            if (args.parity or args.facets or args.suggest
                     or args.more_like is not None):
                 p.error("--boost-important is supported on the default "
                         "BM25 path only")
@@ -896,20 +876,6 @@ def main(argv: list[str] | None = None) -> int:
                 # rebuild it).
                 shutil.rmtree(fuzzy_dir)
                 stats["stale_fuzzy_index_removed"] = True
-            impact_dir = os.path.join(out, "impact")
-            if args.impact_index:
-                from .operators.build import load_index
-                from .operators.impact import write_impact_index
-                write_impact_index(spark, load_index(spark, out),
-                                   impact_dir)
-                stats["impact_index"] = True
-            elif os.path.exists(os.path.join(impact_dir, "meta.json")):
-                # same staleness discipline as the fuzzy index: bands
-                # from a previous build would silently bound the WRONG
-                # postings (bm25_impact_topk_tokens guards per query, but
-                # a stale dir also wastes every probe's metadata read)
-                shutil.rmtree(impact_dir)
-                stats["stale_impact_index_removed"] = True
             return stats
 
         corpus = spark.read.parquet(args.input)
@@ -1147,29 +1113,6 @@ def main(argv: list[str] | None = None) -> int:
                 rows = parity_search(spark, index, args.q,
                                      page_size=args.k,
                                      slop=args.slop).collect()
-            elif args.pruned:
-                from .operators.wand import bm25_topk_pruned
-                rows = bm25_topk_pruned(spark, index, args.q,
-                                        k=args.k).collect()
-            elif args.impact:
-                import os
-
-                from .operators.impact import (bm25_impact_topk,
-                                               load_impact_index)
-                impact_dir = os.path.join(args.index[0], "impact")
-                if os.path.exists(os.path.join(impact_dir, "meta.json")):
-                    imp = load_impact_index(spark, impact_dir)
-                    rows = bm25_impact_topk(spark, index, imp, args.q,
-                                            k=args.k).collect()
-                else:
-                    # identical result either way — the bands are an
-                    # accelerator, not a semantic switch
-                    print("impact index not materialized; answering "
-                          "exhaustively (run build --impact-index)",
-                          file=sys.stderr)
-                    from .operators.search import bm25_topk
-                    rows = bm25_topk(spark, index, args.q,
-                                     k=args.k).collect()
             elif args.fuzzy:
                 from pyspark.sql import functions as F
 
@@ -1321,20 +1264,12 @@ def main(argv: list[str] | None = None) -> int:
                         exclude=ex_terms, k=args.k,
                         important_weight=w_imp)
                 else:
-                    # plain solo query: same metadata route as the warm
-                    # Searcher — the colocated kernel also wins COLD
-                    # (measured at 2.4M: 0.7-1.0 s vs 1.3-4.7 s), both
-                    # routes bit-identical
-                    from .operators.search import (
-                        bm25_topk_colocated_tokens, route_solo)
-                    if route_solo(index["stats"]) == "colocated":
-                        out = bm25_topk_colocated_tokens(
-                            spark, index, q_terms, k=args.k,
-                            important_weight=w_imp)
-                    else:
-                        out = bm25_topk_tokens(
-                            spark, index, q_terms, k=args.k,
-                            important_weight=w_imp)
+                    # plain solo query: the warm Searcher's Spark kernel
+                    from .operators.search import \
+                        bm25_topk_colocated_tokens
+                    out = bm25_topk_colocated_tokens(
+                        spark, index, q_terms, k=args.k,
+                        important_weight=w_imp)
                 if args.snippets:
                     out = _attach_snippets(
                         out, q_terms,
@@ -1516,8 +1451,6 @@ def main(argv: list[str] | None = None) -> int:
                         ("ngram_terms", "ngram_terms" in idx),
                         ("fuzzy", os.path.exists(
                             os.path.join(d, "fuzzy", "meta.json"))),
-                        ("impact", os.path.exists(
-                            os.path.join(d, "impact", "meta.json"))),
                     ) if probe),
             }
             if args.buckets and nb:
@@ -1540,7 +1473,7 @@ def main(argv: list[str] | None = None) -> int:
         except ValueError as e:
             p.error(str(e))
         # aux-index parity with `build`: wildcard projections by default,
-        # ngram/fuzzy/impact opt-in — the resharded shards serve the same
+        # ngram/fuzzy opt-in — the resharded shards serve the same
         # query surface the inputs did (output dirs are fresh; no
         # staleness dance needed)
         for k, s in enumerate(stats):
@@ -1562,12 +1495,6 @@ def main(argv: list[str] | None = None) -> int:
                                      os.path.join(sdir, "fuzzy"),
                                      n_buckets=args.fuzzy_buckets)
                 s["fuzzy_buckets"] = args.fuzzy_buckets
-            if args.impact_index:
-                from .operators.build import load_index
-                from .operators.impact import write_impact_index
-                write_impact_index(spark, load_index(spark, sdir),
-                                   os.path.join(sdir, "impact"))
-                s["impact_index"] = True
         for k, s in enumerate(stats):
             print(json.dumps(dict(s, shard=k)))
     elif args.cmd == "diff":

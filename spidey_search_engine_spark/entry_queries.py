@@ -16,7 +16,10 @@ on both sides; ties always break by doc_id/key ASC.
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -25,7 +28,6 @@ from pyspark.sql import functions as F
 
 from .operators import build as B
 from .operators import search as S
-from .operators import wand as W
 from .operators.pagerank import pagerank
 from .sources.tables import documents_as_corpus, load_table
 
@@ -42,16 +44,54 @@ def entry_index_dir(sf_dir: str) -> str:
                         key.strip("/").replace("/", "_"))
 
 
+WRITERS_STAMP = "_writers.sha256"
+# indexes the entries derive from the cached one, beside it
+_DERIVED_SUFFIXES = ("_chunked", "_fuzzy", "_resharded", "_fed_*")
+
+
+def writers_digest() -> str:
+    """sha256 over every package source: any code that writes the
+    cached index, its derived siblings or the artifacts inside its dir
+    is covered, with no module list to keep in step."""
+    pkg = os.path.dirname(os.path.abspath(__file__))
+    h = hashlib.sha256()
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"),
+                                 recursive=True)):
+        h.update(os.path.relpath(path, pkg).encode())
+        with open(path, "rb") as f:
+            h.update(f.read())
+    return h.hexdigest()
+
+
+def _stamp_of(out: str) -> str | None:
+    try:
+        with open(os.path.join(out, WRITERS_STAMP)) as f:
+            return f.read().strip()
+    except OSError:
+        return None
+
+
 def entry_index(spark: SparkSession, sf_dir: str) -> dict:
-    """Build (once per sf_dir) the simple-profile index over `documents`."""
+    """Build (once per sf_dir) the simple-profile index over `documents`.
+    A cached index is reused only when its stamp matches writers_digest;
+    otherwise it, the artifacts cached inside it (ann_*, minhash_poly_sig,
+    ingest_jsonl) and the indexes derived beside it are rebuilt, so the
+    oracle gate never checks output older code wrote."""
     key = os.path.abspath(sf_dir)
     if key in _IDX_CACHE:
         return _IDX_CACHE[key]
     out = entry_index_dir(sf_dir)
-    if not os.path.exists(os.path.join(out, "stats")):
+    digest = writers_digest()
+    if (_stamp_of(out) != digest
+            or not os.path.exists(os.path.join(out, "stats"))):
+        for d in [out] + [p for suf in _DERIVED_SUFFIXES
+                          for p in glob.glob(glob.escape(out) + suf)]:
+            shutil.rmtree(d, ignore_errors=True)
         corpus = documents_as_corpus(spark, sf_dir)
         B.build_index(spark, corpus, out, profile="simple", seg_bits=8,
                       n_buckets=8)
+        with open(os.path.join(out, WRITERS_STAMP), "w") as f:
+            f.write(digest)
     from .operators.wildcard import (load_ngram_terms, load_prefix_terms,
                                      load_suffix_terms, write_ngram_terms,
                                      write_prefix_terms, write_suffix_terms)
@@ -126,14 +166,12 @@ def bm25_topk_fixed(spark, sf_dir):
 
 def bm25_pruned_topk(spark, sf_dir):
     """Same oracle as bm25_topk_fixed — proves block-max pruning exactness
-    against an independent engine. prune_frac=1.1 disables the
-    surviving-fraction fallback so the GENUINE pruning machinery (bounds →
-    probe → θ → surviving-range-restricted segment decode) is what the
-    oracle checks — on this flat-score corpus the default fallback would
-    silently route to the exhaustive scorer and prove nothing."""
+    against an independent engine: the segment kernel
+    (search.score_segments, via bm25_topk_colocated_tokens) skips every
+    segment whose bound cannot beat the running k-th score, and has no
+    fallback that could route around that machinery."""
     idx = entry_index(spark, sf_dir)
-    out = W.bm25_topk_pruned_terms(spark, idx, QT, k=20, range_bits=6,
-                                   probe_ranges=2, prune_frac=1.1)
+    out = S.bm25_topk_colocated_tokens(spark, idx, QT, k=20)
     return out.select("doc_id", _r(F.col("score")).alias("score_r"))
 
 
@@ -4757,27 +4795,14 @@ ORACLE_SQL["bm25_batch_colocated_topk"] = ORACLE_SQL["bm25_batch_topk"]
 
 
 def bm25_impact_topk(spark, sf_dir):
-    """Impact-ordered early-terminated BM25 (operators/impact.py — the
-    round-5 answer to the score shapes block-max range pruning is blind
-    to): postings re-partitioned into tf-saturation bands, the high-
-    impact prefix scored first, termination proven by the tail bound
-    from each band's avgdl-independent (max_tf, min_dl) meta, and ONLY
-    the surviving candidates exactly rescored. Same oracle as
-    bm25_topk_fixed — the operator's contract is exact top-k identity.
-    prune_frac=1.1 disables the coverage fallback so the oracle checks
-    the GENUINE band machinery (θ / tail bound / candidate rescore, or
-    the all-bands exact route on this flat corpus), never a silent
-    exhaustive detour."""
-    from .operators.impact import (bm25_impact_topk_tokens,
-                                   load_impact_index, write_impact_index)
+    """The key the impact-ordered ranker served, kept with its oracle
+    (bm25_topk_fixed's SQL): the block-max segment kernel answers it now,
+    here through the batch face with a one-query bag — per-segment
+    candidates reduced to the global top-k."""
     idx = entry_index(spark, sf_dir)
-    out = entry_index_dir(sf_dir) + "_impact"
-    if not os.path.exists(os.path.join(out, "meta.json")):
-        write_impact_index(spark, idx, out)
-    imp = load_impact_index(spark, out)
-    got = bm25_impact_topk_tokens(spark, idx, imp, QT, k=20,
-                                  prune_frac=1.1, max_rounds=8)
-    return got.select("doc_id", _r(F.col("score")).alias("score_r"))
+    cand = S.bm25_scores_batch_colocated(idx, {"q": QT}, k=20)
+    return (cand.orderBy(F.desc("score"), F.asc("doc_id")).limit(20)
+            .select("doc_id", _r(F.col("score")).alias("score_r")))
 
 
 QUERIES["bm25_impact_topk"] = bm25_impact_topk

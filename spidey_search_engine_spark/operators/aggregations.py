@@ -31,8 +31,7 @@ from pyspark.sql import functions as F
 
 from ..functions.analysis import PROFILES
 from .search import (_pruned_postings, binary_postings,
-                     bm25_topk_colocated_tokens, bm25_topk_tokens,
-                     empty_frame, query_df, route_solo)
+                     bm25_topk_colocated_tokens, empty_frame, query_df)
 
 
 def _match_doc_ids(index: dict, terms: list[str], mode: str) -> DataFrame:
@@ -87,8 +86,8 @@ def significant_terms(spark: SparkSession, index: dict, docs: DataFrame,
     statistically overrepresented in the query's top-``k_docs`` results
     versus the background corpus.
 
-    Foreground = the engine's OWN BM25 top-k (bm25_topk_tokens — same
-    pruning/tie-break as `query`); those k docs are fetched by doc_id
+    Foreground = the engine's OWN BM25 top-k (bm25_topk_colocated_tokens
+    — the kernel and tie-break of `query`); those k docs are fetched by doc_id
     pushdown, tokenized with the index's analyzer (stats.profile — a
     code-profile index stems/splits identifiers, so any other tokenizer
     would miss the dictionary), and reduced to per-term foreground doc
@@ -106,12 +105,8 @@ def significant_terms(spark: SparkSession, index: dict, docs: DataFrame,
     Returns (term string, fg_df long, df long, score_r double) — the
     top-``top_terms`` rows, score rounded to 6 decimals."""
     uniq_q = set(dict.fromkeys(q_terms))
-    # foreground ranking rides the engine's own metadata route (the
-    # colocated kernel wins at every measured size, rank-identical)
-    fg_fn = (bm25_topk_colocated_tokens
-             if route_solo(index["stats"]) == "colocated"
-             else bm25_topk_tokens)
-    fg_rows = fg_fn(spark, index, list(q_terms), int(k_docs)).collect()
+    fg_rows = bm25_topk_colocated_tokens(spark, index, list(q_terms),
+                                         int(k_docs)).collect()
     out_schema = "term string, fg_df long, df long, score_r double"
     if not fg_rows:
         return empty_frame(spark, out_schema)

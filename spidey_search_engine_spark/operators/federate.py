@@ -60,15 +60,18 @@ from __future__ import annotations
 
 from functools import reduce
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .search import (BATCH_CHUNK_QUERIES, MAX_BROADCAST_CANDIDATES,
-                     _analyze_bags, _bag_weights, _candidate_bound,
-                     _topk_after, batch_term_weights, bm25_score_rows,
+from .search import (BATCH_CHUNK_QUERIES, BATCH_TOPK_SCHEMA,
+                     MAX_BROADCAST_CANDIDATES, TOPK_SCHEMA, _analyze_bags,
+                     _bag_weights, _candidate_bound, _topk_after,
+                     batch_term_weights, bm25_score_rows,
                      bm25_scores_batch_colocated, empty_frame,
-                     filter_doc_ids, query_bag, query_df,
-                     query_term_postings)
+                     filter_doc_ids, local_frame, query_bag, query_df,
+                     query_term_postings, rank_candidates,
+                     resident_candidates)
 
 
 def federated_stats(indexes: list[dict]) -> dict:
@@ -261,7 +264,12 @@ class FederatedSearcher:
     dictionary's df column into idf_cache, so federated_df's per-shard
     lookup is a dict hit (zero Spark jobs).
     A warm federated query then plans exactly one job, the same as the
-    single-index Searcher.
+    single-index Searcher. When every shard's warm kept its postings
+    resident, bm25 / bm25_tokens / batch plan none: each shard runs the
+    kernel in process with the global weights and avgdl, and the
+    per-shard top-k merge on the driver (shard doc ids are disjoint), so
+    answers equal the monolithic Searcher's bit for bit. `after` and
+    `filtered` stay on Spark.
 
     Searcher kwargs (cache_postings, preload_dict, coalesce_to) pass
     through to every shard; each shard's codegen suppression is
@@ -286,8 +294,33 @@ class FederatedSearcher:
         self.shards = [s.index for s in self._searchers]
         self.gstats = federated_stats(self.shards)
 
+    def _resident_topk(self, bags: dict[str, list[str]], k: int,
+                       important_weight: float = 1.0):
+        """(query_id, doc_id, score, rank) pandas rows scored in process
+        on every shard's resident postings, or None when a shard's
+        postings stayed on Spark."""
+        if any(s._resident is None for s in self._searchers):
+            return None
+        union_terms = sorted({t for bag in bags.values() for t in bag})
+        qrows = batch_term_weights(bags,
+                                   federated_df(self.shards, union_terms),
+                                   self.gstats["n_docs"])
+        parts = [resident_candidates(s._resident, s.index, bags, k,
+                                     important_weight, qrows=qrows,
+                                     avgdl=float(self.gstats["avgdl"]))
+                 for s in self._searchers]
+        # global qrows give every shard the same query ids and indices
+        return rank_candidates(parts[0][0],
+                               *(np.concatenate([p[i] for p in parts])
+                                 for i in (1, 2, 3)), k)
+
     def bm25_tokens(self, q_terms: list[str], k: int = 10,
                     important_weight: float = 1.0) -> DataFrame:
+        pdf = self._resident_topk({"q": list(q_terms)}, k,
+                                  important_weight)
+        if pdf is not None:
+            return local_frame(self.spark, pdf[["doc_id", "score"]],
+                               TOPK_SCHEMA)
         return federated_bm25_topk_tokens(
             self.spark, self.shards, q_terms, k=k,
             important_weight=important_weight, gstats=self.gstats)
@@ -321,9 +354,12 @@ class FederatedSearcher:
             important_weight=important_weight, gstats=self.gstats)
 
     def batch(self, queries: dict[str, str], k: int = 10) -> DataFrame:
+        bags = _analyze_bags(queries)
+        pdf = self._resident_topk(bags, k)
+        if pdf is not None:
+            return local_frame(self.spark, pdf, BATCH_TOPK_SCHEMA)
         return federated_bm25_topk_batch_tokens(
-            self.spark, self.shards, _analyze_bags(queries), k=k,
-            gstats=self.gstats)
+            self.spark, self.shards, bags, k=k, gstats=self.gstats)
 
     def close(self) -> None:
         for s in self._searchers:

@@ -3,9 +3,9 @@
 Two rankers over the same postings:
 
 * **BM25** (the north_star primary): k1=1.2, b=0.75,
-  ``idf = ln((N-df+0.5)/(df+0.5)+1)``, disjunctive top-k, with an optional
-  **block-max pruning** pass (see wand.py) that provably returns the
-  identical top-k.
+  ``idf = ln((N-df+0.5)/(df+0.5)+1)``, disjunctive top-k. Its kernel,
+  score_segments, skips every segment whose block-max bound cannot beat
+  the running k-th score, and returns the identical top-k.
 * **Reference-parity scorer**: per word per doc
   ``tf·(1+ln tf)·ln(1+N/df)`` — the tf multiplier reproduces the
   reference's one-row-per-occurrence join fan-out
@@ -460,6 +460,13 @@ BATCH_CHUNK_QUERIES = 256
 TermSubs = dict[str, list[tuple[int, float]]]
 
 
+def _bound_cols():
+    """A kernel row's avgdl-independent bound inputs
+    (build.POSTING_SCHEMA): the segment's largest tf and shortest doc."""
+    return (F.array_max("block_max_tf").alias("max_tf"),
+            F.array_min("block_min_dl").alias("min_dl"))
+
+
 def colocated_weights(index: dict, bags: dict[str, list[str]],
                       qrows: list[tuple] | None = None
                       ) -> tuple[list[str], TermSubs]:
@@ -484,61 +491,122 @@ def colocated_weights(index: dict, bags: dict[str, list[str]],
     return qids, term_subs
 
 
+def _impact(tf, dl, avgdl: float):
+    """BM25 saturation ``(tf·(K1+1)) / (tf + K1·(1−B+B·dl/avgdl))`` —
+    one expression for the kernel's per-posting impacts (numpy arrays)
+    and its segment bounds (floats), so both round alike."""
+    return (tf * (K1 + 1)) / (tf + K1 * (1 - B + B * dl / avgdl))
+
+
+# Relative slack on a segment's impact bound. In exact arithmetic the
+# impact rises with tf and falls with dl, so _impact(max_tf, min_dl)
+# bounds every posting of the segment. In floats the numerator and the
+# denominator round separately: a posting whose tf sits just under max_tf
+# (a boosted tf·w an ulp below max_tf·w) can compute a few ulps ABOVE the
+# bound. Each computed impact is within (1+2⁻⁵³)³/(1−2⁻⁵³) of the exact
+# one, so the computed ratio of two impacts is off by under 6·2⁻⁵³ ≈
+# 7e-16; raising the bound by 1e-12 covers that with room to spare. The
+# weight product and the term-ordered fold are monotone in each
+# nonnegative operand, so the slack is needed only here.
+BOUND_SLACK = 1.0 + 1e-12
+
+
+def segment_bounds(seg_rows, term_subs: TermSubs, n_q: int, avgdl: float,
+                   important_weight: float = 1.0) -> np.ndarray:
+    """Each query's score bound on one segment, from its rows of
+    (term, bin, max_tf, min_dl) in term order: the term-ordered fold of
+    w · _impact(max_tf·max(1, w_imp), min_dl)·BOUND_SLACK — the score's
+    own fold, over per-term maxima. NaN where a bound input is missing."""
+    tf_scale = max(1.0, float(important_weight))
+    ub = np.zeros(n_q, dtype=np.float64)
+    for term, _, max_tf, min_dl in seg_rows:
+        bound = _impact(float(max_tf) * tf_scale, float(min_dl),
+                        avgdl) * BOUND_SLACK
+        for qi, w in term_subs[term]:
+            ub[qi] += w * bound
+    return ub
+
+
 def score_segments(rows, term_subs: TermSubs, n_q: int, seg_bits: int,
                    avgdl: float, k: int, important_weight: float = 1.0):
-    """THE colocated BM25 kernel, in plain numpy: for `rows` of
-    (term, segment, bin) sorted by (segment, term), decode each row's
+    """THE BM25 kernel, in plain numpy: for `rows` of (term, segment,
+    bin, max_tf, min_dl) sorted by (segment, term), decode each row's
     segment, turn it into BM25 impacts, accumulate every subscribed
     query's per-doc partials into a dense (n_q, 2^seg_bits) array, and
     yield each segment's per-query top-k as (query index, doc_id, score)
     arrays. Both placements call it — the mapInPandas closure of
-    bm25_scores_batch_colocated over a partition's Arrow batches, and the
+    bm25_scores_batch_colocated over a partition's rows, and the
     Searcher's driver-resident postings — so their scores are bitwise
-    identical: each doc's sum is the same TERM-ORDERED fold."""
-    seg_size = 1 << seg_bits
-    cur_seg = -1
-    acc = None
+    identical: each doc's sum is the same TERM-ORDERED fold.
 
-    def flush():
-        base = cur_seg << seg_bits
+    Block-max skipping (Ding & Suel, SIGIR 2011; the eager top-k
+    threshold filter of *External Merge Sort for Top-K Queries*, SIGMOD
+    2020). A row's max_tf / min_dl are the max of its block_max_tf and
+    the min of its block_min_dl; segment_bounds folds them into each
+    query's bound, which no doc of the segment scores above. Segments
+    are visited in descending bound order while each query keeps θ, the
+    k-th best score it has emitted; a (query, segment) pair whose bound
+    is strictly below θ is skipped (a doc tying θ may still win on
+    doc_id), and a row no live query subscribes to is never decoded.
+    The answer equals the unpruned kernel's: every doc that could reach
+    the top-k is scored with the same arithmetic. A missing bound (NaN)
+    never skips."""
+    seg_size = 1 << seg_bits
+    segs: dict[int, list] = {}
+    for term, seg, buf, max_tf, min_dl in rows:
+        if term_subs.get(term):
+            segs.setdefault(int(seg), []).append((term, buf, max_tf, min_dl))
+    if not segs:
+        return
+    seg_ids = np.fromiter(segs, dtype=np.int64, count=len(segs))
+    ub = np.stack([segment_bounds(segs[int(seg)], term_subs, n_q, avgdl,
+                                  important_weight) for seg in seg_ids])
+    # most promising segment first (a NaN bound sorts last)
+    order = np.lexsort((seg_ids, -ub.max(axis=1)))
+    theta = np.full(n_q, -np.inf)
+    best = [np.zeros(0)] * n_q  # each query's top-k emitted scores
+    for j in order:
+        live = ~(ub[j] < theta)
+        if not live.any():
+            continue
+        seg = int(seg_ids[j])
+        acc = None
+        for term, buf, _, _ in segs[seg]:
+            subs = [(qi, w) for qi, w in term_subs[term] if live[qi]]
+            if not subs:
+                continue
+            doc_ids, tfs, imp, dls = decode_segment_nopos(bytes(buf))
+            off = doc_ids - (seg << seg_bits)
+            tf = tfs.astype(np.float64)
+            if important_weight != 1.0:  # BM25F-lite: tf' in num AND denom
+                tf = np.where(imp, tf * important_weight, tf)
+            impact = _impact(tf, dls.astype(np.float64), avgdl)
+            if acc is None:
+                acc = np.zeros((n_q, seg_size), dtype=np.float64)
+            for qi, w in subs:
+                acc[qi, off] += w * impact
+        if acc is None:
+            continue
+        base = seg << seg_bits
         out_q, out_d, out_s = [], [], []
-        for i in range(n_q):
+        for i in np.flatnonzero(live):
             row = acc[i]
             nz = np.flatnonzero(row)
             if nz.size == 0:
                 continue
             # (score DESC, doc_id ASC): lexsort's last key is primary
-            order = np.lexsort((nz, -row[nz]))[:k]
-            sel = nz[order]
+            sel = nz[np.lexsort((nz, -row[nz]))[:k]]
             out_q.append(np.full(sel.size, i, dtype=np.int64))
             out_d.append(base + sel.astype(np.int64))
             out_s.append(row[sel])
+            top = np.concatenate((best[i], row[sel]))
+            if top.size >= k > 0:
+                top = np.partition(top, top.size - k)[top.size - k:]
+                theta[i] = top[0]
+            best[i] = top
         if out_q:
-            return (np.concatenate(out_q), np.concatenate(out_d),
-                    np.concatenate(out_s))
-        return None
-
-    for term, seg, buf in rows:
-        subs = term_subs.get(term)
-        if not subs:
-            continue
-        seg = int(seg)
-        if seg != cur_seg:
-            if acc is not None and (res := flush()) is not None:
-                yield res
-            cur_seg = seg
-            acc = np.zeros((n_q, seg_size), dtype=np.float64)
-        doc_ids, tfs, imp, dls = decode_segment_nopos(bytes(buf))
-        off = doc_ids - (seg << seg_bits)
-        tf = tfs.astype(np.float64)
-        if important_weight != 1.0:  # BM25F-lite: tf' enters num AND denom
-            tf = np.where(imp, tf * important_weight, tf)
-        impact = (tf * (K1 + 1)) / (
-            tf + K1 * (1 - B + B * dls.astype(np.float64) / avgdl))
-        for qi, w in subs:
-            acc[qi, off] += w * impact
-    if acc is not None and (res := flush()) is not None:
-        yield res
+            yield (np.concatenate(out_q), np.concatenate(out_d),
+                   np.concatenate(out_s))
 
 
 def bm25_scores_batch_colocated(index: dict, bags: dict[str, list[str]],
@@ -584,13 +652,19 @@ def bm25_scores_batch_colocated(index: dict, bags: dict[str, list[str]],
 
     pruned = (_pruned_postings(index["postings"], sorted(term_subs),
                                n_buckets)
-              .select("term", "segment", "bin")
+              .select("term", "segment", "bin", *_bound_cols())
               .repartition("segment")
               .sortWithinPartitions("segment", "term"))
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows = (r for pdf in batches
-                for r in zip(pdf["term"], pdf["segment"], pdf["bin"]))
+        # the partition's rows are buffered (compressed bytes, already
+        # sorted by the plan) so the kernel can visit segments by bound;
+        # θ is partition-local, which only skips less. A partition under
+        # arrow.maxRecordsPerBatch (10,000) rows arrives as one batch, so
+        # the buffer holds no more than streaming would there
+        rows = [r for pdf in batches
+                for r in zip(pdf["term"], pdf["segment"], pdf["bin"],
+                             pdf["max_tf"], pdf["min_dl"])]
         for q, d, s in score_segments(rows, term_subs, n_q, seg_bits,
                                       avgdl, kk, w_imp):
             yield pd.DataFrame({"query_id": qid_arr[q], "doc_id": d,
@@ -648,20 +722,79 @@ def bm25_topk_batch(spark: SparkSession, index: dict,
 
 
 def resident_postings(postings: DataFrame
-                      ) -> dict[str, list[tuple[int, bytes]]]:
-    """term → [(segment, compressed segment bytes)] for a whole postings
-    table, collected onto the driver in ONE job through Arrow (never Row
-    objects). On a cached DataFrame the same job materializes the cache."""
-    tbl = postings.select("term", "segment", "bin").toArrow()
-    out: dict[str, list[tuple[int, bytes]]] = {}
-    for term, seg, buf in zip(tbl.column("term").to_pylist(),
-                              tbl.column("segment").to_pylist(),
-                              tbl.column("bin").to_pylist()):
-        out.setdefault(term, []).append((seg, buf))
+                      ) -> dict[str, list[tuple[int, bytes, int, int]]]:
+    """term → [(segment, compressed segment bytes, max_tf, min_dl)] for a
+    whole postings table (the kernel's rows, bounds included), collected
+    onto the driver in ONE job through Arrow (never Row objects). On a
+    cached DataFrame the same job materializes the cache."""
+    tbl = postings.select("term", "segment", "bin",
+                          *_bound_cols()).toArrow()
+    out: dict[str, list[tuple[int, bytes, int, int]]] = {}
+    for term, seg, buf, max_tf, min_dl in zip(
+            tbl.column("term").to_pylist(),
+            tbl.column("segment").to_pylist(),
+            tbl.column("bin").to_pylist(),
+            # a null bound reads as NaN, which never skips
+            tbl.column("max_tf").to_numpy(zero_copy_only=False).tolist(),
+            tbl.column("min_dl").to_numpy(zero_copy_only=False).tolist()):
+        out.setdefault(term, []).append((seg, buf, max_tf, min_dl))
     return out
 
 
-def bm25_topk_resident(resident: dict[str, list[tuple[int, bytes]]],
+def resident_candidates(resident: dict[str, list[tuple]], index: dict,
+                        bags: dict[str, list[str]], k: int = 10,
+                        important_weight: float = 1.0,
+                        qrows: list[tuple] | None = None,
+                        avgdl: float | None = None):
+    """(query ids, query index, doc_id, score) arrays: the kernel's
+    per-segment top-k candidates over driver-resident postings
+    (resident_postings). `qrows` / `avgdl` are colocated_weights' and
+    bm25_scores_batch_colocated's: the federated tier passes global
+    ones, so every shard scores with the monolithic index's weights and
+    the query indices agree across shards."""
+    seg_bits = int(index["stats"]["seg_bits"])
+    if avgdl is None:
+        avgdl = float(index["stats"]["avgdl"])
+    names: list[str] = []
+    qs, ds, ss = [], [], []
+    ordered = sorted(bags)
+    # chunked like bm25_topk_batch: bounds the dense accumulator
+    for i in range(0, len(ordered), BATCH_CHUNK_QUERIES):
+        chunk = {q: bags[q] for q in ordered[i:i + BATCH_CHUNK_QUERIES]}
+        qids, term_subs = colocated_weights(index, chunk, qrows)
+        rows = sorted(((t, *row) for t in term_subs
+                       for row in resident.get(t, ())),
+                      key=lambda r: (r[1], r[0]))
+        for q, d, sc in score_segments(rows, term_subs, len(qids), seg_bits,
+                                       avgdl, int(k),
+                                       float(important_weight)):
+            qs.append(q + len(names))
+            ds.append(d)
+            ss.append(sc)
+        names.extend(qids)
+    if not qs:
+        return names, np.zeros(0, np.int64), np.zeros(0, np.int64), \
+            np.zeros(0, np.float64)
+    return names, np.concatenate(qs), np.concatenate(ds), np.concatenate(ss)
+
+
+def rank_candidates(names: list[str], q: np.ndarray, d: np.ndarray,
+                    sc: np.ndarray, k: int) -> pd.DataFrame:
+    """(query_id, doc_id, score, rank) — the per-query top-k of candidate
+    arrays in (score DESC, doc_id ASC) order, rows ordered by
+    (query_id, rank)."""
+    order = np.lexsort((d, -sc, q))
+    q, d, sc = q[order], d[order], sc[order]
+    rank = np.arange(q.size) - np.searchsorted(q, q) + 1
+    keep = rank <= k
+    return pd.DataFrame({
+        "query_id": pd.Series(np.asarray(names, dtype=object)[q[keep]],
+                              dtype=object),
+        "doc_id": d[keep], "score": sc[keep],
+        "rank": rank[keep].astype(np.int32)})
+
+
+def bm25_topk_resident(resident: dict[str, list[tuple]],
                        index: dict, bags: dict[str, list[str]],
                        k: int = 10,
                        important_weight: float = 1.0) -> pd.DataFrame:
@@ -672,38 +805,8 @@ def bm25_topk_resident(resident: dict[str, list[tuple[int, bytes]]],
     same (score DESC, doc_id ASC) tie-break — so answers equal the Spark
     colocated route bit for bit. Bags without a known term are absent;
     rows come ordered by (query_id, rank)."""
-    seg_bits = int(index["stats"]["seg_bits"])
-    avgdl = float(index["stats"]["avgdl"])
-    names: list[str] = []
-    qs, ds, ss = [], [], []
-    ordered = sorted(bags)
-    # chunked like bm25_topk_batch: bounds the dense accumulator
-    for i in range(0, len(ordered), BATCH_CHUNK_QUERIES):
-        chunk = {q: bags[q] for q in ordered[i:i + BATCH_CHUNK_QUERIES]}
-        qids, term_subs = colocated_weights(index, chunk)
-        rows = sorted(((t, seg, buf) for t in term_subs
-                       for seg, buf in resident.get(t, ())),
-                      key=lambda r: (r[1], r[0]))
-        for q, d, sc in score_segments(rows, term_subs, len(qids), seg_bits,
-                                       avgdl, int(k),
-                                       float(important_weight)):
-            qs.append(q + len(names))
-            ds.append(d)
-            ss.append(sc)
-        names.extend(qids)
-    if not qs:
-        return pd.DataFrame({"query_id": pd.Series([], dtype=object),
-                             "doc_id": np.zeros(0, np.int64),
-                             "score": np.zeros(0, np.float64),
-                             "rank": np.zeros(0, np.int32)})
-    q, d, sc = np.concatenate(qs), np.concatenate(ds), np.concatenate(ss)
-    order = np.lexsort((d, -sc, q))
-    q, d, sc = q[order], d[order], sc[order]
-    rank = np.arange(q.size) - np.searchsorted(q, q) + 1
-    keep = rank <= k
-    return pd.DataFrame({"query_id": np.asarray(names, dtype=object)[q[keep]],
-                         "doc_id": d[keep], "score": sc[keep],
-                         "rank": rank[keep].astype(np.int32)})
+    return rank_candidates(*resident_candidates(
+        resident, index, bags, k, important_weight), k)
 
 
 def local_frame(spark: SparkSession, pdf: pd.DataFrame,
@@ -745,27 +848,6 @@ def _ws_release(spark: SparkSession) -> None:
         del _ws_holds[id(spark)]
 
 
-# Solo-query routing (the ROUTE discipline: one cached metadata number,
-# never a measurement job). The segment-colocated kernel beat the
-# row-join plan at EVERY corpus size measured, warm AND cold
-# (BENCH_SOLO_ROUTE warm sweep: 5k 1.3 vs 1.9 s … 2.4M 0.39 vs 1.41 s;
-# cold at 2.4M: 0.7-1.0 vs 1.3-4.7 s) — the plan it removes is the
-# decoded-row exchange, which grows with df — so the floor only guards
-# the degenerate tiny-index case where the extra bytes-shuffle stage is
-# the whole cost. Both routes return the same floats, so the choice only
-# moves speed.
-SOLO_COLOCATED_MIN_DOCS = 1000
-
-
-def route_solo(stats: dict) -> str:
-    """'plain' or 'colocated' for a solo BM25 query on Spark, from the
-    index's STORED doc count (shared by the warm Searcher's fallback and
-    the cold CLI default path). Both routes are bit-identical (pinned by
-    test)."""
-    return ("colocated" if int(stats["n_docs"]) >= SOLO_COLOCATED_MIN_DOCS
-            else "plain")
-
-
 class Searcher:
     """Warm serving wrapper — amortizes per-query fixed costs across a query
     stream, the shape a real serving tier runs (the reference serves from a
@@ -788,12 +870,13 @@ class Searcher:
       job that materializes the Spark cache, replacing its count()).
 
     With resident postings, bm25 / bm25_batch score in-process
-    (bm25_topk_resident: the colocated kernel, score_segments, run on the
+    (bm25_topk_resident: the block-max kernel, score_segments, run on the
     driver) and hand the top-k back as a LocalRelation — no Spark job per
     query, answers equal to the Spark colocated route bit for bit. Over
-    the budget, and for every other query kind (pruned, parity, boolean,
-    filtered, …), queries run as ordinary jobs over the cached tables with
-    the SAME operators the cold paths use."""
+    the budget they run that kernel on Spark (bm25_colocated,
+    bm25_topk_batch); every other query kind (parity, boolean, filtered,
+    …) runs as ordinary jobs over the cached tables with the SAME
+    operators the cold paths use."""
 
     # default driver-side dictionary-preload budget: above this many terms
     # the Searcher automatically switches to head-only preload (top df
@@ -889,17 +972,14 @@ class Searcher:
 
     def bm25(self, query: str, k: int = 10) -> DataFrame:
         """Warm solo BM25: scored in-process when the warm kept the
-        postings resident, else on the Spark route route_solo picks from
-        the index's stored doc count. All three return the same floats
-        (pinned by test)."""
+        postings resident, else on the Spark placement of the same kernel
+        (bm25_colocated). Both return the same floats (pinned by test)."""
         if self._resident is not None:
             pdf = bm25_topk_resident(self._resident, self.index,
                                      {"q": query_bag(query)}, k)
             return local_frame(self.spark, pdf[["doc_id", "score"]],
                                TOPK_SCHEMA)
-        if route_solo(self.index["stats"]) == "colocated":
-            return self.bm25_colocated(query, k)
-        return bm25_topk(self.spark, self.index, query, k)
+        return self.bm25_colocated(query, k)
 
     def bm25_batch(self, queries: dict[str, str], k: int = 10) -> DataFrame:
         """(query_id, doc_id, score, rank) for a batch of queries —
@@ -916,10 +996,6 @@ class Searcher:
         same ranking contract as bm25(); no decoded-row exchange."""
         return bm25_topk_colocated_tokens(self.spark, self.index,
                                           query_bag(query), k)
-
-    def bm25_pruned(self, query: str, k: int = 10, **kw) -> DataFrame:
-        from .wand import bm25_topk_pruned
-        return bm25_topk_pruned(self.spark, self.index, query, k, **kw)
 
     def parity(self, query: str, **kw) -> DataFrame:
         return parity_search(self.spark, self.index, query, **kw)
@@ -1251,7 +1327,7 @@ def phrase_posting_rows(index: dict, phrase: list[str],
     per-term doc sets: a doc missing any phrase word cannot match. Pass 2
     decodes positions only for (term, segment) rows whose segment holds at
     least one intersection doc — skipped segments never even reach the
-    decode kernel (equi left-semi join on `segment`, mirroring wand.py).
+    decode kernel (equi left-semi join on `segment`).
     When the intersection fits ``max_filter_docs`` it additionally becomes
     an in-kernel doc mask, so position arrays for non-intersection docs in
     surviving segments are never materialized and the semi-join sides are
@@ -1296,7 +1372,7 @@ def phrase_posting_rows(index: dict, phrase: list[str],
 # (local[16], crossover index): hot+mid phrase ("import char", df 2.4M+25k,
 # saved ≈2.4M) 15.1 s → 6.1 s (2.5×); mid+mid ("long name", saved ≈25k)
 # 1.8 s → 3.0 s — the two extra driver-synchronized jobs dominate when the
-# saved decode volume is small, exactly the wand.py crossover shape.
+# saved decode volume is small.
 PHRASE_TWO_PASS_MIN_SAVED = 500_000
 
 

@@ -205,7 +205,7 @@ def test_cli_analytics_roundtrip(spark, tmp_path, capsys):
         ["query", "--index", idx, "--q", "m", "--sig-terms", "2",
          "--corpus", src, "--histogram", "length:10"],
         ["query", "--index", idx, "--q", "m", "--sig-terms", "2",
-         "--corpus", src, "--pruned"],
+         "--corpus", src, "--parity"],
     ):
         with pytest.raises(SystemExit):
             main(bad)

@@ -15,4 +15,4 @@ def test_cli_stats(spark, index_dir, index, capsys):
     # per-bucket balance rows sum to the total
     assert sum(v[0] for v in out["buckets"].values()) == out["posting_rows"]
     assert set(out["aux"]) <= {"prefix_terms", "suffix_terms",
-                               "ngram_terms", "fuzzy", "impact"}
+                               "ngram_terms", "fuzzy"}

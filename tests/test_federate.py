@@ -216,7 +216,7 @@ def test_federated_cli_roundtrip(spark, corpus_pdf, tmp_path, capsys):
                  ["query", "--index", dirs["a"], "--index", dirs["b"],
                   "--q", "merge sort", "--syn", "merge=combine"],
                  ["query", "--index", dirs["a"], "--index", dirs["b"],
-                  "--q", "merge sort", "--pruned"],
+                  "--q", "merge sort", "--parity"],
                  ["query", "--index", dirs["a"], "--index", dirs["b"],
                   "--q", "merge sor*"],
                  ["query", "--index", dirs["a"], "--index", dirs["b"],
@@ -228,7 +228,7 @@ def test_federated_cli_roundtrip(spark, corpus_pdf, tmp_path, capsys):
                  ["query", "--index", dirs["all"], "--batch", str(bf),
                   "--q", "merge"],
                  ["query", "--index", dirs["all"], "--batch", str(bf),
-                  "--pruned"],
+                  "--parity"],
                  ["query", "--index", dirs["all"], "--batch", str(bf),
                   "--explain"]):
         with _pytest.raises(SystemExit):
@@ -450,3 +450,41 @@ def test_cli_sharded_build(spark, corpus_pdf, tmp_path, capsys):
         main(["build", "--input", src, "--output", shard_base,
               "--shards", "2", "--resumable"])
     capsys.readouterr()
+
+
+def test_federated_searcher_resident_runs_no_spark_job(spark, fed):
+    """Every shard resident: FederatedSearcher.bm25 / bm25_tokens / batch
+    score in process with global weights and merge the per-shard top-k
+    on the driver — exactly the monolithic Searcher's floats, with no
+    Spark task per query (and no job unless the answer is empty). `after`
+    stays on Spark, with the same floats."""
+    from spidey_search_engine_spark.operators.federate import \
+        FederatedSearcher
+    from spidey_search_engine_spark.operators.search import Searcher
+    from tests.test_resident import _jobs_and_tasks
+
+    def rows(df):
+        return [(r["doc_id"], r["score"]) for r in df.collect()]
+
+    queries = {"a": "merge sort lookup", "b": "merge merge sort",
+               "c": '"merge sort" fast', "d": "zzz_unknown_term"}
+    with Searcher(spark, fed["all"]) as mono, \
+            FederatedSearcher(spark, fed["shards"]) as fs:
+        assert mono._resident is not None
+        assert all(s._resident is not None for s in fs._searchers)
+        fs.bm25("merge sort", k=5).collect()  # first call may import
+        for q in queries.values():
+            want = rows(mono.bm25(q, k=9))
+            got, jobs, tasks = _jobs_and_tasks(
+                spark, f"fed-resident-{q}", lambda: rows(fs.bm25(q, k=9)))
+            # an empty answer collects an empty RDD: a job of no task
+            assert got == want and tasks == 0 and (jobs == 0 or not want), q
+        bag = ["merg", "sort", "merg"]
+        assert rows(fs.bm25_tokens(bag, k=7, important_weight=2.0)) == \
+            rows(fs.after(bag, k=7, important_weight=2.0))
+        want_b = sorted(tuple(r) for r in mono.bm25_batch(queries, 6)
+                        .collect())
+        got_b, jobs, tasks = _jobs_and_tasks(
+            spark, "fed-resident-batch",
+            lambda: sorted(tuple(r) for r in fs.batch(queries, 6).collect()))
+        assert got_b == want_b and got_b and jobs == 0 and tasks == 0

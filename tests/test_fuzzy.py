@@ -197,7 +197,7 @@ def test_cli_fuzzy_query(spark, tmp_path, capsys):
              capsys.readouterr().out.strip().splitlines()]
     assert "corrected" not in lines[0]
 
-    # --fuzzy with --parity / --pruned is rejected up front
+    # --fuzzy with --parity is rejected up front
     import pytest as _pytest
     with _pytest.raises(SystemExit):
         main(["query", "--index", idx, "--q", "merj", "--fuzzy",

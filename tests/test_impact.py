@@ -1,27 +1,23 @@
-"""Impact-ordered early-terminated BM25 (operators/impact.py): exact
-rank identity with the exhaustive scorer on every route, the termination
-route actually firing on a tf-skewed corpus, band/meta consistency, and
-the stale-projection guard."""
+"""The tf-skewed shape the deleted impact-ordered ranker was built for —
+a heavy doc in EVERY segment, so segment bounds cannot prune — served by
+the block-max kernel: exact answers on both placements, stored bound
+inputs that match the postings, and the CLI default path on the same
+shape. These tests check exactness only; skipping is pinned on a shape
+where bounds can prune (test_wand.test_packed_skew_skips_segments)."""
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from spidey_search_engine_spark.operators.impact import (
-    IMPACT_THRESHOLDS, bm25_impact_topk_tokens, load_impact_index,
-    write_impact_index)
-
 
 def _rows(df):
-    return [(r["doc_id"], round(r["score"], 9)) for r in df.collect()]
+    return [(r["doc_id"], r["score"]) for r in df.collect()]
 
 
 @pytest.fixture(scope="module")
 def skew_index(spark, tmp_path_factory):
     """800-doc corpus where EVERY doc mentions 'hot' once but every 16th
-    repeats it 25x — the hot-only shape block-max range pruning is blind
-    to (hot docs in every range), while the tf-saturation bands split it
-    cleanly: band 0 holds the 50 heavy docs."""
+    repeats it 25x — one heavy doc in each 16-doc segment."""
     from spidey_search_engine_spark.operators.build import (build_index,
                                                             load_index)
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -37,109 +33,101 @@ def skew_index(spark, tmp_path_factory):
               "commit string, lang string").repartition(8)
     build_index(spark, corpus, out, profile="code", seg_bits=4,
                 n_buckets=8)
-    idx = load_index(spark, out)
-    write_impact_index(spark, idx, out + "/impact")
-    return idx, load_impact_index(spark, out + "/impact")
+    return load_index(spark, out)
 
 
-def test_impact_route_terminates_and_matches(spark, skew_index):
+@pytest.fixture(scope="module")
+def skew_searcher(spark, skew_index):
+    from spidey_search_engine_spark.operators.search import Searcher
+    s = Searcher(spark, skew_index)
+    assert s._resident is not None
+    yield s
+    s.close()
+
+
+def _both_placements(spark, searcher, bag, k=10, important_weight=1.0):
+    from spidey_search_engine_spark.operators.search import (
+        bm25_topk_colocated_tokens, bm25_topk_resident)
+    pdf = bm25_topk_resident(searcher._resident, searcher.index, {"q": bag},
+                             k, important_weight=important_weight)
+    colo = _rows(bm25_topk_colocated_tokens(
+        spark, searcher.index, bag, k, important_weight=important_weight))
+    return list(zip(pdf["doc_id"], pdf["score"])), colo
+
+
+def test_impact_route_terminates_and_matches(spark, skew_index,
+                                             skew_searcher):
     from spidey_search_engine_spark.operators.search import bm25_topk_tokens
-    idx, imp = skew_index
-    info = {}
-    got = bm25_impact_topk_tokens(spark, idx, imp, ["hot"], k=10,
-                                  prune_frac=0.9, route_info=info)
-    want = bm25_topk_tokens(spark, idx, ["hot"], k=10)
-    assert _rows(got) == _rows(want)
-    assert info["route"] == "impact", info
-    # the candidate set is the heavy-band docs, nowhere near the corpus
-    assert 10 <= info["candidates"] < 200, info
+    want = _rows(bm25_topk_tokens(spark, skew_index, ["hot"], k=10))
+    assert len(want) == 10 and all(d % 16 == 0 for d, _ in want)
+    res, colo = _both_placements(spark, skew_searcher, ["hot"])
+    assert res == colo == want
 
 
-def test_impact_multi_term_and_bag_semantics(spark, skew_index):
-    from spidey_search_engine_spark.operators.search import bm25_topk_tokens
-    idx, imp = skew_index
+def test_impact_multi_term_and_bag_semantics(spark, skew_index,
+                                             skew_searcher):
+    from spidey_search_engine_spark.operators.search import (
+        bm25_topk_colocated_tokens, bm25_topk_tokens)
     for bag in (["hot", "alpha"], ["hot", "hot"], ["alpha", "beta"],
                 ["doc7"], ["zzz_absent"]):
-        info = {}
-        got = bm25_impact_topk_tokens(spark, idx, imp, bag, k=10,
-                                      route_info=info)
-        want = bm25_topk_tokens(spark, idx, bag, k=10)
-        assert _rows(got) == _rows(want), (bag, info)
-    assert bm25_impact_topk_tokens(spark, idx, imp, [], k=5).count() == 0
+        want = _rows(bm25_topk_tokens(spark, skew_index, bag, k=10))
+        res, colo = _both_placements(spark, skew_searcher, bag)
+        assert res == colo == want, bag
+    assert bm25_topk_colocated_tokens(spark, skew_index, [], k=5) \
+        .count() == 0
 
 
-def test_all_bands_route(spark, skew_index):
-    """A term whose postings land in ONE band (uniform tf=1 'alpha'):
-    with the fraction fallback disabled the prefix immediately covers
-    everything and the partials are returned as exact scores."""
+def test_all_bands_route(spark, skew_index, skew_searcher):
+    """A uniform tf=1 term ('alpha' in every doc): every segment's bound
+    ties the scores, so no segment can be skipped and every doc's score
+    is exact."""
     from spidey_search_engine_spark.operators.search import bm25_topk_tokens
-    idx, imp = skew_index
-    n_bands = {r["term"]: r["n"] for r in
-               imp["meta"].groupBy("term")
-               .agg(F.count("*").alias("n")).collect()}
-    assert n_bands["alpha"] == 1
-    info = {}
-    got = bm25_impact_topk_tokens(spark, idx, imp, ["alpha"], k=10,
-                                  prune_frac=1.1, route_info=info)
-    assert info["route"] == "all_bands"
-    assert _rows(got) == _rows(bm25_topk_tokens(spark, idx, ["alpha"],
-                                                k=10))
+    want = _rows(bm25_topk_tokens(spark, skew_index, ["alpha"], k=10))
+    res, colo = _both_placements(spark, skew_searcher, ["alpha"])
+    assert res == colo == want and len(want) == 10
 
 
-def test_stale_projection_falls_back(spark, skew_index):
-    """A query term the impact meta does not know (stale aux index) must
-    route exhaustive — a silently wrong tail bound is the one way this
-    operator could lose correctness."""
+def test_stale_projection_falls_back(spark, skew_index, skew_searcher):
+    """The BM25F boost on either side of 1 scales the bound's tf by
+    max(1, w): answers stay exact on the skewed shape."""
     from spidey_search_engine_spark.operators.search import bm25_topk_tokens
-    idx, imp = skew_index
-    crippled = dict(imp)
-    crippled["meta"] = imp["meta"].filter(F.col("term") != "hot")
-    info = {}
-    got = bm25_impact_topk_tokens(spark, idx, crippled, ["hot", "alpha"],
-                                  k=10, prune_frac=0.9, route_info=info)
-    assert info["route"] == "exhaustive"
-    assert _rows(got) == _rows(bm25_topk_tokens(spark, idx,
-                                                ["hot", "alpha"], k=10))
+    for w in (3.0, 0.25):
+        want = _rows(bm25_topk_tokens(spark, skew_index, ["hot", "alpha"],
+                                      k=10, important_weight=w))
+        res, colo = _both_placements(spark, skew_searcher, ["hot", "alpha"],
+                                     important_weight=w)
+        assert res == colo == want, w
 
 
 def test_band_rows_cover_postings_exactly(spark, skew_index):
-    """Lossless re-partition: the union of band rows decodes to exactly
-    the main index's posting rows (doc_id, tf, important, dl) per term,
-    and every posting's saturation respects its band's thresholds."""
+    """The kernel's bound inputs are exact: per (term, segment) row,
+    max(block_max_tf) is the largest decoded tf and min(block_min_dl)
+    the smallest decoded dl."""
     from spidey_search_engine_spark.operators.build import (
         decode_segment_nopos)
-    idx, imp = skew_index
-    main = {}
-    for r in idx["postings"].filter(F.col("term") == "hot") \
-            .select("bin").collect():
-        d, t, i, dl = decode_segment_nopos(bytes(r["bin"]))
-        for a, b, c, e in zip(d, t, i, dl):
-            main[int(a)] = (int(b), bool(c), int(e))
-    banded = {}
-    thr = sorted(IMPACT_THRESHOLDS)
-    from spidey_search_engine_spark.operators.build import K1, B
-    avgdl = float(idx["stats"]["avgdl"])
-    for r in imp["rows"].filter(F.col("term") == "hot") \
-            .select("band", "bin").collect():
-        d, t, i, dl = decode_segment_nopos(bytes(r["bin"]))
-        for a, b, c, e in zip(d, t, i, dl):
-            banded[int(a)] = (int(b), bool(c), int(e))
-            s = b / (b + K1 * (1 - B + B * e / avgdl))
-            band = len(thr) - int(np.searchsorted(thr, s, side="right"))
-            assert band == r["band"], (a, s, band, r["band"])
-    assert banded == main and main
+    rows = (skew_index["postings"]
+            .filter(F.col("term").isin("hot", "alpha", "doc7"))
+            .select("term", "segment", "bin",
+                    F.array_max("block_max_tf").alias("max_tf"),
+                    F.array_min("block_min_dl").alias("min_dl"))
+            .collect())
+    assert len(rows) >= 100
+    for r in rows:
+        _, tfs, _, dls = decode_segment_nopos(bytes(r["bin"]))
+        assert (int(np.max(tfs)), int(np.min(dls))) == \
+            (r["max_tf"], r["min_dl"]), (r["term"], r["segment"])
 
 
 def test_cli_impact_query(spark, tmp_path, capsys):
-    """build --impact-index materializes the bands; query --impact
-    returns exactly the plain ranker's rows; without the index the flag
-    answers exhaustively (same rows); a rebuild without the flag removes
-    the now-stale bands."""
+    """On a tf-skewed corpus the CLI default query path prints exactly
+    the unpruned ranker's rows, and build writes no impact projection."""
     import json
     import os
-    import shutil
 
     from spidey_search_engine_spark.cli import main
+    from spidey_search_engine_spark.operators.build import load_index
+    from spidey_search_engine_spark.operators.search import (
+        bm25_topk_tokens, query_bag)
 
     rows = []
     for i in range(64):
@@ -151,49 +139,15 @@ def test_cli_impact_query(spark, tmp_path, capsys):
         rows, "doc_id long, content string, path string, repo string, "
               "commit string, lang string").coalesce(2).write.parquet(src)
     rc = main(["build", "--input", src, "--output", idx,
-               "--profile", "code", "--seg-bits", "4", "--n-buckets", "4",
-               "--impact-index"])
+               "--profile", "code", "--seg-bits", "4", "--n-buckets", "4"])
     assert rc == 0
-    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert stats["impact_index"] is True
-    assert os.path.exists(os.path.join(idx, "impact", "meta.json"))
-
-    rc = main(["query", "--index", idx, "--q", "hot alpha", "--k", "5",
-               "--impact"])
+    capsys.readouterr()
+    assert not os.path.exists(os.path.join(idx, "impact"))
+    rc = main(["query", "--index", idx, "--q", "hot alpha", "--k", "5"])
     assert rc == 0
     got = [json.loads(ln) for ln in
            capsys.readouterr().out.strip().splitlines()]
-    rc = main(["query", "--index", idx, "--q", "hot alpha", "--k", "5"])
-    assert rc == 0
-    want = [json.loads(ln) for ln in
-            capsys.readouterr().out.strip().splitlines()]
-    assert [(r["doc_id"], round(r["score"], 9)) for r in got] == \
-        [(r["doc_id"], round(r["score"], 9)) for r in want] and len(got) == 5
-
-    # --impact without a materialized index: exhaustive answer, same rows
-    shutil.rmtree(os.path.join(idx, "impact"))
-    rc = main(["query", "--index", idx, "--q", "hot alpha", "--k", "5",
-               "--impact"])
-    assert rc == 0
-    assert [json.loads(ln) for ln in
-            capsys.readouterr().out.strip().splitlines()] == want
-
-    # mode exclusivity fails fast
-    import pytest as _pytest
-    with _pytest.raises(SystemExit):
-        main(["query", "--index", idx, "--q", "hot", "--impact",
-              "--pruned"])
-    capsys.readouterr()
-
-    # rebuild WITHOUT the flag removes the stale bands
-    rc = main(["build", "--input", src, "--output", idx,
-               "--profile", "code", "--seg-bits", "4", "--n-buckets", "4",
-               "--impact-index"])
-    assert rc == 0
-    capsys.readouterr()
-    rc = main(["build", "--input", src, "--output", idx,
-               "--profile", "code", "--seg-bits", "4", "--n-buckets", "4"])
-    assert rc == 0
-    stats = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert stats.get("stale_impact_index_removed") is True
-    assert not os.path.exists(os.path.join(idx, "impact"))
+    want = _rows(bm25_topk_tokens(spark, load_index(spark, idx),
+                                  query_bag("hot alpha"), k=5))
+    assert [(r["doc_id"], r["score"]) for r in got] == want
+    assert len(want) == 5

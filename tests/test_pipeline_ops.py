@@ -3362,7 +3362,7 @@ def test_bm25_exclude_and_wildcard(spark, tmp_path, capsys):
         main(["query", "--index", idx_dir, "--q", "merge", "--not", "x",
               "--parity"])
     with _pytest.raises(SystemExit):
-        main(["query", "--index", idx_dir, "--q", "sort*", "--pruned"])
+        main(["query", "--index", idx_dir, "--q", "sort*", "--parity"])
     with _pytest.raises(SystemExit):
         main(["query", "--index", idx_dir, "--q", 'a "bar* baz"'])
     with _pytest.raises(SystemExit):
@@ -3479,7 +3479,7 @@ def test_bm25_must_and_bm25f(spark, tmp_path, capsys):
         ["query", "--index", idx_dir, "--q", "merge",
          "--boost-important", "0"],
         ["query", "--index", idx_dir, "--q", "merge",
-         "--boost-important", "2", "--pruned"],
+         "--boost-important", "2", "--parity"],
     ):
         with _pytest.raises(SystemExit):
             main(bad)

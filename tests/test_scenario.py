@@ -19,6 +19,6 @@ def test_composed_scenario_small(spark, tmp_path):
     # every surface the scenario claims to cover actually ran
     assert set(out["checks"]) >= {
         "plain", "boolean_must_not", "filtered", "after_page1",
-        "after_page2", "batch", "wildcard", "pruned", "impact", "fuzzy",
+        "after_page2", "batch", "wildcard", "pruned", "fuzzy",
         "suggest", "collapse", "synonym", "facets", "explain",
         "reshard", "sig_terms", "histogram"}, out

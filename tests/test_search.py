@@ -113,11 +113,10 @@ def test_positions_roundtrip_through_index(spark, index, oracle):
 
 def test_searcher_matches_cold_paths(spark, index):
     """Warm serving tier: preloaded-dictionary + cached-postings queries
-    must return exactly the cold-path results (exhaustive AND pruned), and
-    close() must only unpersist what the instance cached."""
-    from spidey_search_engine_spark.operators.search import (Searcher,
-                                                             bm25_topk)
-    from spidey_search_engine_spark.operators.wand import bm25_topk_pruned
+    must return exactly the cold-path results (exhaustive AND the pruning
+    kernel), and close() must only unpersist what the instance cached."""
+    from spidey_search_engine_spark.operators.search import (
+        Searcher, bm25_topk, bm25_topk_colocated_tokens, query_bag)
 
     s = Searcher(spark, index, cache_postings=True, coalesce_to=4)
     try:
@@ -129,13 +128,14 @@ def test_searcher_matches_cold_paths(spark, index):
                     s.bm25(q, k=8).collect()]
             assert warm == cold, q
         q = "merge sort parse"
-        cold_p = [r["doc_id"] for r in
-                  bm25_topk_pruned(spark, index, q, k=8, range_bits=6,
-                                   probe_ranges=2).collect()]
-        warm_p = [r["doc_id"] for r in
-                  s.bm25_pruned(q, k=8, range_bits=6,
-                                probe_ranges=2).collect()]
-        assert warm_p == cold_p
+        cold_p = [(r["doc_id"], r["score"]) for r in
+                  bm25_topk_colocated_tokens(spark, index, query_bag(q),
+                                             k=8).collect()]
+        warm_p = [(r["doc_id"], r["score"]) for r in
+                  s.bm25_colocated(q, k=8).collect()]
+        assert warm_p == cold_p == [(r["doc_id"], r["score"]) for r in
+                                    bm25_topk(spark, index, q,
+                                              k=8).collect()]
         # the full token-level algebra over the warmed index == the
         # cold composition (wildcards expand into the bag, must/exclude
         # filter before top-k)
@@ -776,7 +776,7 @@ def test_cli_filter_collapse_syn(spark, corpus_pdf, tmp_path, capsys):
     for bad in (base + ["--filter", "lang"],
                 base + ["--filter", "lang=py", "--filter", "lang=go"],
                 base + ["--filter", "nosuch=x"],
-                base + ["--syn", "a=b", "--pruned"],
+                base + ["--syn", "a=b", "--parity"],
                 base + ["--syn", "a=b", "--filter", "lang=py"],
                 base + ["--syn", "a=b*"],
                 base + ["--collapse", "repo", "--explain"],

@@ -84,7 +84,7 @@ def test_cli_snippets_result_page(spark, corpus_pdf, tmp_path, capsys):
     assert boo and all("snippet" in r for r in boo)
     for argv in (["query", "--index", out, "--q", "merge", "--snippets"],
                  ["query", "--index", out, "--q", "merge", "--snippets",
-                  "--corpus", src, "--pruned"],
+                  "--corpus", src, "--fuzzy"],
                  ["query", "--index", out, "--q", '"merge sort"',
                   "--snippets", "--corpus", src, "--parity"]):
         with pytest.raises(SystemExit):
