@@ -549,7 +549,6 @@ def _merge_group(term: str, seg: int, bins: list) -> tuple:
 def merge_partials(partials: DataFrame, n_buckets: int = 64,
                    salt_factor: int = 8,
                    doclen_bucket: int | None = None,
-                   vectorized: bool = True,
                    n_docs: int | None = None) -> DataFrame:
     """A7 hierarchical merge: disjoint doc-range partials → one compressed
     row per (term, segment) with avgdl-independent block-max metadata.
@@ -575,39 +574,15 @@ def merge_partials(partials: DataFrame, n_buckets: int = 64,
     same merge and are assigned that bucket (one partition dir holding the
     doc-length table; query-side bucket pruning never reads it).
 
-    ``vectorized=True`` (default) runs the whole-batch numpy merge kernel
+    The reduce side is the whole-batch numpy merge kernel
     (operators/merge_vec.py — one varint decode pass per Arrow batch,
-    reduceat block metadata, batch-level section encode); the legacy
-    per-row/per-group stream below is kept as the reference implementation
-    and fallback, byte-identical by test."""
+    reduceat block metadata, batch-level section encode), byte-identical
+    to ``_merge_group`` applied per (term, segment) group by test."""
     out_cols = [f.name for f in POSTING_SCHEMA.fields]
 
     def merge_stream_vec(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .merge_vec import merge_stream_vectorized
         yield from merge_stream_vectorized(batches, out_cols, _merge_group)
-
-    def merge_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cur: tuple | None = None
-        bins: list = []
-        rows: list = []
-
-        def flush():
-            if cur is not None:
-                rows.append(_merge_group(cur[0], cur[1], bins))
-
-        for pdf in batches:
-            for term, seg, b in zip(pdf["term"], pdf["segment"], pdf["bin"]):
-                k = (term, seg)
-                if k != cur:
-                    flush()
-                    cur, bins = k, []
-                bins.append(b)
-            if len(rows) >= 2000:
-                yield pd.DataFrame(rows, columns=out_cols)
-                rows = []
-        flush()
-        if rows:
-            yield pd.DataFrame(rows, columns=out_cols)
 
     bucket_expr = F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
     if doclen_bucket is not None:
@@ -627,8 +602,7 @@ def merge_partials(partials: DataFrame, n_buckets: int = 64,
                              "bucket", "_salt")
                 .sortWithinPartitions("term", "segment"))
     merged = shuffled.select("term", "segment", "bin", "bucket").mapInPandas(
-        merge_stream_vec if vectorized else merge_stream,
-        schema=POSTING_SCHEMA)
+        merge_stream_vec, schema=POSTING_SCHEMA)
     # bucket is re-derived (deterministic per term) so the partitionBy
     # write needs no further shuffle; a reduce task holding several buckets
     # simply writes one file per bucket dir

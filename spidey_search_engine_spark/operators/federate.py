@@ -272,10 +272,8 @@ class FederatedSearcher:
     `filtered` stay on Spark.
 
     Searcher kwargs (cache_postings, preload_dict, coalesce_to) pass
-    through to every shard; each shard's codegen suppression is
-    refcounted session-wide, so nesting is safe. Construction is
-    exception-safe:
-    a shard failing to warm closes the shards already opened."""
+    through to every shard. Construction is exception-safe: a shard
+    failing to warm closes the shards already opened."""
 
     def __init__(self, spark: SparkSession, indexes: list[dict],
                  **searcher_kwargs):

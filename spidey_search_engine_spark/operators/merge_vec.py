@@ -13,27 +13,27 @@ passes:
    with a single terminator scan, then decode VALUES only at the
    header/gaps/tf/dl value indices (subset byte-plane gathers) — the
    position-gap section, the bulk of every buffer, is never decoded; its
-   RAW bytes are carried through untouched exactly like the legacy fast
-   path (a first draft decoded positions too and was SLOWER than the
-   legacy loop: 153M wasted value-decodes per 600k-doc build);
+   RAW bytes are carried through untouched exactly like _merge_group's
+   fast path (a first draft decoded positions too and was SLOWER than the
+   per-row loop it replaced: 153M wasted value-decodes per 600k-doc build);
 2. recover each row's section layout from the known row byte offsets
    (first value = n, then n gaps / n tf / n dl, remainder = raw positions);
 3. order rows by (group, first_doc) with one lexsort, rebuild doc_ids with
    a segmented cumsum, re-gap them per group, and check strict sortedness —
    groups with interleaved doc ranges (hash-partitioned input) fall back to
-   the legacy ``_merge_group`` decode+argsort path, as before;
+   the per-group ``_merge_group`` decode+argsort path;
 4. compute per-group n_docs/cf and per-block (first/last doc, max tf,
    min dl) with ``np.add/maximum/minimum.reduceat`` over globally built
    block boundaries — no python loop over blocks;
 5. varint-encode each output section ONCE for the whole batch and slice
    per-group byte ranges (the same trick as build._partials_from_batch).
 
-Output rows are BYTE-IDENTICAL to the legacy merge (pinned by
+Output rows are BYTE-IDENTICAL to ``_merge_group`` applied per
+(term, segment) group (pinned by
 tests/test_build_kernel.py::test_vectorized_merge_equals_legacy and every
-pre-existing byte-equality test, which all run through this path now).
-DOCSHA sentinel rows carry raw 32-byte payloads that are NOT varints and
-would desync the global decode — they are routed to the legacy per-group
-merge before concatenation.
+byte-equality test of a built index). DOCSHA sentinel rows carry raw
+32-byte payloads that are NOT varints and would desync the global
+decode — they are routed to the per-group merge before concatenation.
 """
 
 from __future__ import annotations
@@ -93,7 +93,7 @@ def merge_batch_vectorized(terms: np.ndarray, segs: np.ndarray,
                            bins: list, merge_group_fn) -> list:
     """Merge one batch of partial rows (already sorted by (term, segment),
     groups fully contained) → list of POSTING_SCHEMA tuples, preserving
-    group order. `merge_group_fn(term, seg, bins)` is the legacy per-group
+    group order. `merge_group_fn(term, seg, bins)` is the per-group
     merge used for sentinel/interleaved fallback groups."""
     from .build import DOCSHA_TERM, _merge_group  # noqa: F401 (doc ref)
     from ..functions.compress import encode_varints_with_lengths
@@ -102,7 +102,7 @@ def merge_batch_vectorized(terms: np.ndarray, segs: np.ndarray,
     if nrows == 0:
         return []
 
-    # --- route DOCSHA rows (raw byte payloads) to the legacy merge -------
+    # --- route DOCSHA rows (raw byte payloads) to the per-group merge ----
     sha_mask = np.array([t == DOCSHA_TERM for t in terms], dtype=bool)
     out_by_slot: dict[int, list] = {}
     if sha_mask.any():
@@ -256,8 +256,8 @@ def merge_stream_vectorized(batches: Iterator[pd.DataFrame],
                             out_cols: list[str],
                             merge_group_fn) -> Iterator[pd.DataFrame]:
     """Streaming wrapper: carry the (possibly group-splitting) LAST group's
-    rows across Arrow batch boundaries, exactly like the legacy
-    merge_stream, then run the vectorized kernel per batch."""
+    rows across Arrow batch boundaries, so each group reaches the kernel
+    whole, then run the vectorized kernel per batch."""
     carry_terms: list = []
     carry_segs: list = []
     carry_bins: list = []

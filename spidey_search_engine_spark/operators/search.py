@@ -821,33 +821,6 @@ def local_frame(spark: SparkSession, pdf: pd.DataFrame,
     return spark.createDataFrame(pdf, schema)
 
 
-# wholeStage-codegen suppression is a SESSION conf, so overlapping
-# Searchers on one session must refcount it: the first to open saves the
-# original value, the last to close restores it (a naive per-instance
-# save/restore deadlocks at "false" when close() ordering interleaves)
-_ws_holds: dict[int, list] = {}  # id(spark) -> [depth, original_value]
-
-
-def _ws_acquire(spark: SparkSession) -> None:
-    st = _ws_holds.get(id(spark))
-    if st is None:
-        orig = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-        _ws_holds[id(spark)] = [1, orig]
-        spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    else:
-        st[0] += 1
-
-
-def _ws_release(spark: SparkSession) -> None:
-    st = _ws_holds.get(id(spark))
-    if st is None:
-        return
-    st[0] -= 1
-    if st[0] <= 0:
-        spark.conf.set("spark.sql.codegen.wholeStage", st[1])
-        del _ws_holds[id(spark)]
-
-
 class Searcher:
     """Warm serving wrapper — amortizes per-query fixed costs across a query
     stream, the shape a real serving tier runs (the reference serves from a
@@ -897,27 +870,7 @@ class Searcher:
         # term → [(segment, bytes)] when the warm kept the postings on the
         # driver (see the class docstring), else None
         self._resident: dict[str, list[tuple[int, bytes]]] | None = None
-        # Every query carries fresh literals (idf map, term list), so
-        # whole-stage codegen compiles a NEW generated class per query -
-        # pure planning overhead at serving row counts (the cached
-        # postings a query touches are ~10^5 rows). Interpreted
-        # expression eval over that is cheaper than the compile:
-        # measured p50 0.48->0.42s, p95 0.66->0.46s at sf0.1
-        # (order-controlled, both directions) - crossing the
-        # reference's <500 ms warm anchor. Session-level knob,
-        # refcounted across nested Searchers and restored when the
-        # LAST one closes; build jobs sharing the session while a
-        # Searcher is open would also run interpreted (don't do that -
-        # builds want codegen).
-        _ws_acquire(spark)
-        self._holds_ws = True
-        try:
-            self._warm(index, cache_postings, preload_dict, coalesce_to)
-        except BaseException:
-            # __init__ failing must not leave the session interpreted:
-            # no object exists for the caller to close()
-            _ws_release(spark)
-            raise
+        self._warm(index, cache_postings, preload_dict, coalesce_to)
 
     def _warm(self, index, cache_postings, preload_dict, coalesce_to):
         self.index["terms"] = index["terms"].cache()
@@ -1075,9 +1028,6 @@ class Searcher:
         for df in self._cached:
             df.unpersist()
         self._resident = None
-        if self._holds_ws:
-            self._holds_ws = False
-            _ws_release(self.spark)
 
     def __enter__(self) -> "Searcher":
         return self

@@ -176,6 +176,16 @@ def publish_delete(spark: SparkSession, out_dir: str,
     return manifest
 
 
+def write_relayout(postings: DataFrame, n_out: int, path: str) -> None:
+    """Write `postings` (chunk column dropped) to `path` as `n_out`
+    range-partitioned, (bucket, term, segment)-sorted files, partitioned
+    by bucket: the compacted layout of both compact_postings and the
+    in-place streaming compaction (incremental.compact_stream_chunks)."""
+    (postings.repartitionByRange(n_out, "bucket", "term", "segment")
+     .sortWithinPartitions("bucket", "term", "segment")
+     .write.mode("overwrite").partitionBy("bucket").parquet(path))
+
+
 def compact_postings(spark: SparkSession, out_dir: str,
                      files_per_bucket: int = 1) -> dict:
     """Compact a chunked postings tree into the fresh-build layout,
@@ -192,15 +202,13 @@ def compact_postings(spark: SparkSession, out_dir: str,
     once per compaction instead of per write.
 
     Pure re-layout, no posting-byte decode: chunk doc-id ranges are
-    segment-aligned (lineage.py:72 ``chunk_segments << seg_bits``; the
-    streaming append's disjoint-range contract, incremental.py:12-17), so
-    a (term, segment) row lives in exactly one chunk and concatenation IS
-    the merge. The range exchange samples (bucket, term, segment) — cheap
+    segment-aligned (build_index_resumable's ``chunk_segments << seg_bits``;
+    the streaming append's disjoint-range contract), so a (term, segment)
+    row lives in exactly one chunk and concatenation IS the merge. The range exchange samples (bucket, term, segment) — cheap
     here because the input is materialized parquet, unlike merge_partials
-    where a sampling pass would re-run the tokenize lineage
-    (build.py:606-610). Output files then carry contiguous term ranges, so
-    a term-pushdown scan skips whole FILES on parquet footer min/max, not
-    just row groups.
+    where a sampling pass would re-run the tokenize lineage. Output files
+    then carry contiguous term ranges, so a term-pushdown scan skips whole
+    FILES on parquet footer min/max, not just row groups.
 
     terms/stats/docs are carried over from the parent snapshot unchanged —
     shared immutable dirs; expire_snapshots reclaims them only when no
@@ -217,12 +225,8 @@ def compact_postings(spark: SparkSession, out_dir: str,
     n_buckets = int(stats["n_buckets"])
     # +1: single-dir builds keep DOCLEN/DOCSHA sentinels in bucket n_buckets
     n_out = max(1, int(files_per_bucket)) * (n_buckets + 1)
-    compacted = (raw.repartitionByRange(n_out, "bucket", "term", "segment")
-                 .sortWithinPartitions("bucket", "term", "segment"))
     new_v = int(cur["version"]) + 1
-    vdir = os.path.join(out_dir, f"v{new_v}")
-    (compacted.write.mode("overwrite").partitionBy("bucket")
-     .parquet(os.path.join(vdir, "postings")))
+    write_relayout(raw, n_out, os.path.join(out_dir, f"v{new_v}", "postings"))
     manifest = {"version": new_v,
                 "postings": f"v{new_v}/postings",
                 "terms": cur["terms"],

@@ -5,8 +5,10 @@ changed pages (Indexer.java:788-808); the Spark-native equivalent is a
 stream of new/changed docs appended to the index incrementally:
 
     readStream(docs source) → foreachBatch:
-        micro-batch  = one build chunk (same core as plans/lineage.py)
+        micro-batch  = one chunk, written by plans/lineage.write_chunk
+                       (the function the resumable build calls per chunk)
         postings     → out_dir/postings/chunk=stream_<epoch>/
+        docs         → out_dir/docs/chunk=stream_<epoch>/
         lineage row  → out_dir/lineage
 
 Requirements at scale: incoming docs carry pre-assigned doc_ids (id
@@ -23,18 +25,11 @@ from __future__ import annotations
 import os
 import time
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.build import (DOCLEN_TERM, SENTINEL_PREFIX,
-                               build_partials, doc_lengths,
-                               doc_stats, merge_partials, term_stats,
-                               write_stats_json)
-from ..plans.lineage import append_lineage_row
-
-
-def _ms(seconds: float) -> float:
-    return round(seconds * 1e3, 1)
+from ..operators.build import doc_stats, term_stats, write_stats_json
+from ..plans.lineage import _ms, write_chunk
 
 
 def append_index_stream(spark: SparkSession, docs_stream: DataFrame,
@@ -120,43 +115,16 @@ def append_index_stream(spark: SparkSession, docs_stream: DataFrame,
                     f"use a fresh output dir.")
             _publish_if_due()
             return
-        t_guard = time.monotonic()
         docs = batch_df.withColumn("content_sha256",
                                    F.sha2(F.col("content"), 256))
-        partials = build_partials(docs, profile=profile, seg_bits=seg_bits)
-        partials.persist()
-        postings = merge_partials(
-            partials.filter(~F.col("term").startswith(SENTINEL_PREFIX)),
-            n_buckets=n_buckets, n_docs=int(n_batch_docs))
-        chunk_dir = os.path.join(out_dir, "postings",
-                                 f"chunk=stream_{batch_id}")
-        # the write itself counts its rows: no re-read job of the chunk
-        written = Observation()
-        (postings.observe(written, F.count(F.lit(1)).alias("rows"))
-         .write.mode("overwrite").partitionBy("bucket").parquet(chunk_dir))
-        t_postings = time.monotonic()
-        # docs land in a batch-keyed partition dir with OVERWRITE, so a
-        # replay of a crash between this write and the lineage commit is
-        # idempotent (a flat mode-append here double-counted every doc of
-        # the batch in n_docs/avgdl on replay)
-        (docs.drop("content").join(doc_lengths(partials), "doc_id")
-         .select("doc_id", "repo", "path", "commit", "lang",
-                 "content_sha256", "n_tokens")
-         .write.mode("overwrite")
-         .parquet(os.path.join(out_dir, "docs",
-                               f"chunk=stream_{batch_id}")))
-        partials.unpersist()
-        t_end = time.monotonic()
-        append_lineage_row(spark, lin_dir, {
-            "build_id": f"stream_{batch_id}", "chunk": int(batch_id),
-            "n_docs": int(n_batch_docs),
-            "n_postings_rows": int(written.get["rows"]),
-            "min_doc": int(lo), "max_doc": int(hi),
-            "wall_sec": round(t_end - t0, 3), "finished_at": time.time(),
-            "probe_ms": _ms(t_probe - t0),
-            "postings_ms": _ms(t_postings - t_guard),
-            "docs_ms": _ms(t_end - t_postings),
-            "lineage_ms": _ms(t_guard - t_probe)})
+        write_chunk(spark, docs, out_dir, f"stream_{batch_id}",
+                    n_batch_docs, lo, hi,
+                    {"build_id": f"stream_{batch_id}",
+                     "chunk": int(batch_id),
+                     "probe_ms": _ms(t_probe - t0),
+                     "lineage_ms": _ms(time.monotonic() - t_probe)},
+                    profile=profile, seg_bits=seg_bits,
+                    n_buckets=n_buckets, t0=t0)
         _publish_if_due()
 
     writer = docs_stream.writeStream.foreachBatch(process) \
@@ -245,6 +213,7 @@ def compact_stream_chunks(spark: SparkSession, out_dir: str,
     maintenance share storage."""
     import shutil
 
+    from ..plans.snapshot import parquet_file_count, write_relayout
     _recover_compaction(out_dir)
     src = os.path.join(out_dir, "postings")
     consumed = sorted(d for d in os.listdir(src)
@@ -260,12 +229,9 @@ def compact_stream_chunks(spark: SparkSession, out_dir: str,
     n_out = max(1, int(files_per_bucket)) * int(n_buckets)
     tmp = os.path.join(out_dir, "_compacting")
     shutil.rmtree(tmp, ignore_errors=True)
-    (raw.repartitionByRange(n_out, "bucket", "term", "segment")
-     .sortWithinPartitions("bucket", "term", "segment")
-     .write.mode("overwrite").partitionBy("bucket").parquet(tmp))
+    write_relayout(raw, n_out, tmp)
     _journal_write(out_dir, {"new_chunk": new_chunk, "consumed": consumed})
     _compaction_swap(out_dir, new_chunk, consumed)
-    from ..plans.snapshot import parquet_file_count
     return {"n_chunks_in": len(consumed), "chunk": new_chunk,
             "n_files_out": parquet_file_count(src)}
 

@@ -107,18 +107,33 @@ def test_kernel_simple_profile_matches_naive():
 
 
 def test_vectorized_merge_equals_legacy(spark, corpus_pdf):
-    """The whole-batch numpy merge kernel must produce BYTE-identical rows
-    (bins + block metadata + counts) to the legacy per-group stream, with
-    sentinels included and with a batch size small enough to force
-    cross-batch group carries."""
+    """The Spark merge (whole-batch numpy kernel) must produce
+    BYTE-identical rows (bins + block metadata + counts + bucket) to
+    _merge_group applied per (term, segment) group of the sorted partials
+    in plain Python, with sentinels included and with a batch size small
+    enough to force cross-batch group carries."""
+    from itertools import groupby
+
     from pyspark.sql import functions as F
-    from spidey_search_engine_spark.operators.build import (build_partials,
-                                                            merge_partials,
-                                                            prepare_docs)
+    from spidey_search_engine_spark.operators.build import (
+        SENTINEL_PREFIX, _merge_group, build_partials, merge_partials,
+        prepare_docs)
 
     docs = prepare_docs(spark.createDataFrame(corpus_pdf.head(120))
                         .repartition(6))
     parts = build_partials(docs, profile="code", seg_bits=4)
+    bucket = F.when(F.col("term").startswith(SENTINEL_PREFIX), F.lit(4)) \
+        .otherwise(F.pmod(F.xxhash64("term"), F.lit(4)).cast("int"))
+    rows = sorted((r["term"], r["segment"], bytes(r["bin"]), r["bucket"])
+                  for r in parts.withColumn("bucket", bucket).collect())
+    ref = []
+    for (term, seg), grp in groupby(rows, key=lambda r: (r[0], r[1])):
+        grp = list(grp)
+        t, sg, n, cf, b, bf, bl, bm, bd = _merge_group(
+            term, seg, [g[2] for g in grp])
+        ref.append((t, sg, n, cf, b, tuple(bf), tuple(bl), tuple(bm),
+                    tuple(bd), grp[0][3]))
+    ref.sort()
 
     def snap(df):
         rows = df.collect()
@@ -133,11 +148,8 @@ def test_vectorized_merge_equals_legacy(spark, corpus_pdf):
     try:
         for batch in ("10000", "3"):
             spark.conf.set(key, batch)
-            vec = snap(merge_partials(parts, n_buckets=4, doclen_bucket=4,
-                                      vectorized=True))
-            leg = snap(merge_partials(parts, n_buckets=4, doclen_bucket=4,
-                                      vectorized=False))
-            assert vec == leg
+            vec = snap(merge_partials(parts, n_buckets=4, doclen_bucket=4))
+            assert vec == ref
             assert len(vec) > 0
     finally:
         spark.conf.set(key, old)
@@ -206,7 +218,7 @@ def test_vectorized_merge_randomized_pure_python():
         got = merge_batch_vectorized(np.asarray(terms, dtype=object),
                                      np.asarray(segs, dtype=np.int64),
                                      bins, _merge_group)
-        # expected: legacy per-group merge, same group order
+        # expected: _merge_group per group, same group order
         exp = []
         i = 0
         while i < len(terms):

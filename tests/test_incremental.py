@@ -190,7 +190,8 @@ def test_lineage_step_profile_old_rows_resume(spark, corpus_pdf, tmp_path,
 def test_publish_with_open_searcher_equals_closed(spark, corpus_pdf,
                                                   tmp_path):
     """publish_index run while a Searcher holds the index cached reads
-    the postings on disk, not the Searcher's cached plan."""
+    the postings on disk, not the Searcher's cached plan; the published
+    index exposes a wildcard projection written beside it."""
     from spidey_search_engine_spark.operators.search import Searcher
     from spidey_search_engine_spark.plans.lineage import load_index_resumable
     from spidey_search_engine_spark.streaming.incremental import \
@@ -218,3 +219,13 @@ def test_publish_with_open_searcher_equals_closed(spark, corpus_pdf,
     publish_index(spark, out, profile="code", seg_bits=6, n_buckets=8)
     assert with_open == terms()
     assert with_open["import"][0] > 64  # df spans both batches
+
+    # the streamed index loads through build.load_index, so a wildcard
+    # projection written beside it is served like a batch index's
+    from spidey_search_engine_spark.operators.search import expand_wildcard
+    from spidey_search_engine_spark.operators.wildcard import \
+        write_prefix_terms
+    write_prefix_terms(spark.read.parquet(os.path.join(out, "terms")), out)
+    idx = load_index_resumable(spark, out)
+    assert "prefix_terms" in idx and "lineage" in idx
+    assert "import" in expand_wildcard(idx, "impor*", 100)

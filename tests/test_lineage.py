@@ -10,7 +10,10 @@ def _postings_map(idx):
             for r in idx["postings"].collect()}
 
 
-def test_resume_after_injected_failure(spark, corpus_pdf, tmp_path):
+def test_resume_after_injected_failure(spark, corpus_pdf, index, tmp_path,
+                                      monkeypatch):
+    from spidey_search_engine_spark.operators import build
+    from spidey_search_engine_spark.plans import lineage
     from spidey_search_engine_spark.plans.lineage import (
         build_index_resumable, load_index_resumable)
 
@@ -18,14 +21,48 @@ def test_resume_after_injected_failure(spark, corpus_pdf, tmp_path):
     # chunk = 2 segments of 64 docs → 128 docs/chunk → 4 chunks over 400 docs
     kw = dict(profile="code", seg_bits=6, chunk_segments=2, n_buckets=8)
 
+    # the corpus is tokenized once per chunk and numbered once: no
+    # whole-corpus pass for doc lengths, no second doc-id assignment
+    calls = {"build_partials": 0, "assign_doc_ids": 0}
+
+    def counted(mod, name):
+        real = getattr(mod, name)
+
+        def wrapper(*a, **k):
+            calls[name] += 1
+            return real(*a, **k)
+        monkeypatch.setattr(mod, name, wrapper)
+
+    counted(lineage, "build_partials")
+    counted(build, "assign_doc_ids")
     clean_dir = str(tmp_path / "clean")
-    build_index_resumable(spark, corpus, clean_dir, **kw)
+    clean_stats = build_index_resumable(spark, corpus, clean_dir, **kw)
+    assert clean_stats["n_chunks"] == 4
+    assert calls == {"build_partials": 4, "assign_doc_ids": 1}
     clean = load_index_resumable(spark, clean_dir)
 
+    # the chunked docs table is the one build_index writes
+    def doc_rows(idx):
+        return sorted(tuple(r) for r in idx["docs"].select(
+            "doc_id", "n_tokens", "content_sha256").collect())
+    assert doc_rows(clean) == doc_rows(index)
+    assert clean_stats["n_docs"] == index["stats"]["n_docs"]
+    assert clean_stats["avgdl"] == index["stats"]["avgdl"]
+
+    # crash after the second chunk committed
+    real_write = lineage.write_chunk
+    written = []
+
+    def crashing_write(*a, **k):
+        real_write(*a, **k)
+        written.append(a[3])
+        if len(written) >= 2:
+            raise RuntimeError(f"injected failure after {written}")
     resume_dir = str(tmp_path / "resumed")
+    monkeypatch.setattr(lineage, "write_chunk", crashing_write)
     with pytest.raises(RuntimeError, match="injected failure"):
-        build_index_resumable(spark, corpus, resume_dir,
-                              fail_after_chunks=2, **kw)
+        build_index_resumable(spark, corpus, resume_dir, **kw)
+    monkeypatch.setattr(lineage, "write_chunk", real_write)
     # rerun to completion
     stats = build_index_resumable(spark, corpus, resume_dir, **kw)
     assert stats["skipped_chunks"] == 2  # the 2 finished chunks were skipped
